@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship KG-construction pipeline on sf0.001;
-``queries()`` / ``oracle_sql()`` expose every operator from SURVEY.md §2 plus
-the training-data ops, each with a DuckDB oracle (see
-rio_spark/plans/catalog.py for the catalog and its determinism conventions).
+``queries()`` / ``oracle_sql()`` expose the 65-query catalog — the ``kg_*``
+path plus the document-level training-data ops that share its code and
+inputs — each with a DuckDB oracle (see rio_spark/plans/catalog.py for the
+catalog and its determinism conventions).
 """
 
 from __future__ import annotations

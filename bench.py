@@ -35,25 +35,11 @@ BENCH_QUERIES = [
     "sim_topk",
     "sim_lsh_buckets",
     "sim_pairs_lsh",
-    "sim_ivf_topk",
-    "sim_pq_codes",
-    "sim_pq_topk",
-    "sim_ivfpq_topk",
     "text_bpe_tokens",
     "dedup_lsh_pairs",
-    "tpch_q1",
-    "tpch_q5",
-    "orders_semi",
-    "window_topk",
-    "events_sessionize",
-    "events_asof",
-    "events_funnel",
     "text_tfidf",
     "text_ngrams",
     "text_pack_batches",
-    "events_quantiles",
-    "events_retention",
-    "events_trailing",
     "text_repetition",
     "kg_triangles",
     "kg_kcore",
@@ -61,7 +47,6 @@ BENCH_QUERIES = [
     "kg_cc_incremental",
     "kg_bgp_star",
     "kg_pagerank",
-    "streaming_join_capped",
     "sim_dup_groups",
     "corpus_mix",
     "corpus_clean_e2e",
@@ -330,7 +315,7 @@ def main() -> None:
         grid_mode()
         return
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
     from rio_spark.session import get_spark
@@ -374,32 +359,6 @@ def main() -> None:
             QUERIES[name](spark, sf_dir).count()
             steady[name] = round(time.perf_counter() - t0, 3)
 
-    # recall@10 of every ANN path vs brute ground truth, averaged over a
-    # 32-query batch (the single-query sim_ann_recall driver row is 10 hit
-    # samples — pure data luck; this is the falsifiability number)
-    from rio_spark.operators.similarity import ann_recall_report
-
-    # single-row-group test parquet plans a 1-partition scan — widen it to
-    # the session's core count (same trap catalog._widen fixes) so the
-    # cached index build and every path's scoring pass actually fan out
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
-        spark.sparkContext.defaultParallelism)
-    t0 = time.perf_counter()
-    recall_rows = ann_recall_report(emb, n_queries=32, k=10).collect()
-    ann_recall = {
-        r["path"]: {"mean": r["mean_recall"], "min": r["min_recall"],
-                    "max": r["max_recall"]}
-        for r in recall_rows
-    }
-    ann_recall["_params"] = {"n_queries": 32, "k": 10,
-                             "seconds": round(time.perf_counter() - t0, 3)}
-    # the same paths at a 32-bit code budget (m=8, k=16 vs the catalog's
-    # m=4, k=8 = 12 bits): recall scales with m*log2(k) — the tuning knob
-    # a production index turns (numpy sweep in BENCH/BASELINE.md r6)
-    hi_rows = ann_recall_report(emb, n_queries=16, k=10, m=8, pq_k=16).collect()
-    ann_recall["_m8k16"] = {r["path"]: r["mean_recall"] for r in hi_rows
-                            if r["path"].startswith(("pq", "ivfpq"))}
-
     timings["kg_throughput"] = throughput["seconds"]
 
     # fresh-JVM pinned pair: stop the bench session FIRST so the subprocess
@@ -422,8 +381,6 @@ def main() -> None:
         "kg_extract_rows_sf_tables": extract_rows,
         "throughput": throughput,
         "throughput_turtle_heavy": throughput_turtle,
-        # recall@10 per ANN path (mean/min/max over the query batch)
-        "ann_recall": ann_recall,
         # criterion-mirror single-threaded parser x format grid (bytes/sec),
         # the number comparable to the reference's own bench harness.
         # Measured in a FRESH subprocess: in-process after the sweep, the

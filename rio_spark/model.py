@@ -74,10 +74,6 @@ def encode_literal(value: str, lang: str | None = None, datatype: str | None = N
     return body
 
 
-def encode_iri(iri: str) -> str:
-    return "<" + iri + ">"
-
-
 def decode_literal(canon: str) -> tuple[str, str | None, str | None]:
     """Inverse of :func:`encode_literal` for canonical strings (value, lang, dt)."""
     if not canon.startswith('"'):
@@ -107,18 +103,6 @@ def decode_literal(canon: str) -> tuple[str, str | None, str | None]:
     if rest:
         raise ValueError(f"bad literal suffix: {rest!r}")
     return value, None, None
-
-
-def term_kind(canon: str) -> str:
-    """Classify a canonical term string: iri | bnode | literal | triple."""
-    c0 = canon[0]
-    if c0 == "<":
-        return "triple" if canon.startswith("<<") else "iri"
-    if c0 == "_":
-        return "bnode"
-    if c0 == '"':
-        return "literal"
-    raise ValueError(f"unclassifiable term: {canon!r}")
 
 
 def serialize_term(t: Term, labels: dict[BNode, str], scope: str) -> str:

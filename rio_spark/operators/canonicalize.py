@@ -135,15 +135,11 @@ def canonical_mapping(triples: DataFrame) -> DataFrame:
     )
 
 
-def rewrite_triples(
-    triples: DataFrame, mapping: DataFrame, broadcast: bool = True
-) -> DataFrame:
+def rewrite_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     """Rewrite subject/object through the alias mapping. The mapping is
     usually tiny relative to the triple store -> broadcast joins (no shuffle
-    of the store). Pass broadcast=False when the alias set itself is huge;
-    the joins then sort-merge on subject/object, which bucketed graph-table
-    layouts co-locate (SURVEY.md §4.3)."""
-    m = F.broadcast(mapping) if broadcast else mapping
+    of the store)."""
+    m = F.broadcast(mapping)
     out = (
         triples.join(
             m.withColumnRenamed("node", "subject").withColumnRenamed("canonical", "s_canon"),
@@ -180,7 +176,6 @@ def cc_incremental(
     new_edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    scan_only_labels: bool = False,
 ) -> DataFrame:
     """Incremental connected-components maintenance: fold a batch of NEW
     edges into an existing min-label CC labeling without re-walking the old
@@ -201,59 +196,14 @@ def cc_incremental(
     set (old labels + genuinely new nodes) EQUALS the min over the full
     vertex set. The incremental result is therefore bit-identical to the
     full recompute, which is what the oracle checks.
-
-    Scale shape (r7, guide §3.2): the old labeling is the HUGE side here
-    (10^12-edge graph) and the batch is small by the operator's design
-    premise.  ``scan_only_labels=True`` guarantees ``labels`` is never
-    shuffled or broadcast — the contract's 100 TB reading: labels are
-    semi-join-reduced to the touched endpoints (broadcast LeftSemi, a
-    map-side filter) before the endpoint lookups, every batch-scale side
-    carries an explicit broadcast hint (checkpointed lineage has no size
-    stats, so the planner would otherwise sort-merge), and new-node
-    identification needs no anti-join against the old graph at all: an
-    endpoint is new IFF the semi-reduced lookup missed it (matched
-    endpoints are in ``labels`` by definition of the equi-join; old
-    labels are themselves member nodes, so no contracted vertex that is
-    an old label can be "new") — a batch-scale set difference.  The two
-    batch-scale sets are eagerly localCheckpointed because each feeds
-    several broadcast builds that would otherwise re-derive them per
-    exchange.
-
-    The default (False) keeps the classic join formulation: measured at
-    bench scale (5k–50k-node labelings, local[32]) the scan-only shape's
-    fixed overhead — two checkpoint jobs plus per-broadcast build jobs —
-    costs MORE than the label shuffles it removes (same-window A/B at a
-    10x corpus: 6.4 s classic vs 9.3 s scan-only steady; both
-    formulations are row-identical, pinned by the differential twin
-    test).  Flip it when the labeling is too large to shuffle per batch
-    or to broadcast as an anti-join build side (roughly >= 10^8 rows —
-    the regime the docstring's 10^12-edge contract describes), where the
-    classic plan's full-labeling broadcast is not merely slow but
-    impossible (8 GB broadcast cap).
     """
     lab = labels.select("node", "component")
-    if scan_only_labels:
-        ends = (
-            new_edges.select(F.col(src).alias("node"))
-            .unionByName(new_edges.select(F.col(dst).alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # guide §3.2 exact semi-join reduction: only labels of touched
-        # endpoints participate in the lookups — dropping the rest provably
-        # cannot change a left equi-join on those endpoints
-        touched = lab.join(F.broadcast(ends), "node", "left_semi").localCheckpoint(
-            eager=True
-        )
-        lookup, hint = touched, F.broadcast
-    else:
-        lookup, hint = lab, lambda df: df
-    s = lookup.select(F.col("node").alias(src), F.col("component").alias("__sc"))
-    d = lookup.select(F.col("node").alias(dst), F.col("component").alias("__dc"))
+    s = lab.select(F.col("node").alias(src), F.col("component").alias("__sc"))
+    d = lab.select(F.col("node").alias(dst), F.col("component").alias("__dc"))
     contracted = (
         new_edges.select(src, dst)
-        .join(hint(s), src, "left")
-        .join(hint(d), dst, "left")
+        .join(s, src, "left")
+        .join(d, dst, "left")
         .select(
             F.coalesce("__sc", F.col(src)).alias("src"),
             F.coalesce("__dc", F.col(dst)).alias("dst"),
@@ -263,18 +213,9 @@ def cc_incremental(
     relabel = comp2.select(
         F.col("node").alias("component"), F.col("component").alias("__new")
     )
-    updated = lab.join(hint(relabel), "component", "left").select(
+    updated = lab.join(relabel, "component", "left").select(
         "node", F.coalesce("__new", F.col("component")).alias("component")
     )
-    if scan_only_labels:
-        # vertices first seen in this batch = endpoints the old labeling
-        # does not know (see docstring); comp2 restricted to them keeps
-        # exactly the rows an anti-join against the full labeling keeps
-        new_node_ids = ends.join(
-            F.broadcast(touched.select("node")), "node", "left_anti"
-        )
-        new_nodes = comp2.join(F.broadcast(new_node_ids), "node", "left_semi")
-    else:
-        # vertices first seen in this batch (neither old members nor labels)
-        new_nodes = comp2.join(lab.select("node"), "node", "left_anti")
+    # vertices first seen in this batch (neither old members nor labels)
+    new_nodes = comp2.join(lab.select("node"), "node", "left_anti")
     return updated.unionByName(new_nodes.select("node", "component"))

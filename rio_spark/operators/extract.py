@@ -87,22 +87,12 @@ def extract_triples(
     format_col: str = "format",
     base_col: str = "base_iri",
     parallelism: int | None = None,
-    jvm_fast: bool = False,
 ) -> DataFrame:
     """Documents DF -> unified triples/errors DF (EXTRACT_SCHEMA).
 
     ``fmt`` fixes the format for the whole frame; otherwise it is read from
     ``format_col``. ``base_col`` is optional (null base = absolute IRIs only).
     Split the result with :func:`triples_of` / :func:`errors_of`.
-
-    ``jvm_fast`` routes fast N-Triples/N-Quads lines through a whole-stage-
-    codegen regex pre-pass (operators/extract_jvm.py) so the bulk of a
-    line-oriented dump never crosses the Python boundary; everything the
-    regex rejects — and every non-line format — takes the Python kernel path
-    below with identical semantics (differential-tested).  Default OFF: on
-    this hardware the Java regex engine loses to the memoized sre fast path
-    ~2.6x per core (measured 422k vs 1.12M triples/s at 8 cores on a 4M-line
-    NT corpus — see extract_jvm.py's module docstring for when to enable).
 
     ``parallelism`` (default: 4× defaultParallelism) repartitions the doc
     stream before the kernel stage. This is load-bearing for scaling: AQE
@@ -117,30 +107,6 @@ def extract_triples(
         # 4x cores: fine-grained round-robin absorbs per-document parse-cost
         # skew (a 10k-statement doc costs ~400ms; most cost ~1ms)
         parallelism = docs.sparkSession.sparkContext.defaultParallelism * 4
-    if jvm_fast and (fmt in ("nt", "nq") or (fmt is None and format_col in docs.columns)):
-        from rio_spark.operators.extract_jvm import nt_line_split
-
-        fast, slow_docs, other_docs = nt_line_split(
-            docs, fmt, id_col, text_col, format_col, base_col
-        )
-        # slow NT residue is typically a trickle; the groupBy reconstruction
-        # already spread it by document hash — skip the re-shuffle
-        out = fast.unionByName(
-            extract_triples(
-                slow_docs, None, id_col, text_col, format_col, base_col,
-                parallelism=0, jvm_fast=False,
-            )
-        )
-        if other_docs is not None:
-            # non-NT formats take the unchanged Python path (with its
-            # skew-evening round-robin repartition)
-            out = out.unionByName(
-                extract_triples(
-                    other_docs, None, id_col, text_col, format_col, base_col,
-                    parallelism=parallelism, jvm_fast=False,
-                )
-            )
-        return out
     if parallelism:
         docs = docs.repartition(parallelism)
     cols = set(docs.columns)
@@ -258,15 +224,6 @@ def errors_of(extracted: DataFrame) -> DataFrame:
     return extracted.filter(F.col("error_kind").isNotNull()).select(
         "doc_id", "error_kind", "error_line", "error_byte", "error_msg"
     )
-
-
-def strict_triples(extracted: DataFrame) -> DataFrame:
-    """Conformance-mode filter: drop ALL triples from documents that produced
-    any error row (the reference's parse_all returns Err for the whole doc —
-    salvaged triples are never collected). Production pipelines keep salvage;
-    eval suites use this."""
-    bad_docs = extracted.filter(F.col("error_kind").isNotNull()).select("doc_id").distinct()
-    return triples_of(extracted).join(bad_docs, "doc_id", "left_anti")
 
 
 def dedup_triples(triples: DataFrame) -> DataFrame:

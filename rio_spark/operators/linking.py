@@ -151,13 +151,8 @@ def mention_triples(resolved: DataFrame) -> DataFrame:
     return a.unionByName(b).dropDuplicates(["doc_id", "subject", "predicate", "object"])
 
 
-def link_entities(
-    docs: DataFrame, dictionary: DataFrame, broadcast_dict: bool = True
-) -> DataFrame:
-    """Full linking stage: detect -> join -> resolve -> triples."""
-    mentions = detect_mentions(docs)
-    if broadcast_dict:
-        cands = link_broadcast(mentions, dictionary)
-    else:
-        cands = link_blocked(mentions, dictionary)
+def link_entities(docs: DataFrame, dictionary: DataFrame) -> DataFrame:
+    """Full linking stage: detect -> broadcast join -> resolve -> triples.
+    Dictionaries too big to broadcast go through :func:`link_blocked`."""
+    cands = link_broadcast(detect_mentions(docs), dictionary)
     return mention_triples(resolve_candidates(cands))

@@ -28,71 +28,6 @@ def _norm(a):
     return F.sqrt(_dot(a, a))
 
 
-def _pydot(a, b):
-    """Driver-side dot product over collected constants — the Python twin of
-    the ``_dot`` column expression; every ADC table / probe rule below uses
-    this ONE definition so a rounding or tie-rule fix lands everywhere."""
-    return sum(x * y for x, y in zip(a, b))
-
-
-def _probe_reduced(query_vec, cents, nprobe):
-    """The ``nprobe`` cells nearest to ``query_vec`` by the REDUCED L2
-    ``round(-2 q.c + c.c, 6)``, ties to the lowest index — the exact probe
-    rule of :func:`ivf_pq_topk` / :func:`ivf_pq_residual_topk` and the
-    batched recall evaluator.  (:func:`ivf_topk` ranks by FULL L2 instead;
-    the q.q constant shifts values before rounding, so the two rules can
-    order near-ties differently — they stay distinct on purpose.)"""
-    ranked = sorted(
-        (round(-2.0 * _pydot(query_vec, c) + _pydot(c, c), 6), i)
-        for i, c in enumerate(cents)
-    )
-    return [i for _, i in ranked[:nprobe]]
-
-
-def _sql_array_lit(x):
-    """A nested constant as ONE parsed SQL expression instead of a deep
-    F.array/F.lit tree: every F.lit / F.array call is a py4j round trip, so
-    a 32x8x4x8 ADC table literal costs ~6.5 s of pure driver RPC built
-    element-wise (measured) vs ~20 ms through the SQL parser — and
-    ConstantFolding collapses the parsed tree to the identical array
-    Literal either way (verified on the optimized plan).  Doubles print
-    via repr (shortest round-trip decimal) with the D suffix, so the
-    parsed double is bit-identical to what F.lit would embed; ints and
-    strings pass through as plain SQL literals."""
-    def render(v):
-        if isinstance(v, (list, tuple)):
-            return "array(" + ",".join(render(e) for e in v) + ")"
-        if isinstance(v, str):
-            return "'" + v.replace("'", "''") + "'"
-        if isinstance(v, bool):
-            raise TypeError("bool constant has no SQL-literal rendering here")
-        if isinstance(v, int):
-            return str(v)
-        f = float(v)
-        if f != f or f in (float("inf"), float("-inf")):
-            # repr would render 'inf'/'nan', which the SQL parser reads as
-            # a COLUMN NAME (unresolved-column error at best) — refuse here
-            # with the actual problem named
-            raise ValueError(f"non-finite constant {f!r} has no SQL double literal")
-        return repr(f) + "D"
-    return F.expr(render(x))
-
-
-def _adc_tables(query_vec, codebooks, d):
-    """Per-subspace ADC lookup tables ``t[s][c] = round(||q_s - cb[s][c]||^2,
-    6)`` — bounded driver-side constants (m x k floats), shared verbatim by
-    :func:`pq_topk`, the residual per-cell tables, and the batched recall
-    evaluator so their scores can never desync."""
-    out = []
-    for s, cb_s in enumerate(codebooks):
-        qs = [float(x) for x in query_vec[s * d:(s + 1) * d]]
-        out.append([
-            round(_pydot(qs, qs) - 2.0 * _pydot(qs, c) + _pydot(c, c), 6)
-            for c in cb_s
-        ])
-    return out
-
-
 def cosine_to_query(
     embeddings: DataFrame, query_vec: list[float], id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -112,8 +47,8 @@ def topk_cosine(
 ) -> DataFrame:
     """Brute-force exact top-k (the baseline an ANN variant is judged by).
     Ranks by the ROUNDED cosine with a vec_id tiebreak — the same
-    determinism convention as every other ANN operator here (ivf_topk,
-    pq_topk, the catalog's inlined top-ks): an unrounded float order is
+    determinism convention as every other top-k here (ann_topk_lsh, the
+    catalog's inlined top-ks): an unrounded float order is
     engine-specific at the last ulp, so a 1e-4-scale tie at the k boundary
     would make Spark and a SQL oracle pick different member sets."""
     return (
@@ -341,141 +276,21 @@ def cosine_pairs_lsh(
     )
 
 
-def _l2sq(v, c_dot: float, c_vec):
-    """||v - c||^2 = v.v - 2 v.c + c.c (v.v cancels in argmin, kept out)."""
-    return -2.0 * _dot(v, c_vec) + F.lit(c_dot)
-
-
-def ivf_cells(
-    embeddings: DataFrame, n_centroids: int = 8, id_col: str = "vec_id",
-    vec_col: str = "embedding", centroids: list[list[float]] | None = None,
-    round_to: int = 6,
-) -> DataFrame:
-    """IVF coarse quantizer: assign every vector to its nearest centroid.
-
-    Centroids are the ``n_centroids`` lowest-id embeddings (deterministic,
-    data-derived — same convention as the LSH planes; a k-means refinement
-    can replace them without changing the plan shape). Assignment is a pure
-    column expression: the v.v term cancels in the argmin, so each cell is
-    ``argmin_c (-2 v.c + c.c)`` over ``n_centroids`` literal arrays —
-    distances are rounded before comparison so the argmin is reproducible
-    across engines, ties break to the lowest centroid index.
-    -> (vec_id, cell int)."""
-    if centroids is None:
-        centroids = collect_planes(embeddings, n_centroids, id_col, vec_col)
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        _cell_expr(vec_col, centroids, round_to).alias("cell"),
-    )
-
-
-def _cell_expr(vec_col: str, centroids: list[list[float]], round_to: int = 6,
-               labels: list[int] | None = None):
-    """Nearest-centroid index as a pure column expression (see ivf_cells).
-    ``labels`` relabels the argmin output (used after k-means refinement
-    drops empty cells, keeping original cell ids stable)."""
-    if labels is None:
-        labels = list(range(len(centroids)))
-    v = F.col(vec_col).cast("array<double>")
-    scored = F.array(*[
-        F.struct(
-            F.round(_l2sq(v, sum(x * x for x in c), F.array(*[F.lit(x) for x in c])),
-                    round_to).alias("d"),
-            F.lit(int(lab)).alias("cell"),
-        )
-        for lab, c in zip(labels, centroids)
-    ])
-    return F.array_min(scored)["cell"]
-
-
-def kmeans_refine(
-    embeddings: DataFrame, centroids: list[list[float]], iters: int = 1,
-    vec_col: str = "embedding",
-) -> tuple[list[int], list[list[float]]]:
-    """Lloyd refinement of IVF centroids, fully distributed: assign cells
-    with the current centroids (column expression), then per-(cell, dim)
-    AVG via posexplode + groupBy — map-side combinable, one shuffle per
-    iteration; only n_centroids x dim values ever reach the driver.
-    Cells that lose all members are DROPPED (same as the SQL oracle's
-    group-by); returns (surviving original cell ids, refined centroids).
-    Refined centroid components are rounded to 6 decimals so the DISTANCE
-    INPUTS are bit-identical across engines — a near-tie vector can't flip
-    cells on a last-ulp difference between Spark's and an oracle's float
-    averaging (the downstream distance rounding alone can't absorb that)."""
-    labels = list(range(len(centroids)))
-    for _ in range(iters):
-        cell = _cell_expr(vec_col, centroids, labels=labels)
-        # two selects: putting the struct-field argmin and the posexplode in
-        # ONE select trips Spark's generator extraction (struct aliases are
-        # lost mid-rewrite -> FIELD_NOT_FOUND); analysis is per-select, the
-        # optimizer merges them after resolution
-        assigned = embeddings.select(
-            cell.alias("cell"), F.col(vec_col).cast("array<double>").alias("v")
-        )
-        dims = (
-            assigned.select("cell", F.posexplode("v").alias("i", "x"))
-            .groupBy("cell", "i")
-            .agg(F.round(F.avg("x"), 6).alias("m"))
-        )
-        rows = (
-            dims.groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("i", "m"))).alias("dm"))
-            .collect()
-        )
-        by_cell = {r["cell"]: [d["m"] for d in r["dm"]] for r in rows}
-        labels = sorted(by_cell)
-        centroids = [by_cell[c] for c in labels]
-    return labels, centroids
-
-
-def ivf_topk(
-    embeddings: DataFrame, query_vec: list[float], k: int = 10,
-    n_centroids: int = 8, nprobe: int = 2, id_col: str = "vec_id",
-    vec_col: str = "embedding", round_to: int = 4,
-) -> DataFrame:
-    """IVF-flat ANN: probe the ``nprobe`` centroids nearest to the query and
-    run exact cosine top-k only inside those cells. ONE Spark job: the
-    centroid collect is bounded by the constant ``n_centroids``, the query's
-    probe set is computed driver-side, and candidates are a FILTER on the
-    cell expression (no join, no shuffle before the top-k). Recall grows
-    with nprobe; nprobe == n_centroids is exact."""
-    centroids = collect_planes(embeddings, n_centroids, id_col, vec_col)
-
-    def l2sq(c):
-        return round(sum((a - b) ** 2 for a, b in zip(query_vec, c)), 6)
-
-    probe = sorted(range(len(centroids)), key=lambda i: (l2sq(centroids[i]), i))[:nprobe]
-    cand = embeddings.filter(_cell_expr(vec_col, centroids).isin(probe))
-    v = F.col(vec_col).cast("array<double>")
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = _dot(v, q) / (_norm(v) * _norm(q))
-    return (
-        cand.select(F.col(id_col).alias("vec_id"), F.round(cos, round_to).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-        .limit(k)
-    )
-
-
 def ann_topk_lsh(
     embeddings: DataFrame, query_vec: list[float], k: int = 10, n_planes: int = 8,
     id_col: str = "vec_id", vec_col: str = "embedding",
-    fallback_to_brute: bool = False, planes: list[list[float]] | None = None,
+    planes: list[list[float]] | None = None,
 ) -> DataFrame:
     """Approximate top-k: restrict the exact scan to the query's LSH bucket.
 
     ONE Spark job: planes are collected once (bounded constant), the query's
     bucket bits are computed driver-side, and candidates are a plain FILTER on
     the bucket expression (no join, no extra probe jobs). If the bucket holds
-    fewer than k vectors the result has fewer than k rows; opt into the
-    (expensive, full-scan) brute-force fallback explicitly with
-    ``fallback_to_brute=True`` — it runs a count job first and is flagged here
-    because at scale it dwarfs everything else."""
+    fewer than k vectors the result has fewer than k rows."""
     if planes is None:
         planes = collect_planes(embeddings, n_planes, id_col, vec_col)
     qbits = _query_bits(query_vec, planes)
     cand = embeddings.filter(_bucket_expr(vec_col, planes) == qbits)
-    if fallback_to_brute and cand.count() < k:  # explicit opt-in, extra job
-        cand = embeddings
     return topk_cosine(cand, query_vec, k, id_col=id_col, vec_col=vec_col)
 
 
@@ -506,591 +321,4 @@ def embedding_dup_groups(
     )
     return cc.select(
         F.col("node").alias("vec_id"), F.col("component").alias("group_id")
-    )
-
-
-def pq_codebooks(
-    embeddings: DataFrame, m: int = 4, k: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    refine_iters: int = 0, seeds: list[list[float]] | None = None,
-) -> list[list[list[float]]]:
-    """Product-quantization codebooks: split the vector space into ``m``
-    contiguous subspaces; codebook ``s`` seeds from the ``k`` lowest-id
-    vectors' s-th subvectors (the same deterministic data-derived seeding
-    as the IVF centroids).  ``refine_iters > 0`` Lloyd-trains ALL m
-    subspace codebooks with the same distributed kernel IVF refinement
-    uses, batched into ONE job per iteration (:func:`_kmeans_refine_all`:
-    per-(subspace, code, dim) AVG via a single posexplode + groupBy,
-    map-side combinable, one shuffle per iteration TOTAL; only m x k x d
-    values reach the driver), so
-    the codes downstream actually tile the data instead of echoing the
-    seed vectors — this is what lifts ADC recall (see sim_ann_recall).
-    Codebook entries that lose all members are dropped, exactly as in IVF
-    refinement; codes are positions in the surviving list.  Returns
-    ``codebooks[s][c] = list[float]``; plan shapes downstream are
-    unchanged by training.  ``seeds`` lets a caller that already collected
-    the lowest-id prefix (>= k rows) share ONE collect across the whole
-    index build (see ann_recall_report) — the [:k] slice is identical to
-    what this function would collect itself."""
-    if seeds is None:
-        seeds = collect_planes(embeddings, k, id_col, vec_col)
-    seeds = seeds[:k]
-    d = len(seeds[0]) // m
-    assert len(seeds[0]) % m == 0, "vector dim must divide evenly into m subspaces"
-    cbs = [[list(vec[s * d:(s + 1) * d]) for vec in seeds] for s in range(m)]
-    if refine_iters:
-        cbs = _kmeans_refine_all(embeddings, cbs, refine_iters, vec_col)
-    return cbs
-
-
-def _pq_code_expr(vec_col: str, cb_s: list[list[float]], s: int, d: int,
-                  round_to: int = 6, labels: list[int] | None = None):
-    """Subspace-s code as a pure column expression: argmin over the k
-    centroids of round(-2 v_s.c + c.c, 6) — the v_s.v_s term cancels in the
-    argmin exactly as in the IVF cell expression; first index wins ties.
-    ``labels`` relabels the argmin output (training bookkeeping after a
-    Lloyd iteration drops empty codes — same contract as _cell_expr)."""
-    if labels is None:
-        labels = list(range(len(cb_s)))
-    v = F.slice(F.col(vec_col).cast("array<double>"), s * d + 1, d)
-    scored = F.array(*[
-        F.struct(
-            F.round(
-                -2.0 * _dot(v, F.array(*[F.lit(x) for x in c]))
-                + F.lit(sum(x * x for x in c)),
-                round_to,
-            ).alias("dd"),
-            F.lit(int(lab)).alias("code"),
-        )
-        for lab, c in zip(labels, cb_s)
-    ])
-    return F.array_min(scored)["code"]
-
-
-def _kmeans_refine_all(
-    embeddings: DataFrame, codebooks: list[list[list[float]]], iters: int,
-    vec_col: str = "embedding",
-) -> list[list[list[float]]]:
-    """Lloyd-train EVERY PQ subspace codebook in ONE distributed job per
-    iteration (the per-subspace :func:`kmeans_refine` loop runs m sequential
-    jobs — pure scheduling overhead at any scale): all m code assignments
-    are computed in a single projection, the full vector is posexploded
-    once, and the per-(subspace, code, dim) AVG keys on the exploded
-    position — ``i div d`` IS the subspace, ``i mod d`` the dim.  The math
-    is kmeans_refine's exactly: same argmin expression (round-to-6 reduced
-    L2, ties to the lowest label), same AVG, same round-to-6 means, codes
-    that lose all members dropped per subspace; only m x k x d averaged
-    values ever reach the driver."""
-    m = len(codebooks)
-    d = len(codebooks[0][0])
-    labels = [list(range(len(cb))) for cb in codebooks]
-    cbs = [list(cb) for cb in codebooks]
-    for _ in range(iters):
-        assigned = embeddings.select(
-            F.col(vec_col).cast("array<double>").alias("_v"),
-            *[
-                _pq_code_expr(vec_col, cbs[s], s, d, labels=labels[s]).alias(f"_c{s}")
-                for s in range(m)
-            ],
-        )
-        # generator in its own select (the kmeans_refine two-select rule)
-        expl = assigned.select(
-            *[f"_c{s}" for s in range(m)], F.posexplode("_v").alias("_i", "_x"))
-        s_expr = (F.col("_i") / d).cast("int")
-        keyed = expl.select(
-            s_expr.alias("s"),
-            F.element_at(
-                F.array(*[F.col(f"_c{i}") for i in range(m)]), s_expr + 1
-            ).alias("cell"),
-            (F.col("_i") % d).alias("li"),
-            F.col("_x"),
-        )
-        rows = (
-            keyed.groupBy("s", "cell", "li")
-            .agg(F.round(F.avg("_x"), 6).alias("mval"))
-            .groupBy("s", "cell")
-            .agg(F.array_sort(F.collect_list(F.struct("li", "mval"))).alias("dm"))
-            .collect()
-        )
-        for s in range(m):
-            by_cell = {
-                r["cell"]: [e["mval"] for e in r["dm"]] for r in rows if r["s"] == s
-            }
-            labels[s] = sorted(by_cell)
-            cbs[s] = [by_cell[c] for c in labels[s]]
-    return cbs
-
-
-def pq_encode(
-    embeddings: DataFrame, m: int = 4, k: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    codebooks: list[list[list[float]]] | None = None,
-) -> DataFrame:
-    """PQ encoding: -> (vec_id, code array<int> of length m) — each vector
-    compressed to m small integers (m bytes at k<=256), the representation
-    a 100 TB ANN index actually stores and scans. One pure projection, no
-    shuffle, no Python rows."""
-    if codebooks is None:
-        codebooks = pq_codebooks(embeddings, m, k, id_col, vec_col)
-    dim = len(codebooks[0][0])
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"),
-        F.array(*[
-            _pq_code_expr(vec_col, codebooks[s], s, dim) for s in range(m)
-        ]).alias("code"),
-    )
-
-
-def pq_topk(
-    embeddings: DataFrame, query_vec: list[float], topk: int = 5,
-    m: int = 4, k: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    codebooks: list[list[list[float]]] | None = None,
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: the query is compared
-    to each vector through a per-subspace lookup table
-    ``t[s][c] = round(||q_s - codebook[s][c]||^2, 6)`` (m x k floats,
-    computed driver-side — bounded constants), so the scan touches only the
-    m-int codes, never the raw vectors: the memory-bandwidth shape that
-    makes billion-vector search feasible. Approximate distance =
-    sum_s t[s][code_s]; deterministic ranking (distance, then vec_id).
-    -> (vec_id, adc_dist) — the ``topk`` nearest by quantized distance."""
-    if codebooks is None:
-        codebooks = pq_codebooks(embeddings, m, k, id_col, vec_col)
-    dim = len(codebooks[0][0])
-    tables = _adc_tables(query_vec, codebooks, dim)
-    codes = pq_encode(embeddings, m, k, id_col, vec_col, codebooks)
-    dist = None
-    for s in range(m):
-        term = F.element_at(
-            F.array(*[F.lit(t) for t in tables[s]]),
-            F.element_at(F.col("code"), s + 1) + 1,
-        )
-        dist = term if dist is None else dist + term
-    return (
-        codes.select("vec_id", F.round(dist, 6).alias("adc_dist"))
-        .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
-        .limit(topk)
-    )
-
-
-def ivf_pq_topk(
-    embeddings: DataFrame, query_vec: list[float], topk: int = 5,
-    n_centroids: int = 8, nprobe: int = 2, m: int = 4, k: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF-PQ search — the composition a billion-vector index actually
-    runs: the coarse quantizer prunes the scan to the query's ``nprobe``
-    nearest cells (a pure FILTER on the cell expression, no join), then
-    ADC over PQ codes ranks the survivors through m x k lookup tables.
-    Cost shape: scan of nprobe/n_centroids of the data x O(m) per row.
-
-    This is the non-residual variant (codes quantize raw vectors, not
-    v - centroid): one codebook set serves every cell, which keeps the
-    encode a single projection and the oracle exact; residual PQ would
-    add per-cell codebooks for better recall at the same cost shape.
-    Codebooks and probed cells derive from the FULL vector set (driver-side
-    bounded constants), so results are independent of which cells happen
-    to be probed first."""
-    # ONE driver collect serves both constant sets (coarse centroids and PQ
-    # seed vectors are each "the lowest-id vectors", just sliced differently)
-    seeds = collect_planes(embeddings, max(n_centroids, k), id_col, vec_col)
-    cents = seeds[:n_centroids]
-    d = len(seeds[0]) // m
-    codebooks = [[list(vec[s * d:(s + 1) * d]) for vec in seeds[:k]] for s in range(m)]
-    probed = _probe_reduced(query_vec, cents, nprobe)
-    cand = embeddings.filter(_cell_expr(vec_col, cents).isin(probed))
-    return pq_topk(cand, query_vec, topk, m, k, id_col, vec_col, codebooks)
-
-
-def residual_codebooks(
-    embeddings: DataFrame, n_centroids: int = 8, m: int = 4, k: int = 8,
-    refine_iters: int = 0, id_col: str = "vec_id", vec_col: str = "embedding",
-    seeds: list[list[float]] | None = None,
-) -> tuple[list[list[float]], list[list[list[float]]]]:
-    """Coarse centroids + residual PQ codebooks (shared by the single-query
-    path and the batched recall evaluator). -> (cents, codebooks[s][c]).
-
-    Codebooks seed from the k lowest-id vectors AFTER the centroid seeds:
-    a centroid vector's own residual is the zero vector (its nearest
-    centroid is itself), so seeding from seeds[:k] when k <= n_centroids
-    would collapse every codebook entry to zero and ADC would stop
-    discriminating — caught by the sim_ann_recall gate.  With
-    ``refine_iters > 0`` the codebooks are Lloyd-trained over ALL rows'
-    residuals (query-independent, exactly like pq_codebooks): the residual
-    is a pure column projection, so the training input is a select — no
-    join, no extra shuffle beyond the one-per-iteration AVG that
-    :func:`_kmeans_refine_all` does (all m subspaces in one job).
-    ``seeds`` shares a caller's one lowest-id-prefix collect
-    (>= n_centroids + k rows), exactly as in :func:`pq_codebooks`."""
-    if seeds is None:
-        seeds = collect_planes(embeddings, n_centroids + k, id_col, vec_col)
-    cents = seeds[:n_centroids]
-    d = len(seeds[0]) // m
-    assert len(seeds[0]) % m == 0, "vector dim must divide evenly into m subspaces"
-
-    def cell_of(v):  # same reduced-L2 argmin as _cell_expr, driver-side
-        return _probe_reduced(v, cents, 1)[0]
-
-    seed_res = [
-        [x - c for x, c in zip(vec, cents[cell_of(vec)])]
-        for vec in seeds[n_centroids:n_centroids + k]
-    ]
-    codebooks = [[rv[s * d:(s + 1) * d] for rv in seed_res] for s in range(m)]
-
-    if refine_iters:
-        cents_lit = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cents])
-        base = embeddings.select(
-            F.col(vec_col).cast("array<double>").alias("v"),
-            _cell_expr(vec_col, cents).alias("cell"),
-        )
-        res_all = base.select(
-            F.zip_with(F.col("v"), F.element_at(cents_lit, F.col("cell") + 1),
-                       lambda a, b: a - b).alias("rv"),
-        )
-        codebooks = _kmeans_refine_all(res_all, codebooks, refine_iters, "rv")
-    return cents, codebooks
-
-
-def ivf_pq_residual_topk(
-    embeddings: DataFrame, query_vec: list[float], topk: int = 5,
-    n_centroids: int = 8, nprobe: int = 2, m: int = 4, k: int = 8,
-    id_col: str = "vec_id", vec_col: str = "embedding",
-    refine_iters: int = 0,
-) -> DataFrame:
-    """Residual IVF-PQ — the faiss-style refinement of :func:`ivf_pq_topk`:
-    PQ codes quantize the RESIDUAL ``v - centroid[cell(v)]`` instead of the
-    raw vector.  On CLUSTERED data residuals concentrate around the origin
-    regardless of which coarse cell a vector landed in, so one shared
-    codebook set covers them better than it covers raw vectors — that is
-    where the recall gain comes from in real embedding corpora.  Honesty
-    note, measured (ann_recall_report + an independent numpy replication,
-    BENCH/BASELINE.md round 6): on ISOTROPIC data — the synthetic test
-    embeddings are uniform on the unit sphere — the coarse centroids are
-    near-orthogonal random directions, residual norms are ||v - c||^2 ~ 2
-    > ||v||^2 = 1, and the residual variant measurably LOSES to the
-    non-residual one at every training depth.  The implementation is
-    pinned exact by the batch-vs-single consistency test either way; the
-    cost shape is the SAME as the non-residual variant:
-
-    * encode is still a pure projection — the residual is a ``zip_with``
-      subtraction against the row's own centroid (selected from a literal
-      centroid array by the cell expression), no join, no shuffle;
-    * the codebooks seed from the k lowest-id vectors' residuals (driver-
-      side on bounded collected constants — deterministic, no RNG);
-    * ADC needs one m x k lookup table PER PROBED CELL (the query residual
-      differs per cell): nprobe x m x k driver-side floats, still bounded
-      constants; per-row distance selects its cell's table with a CASE
-      chain over the nprobe survivors of the cell filter.
-
-    Determinism matches the whole ANN family: distances rounded to 6
-    decimals before argmin/ranking, ties to the lowest index / vec_id."""
-    cents, codebooks = residual_codebooks(
-        embeddings, n_centroids, m, k, refine_iters, id_col, vec_col)
-    d = len(cents[0]) // m
-    cents_lit = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cents])
-
-    # probe the query's nprobe nearest coarse cells (reduced L2, as IVF-PQ)
-    probed = _probe_reduced(query_vec, cents, nprobe)
-
-    # per-probed-cell ADC tables over the QUERY residual for that cell
-    tables: dict[int, list[list[float]]] = {
-        pc: _adc_tables([x - c for x, c in zip(query_vec, cents[pc])],
-                        codebooks, d)
-        for pc in probed
-    }
-
-    v = F.col(vec_col).cast("array<double>")
-    with_cell = embeddings.select(
-        F.col(id_col).alias("vec_id"), v.alias("v"),
-        _cell_expr(vec_col, cents).alias("cell"),
-    ).filter(F.col("cell").isin(probed))
-    # residual in its own select so the codes' slice expressions resolve
-    # against a plain column (same two-select pattern as kmeans_refine)
-    with_res = with_cell.select(
-        "vec_id", "cell",
-        F.zip_with(F.col("v"), F.element_at(cents_lit, F.col("cell") + 1),
-                   lambda a, b: a - b).alias("rv"),
-    )
-    coded = with_res.select(
-        "vec_id", "cell",
-        F.array(*[
-            _pq_code_expr("rv", codebooks[s], s, d) for s in range(m)
-        ]).alias("code"),
-    )
-
-    def cell_dist(pc: int):
-        t = None
-        for s in range(m):
-            term = F.element_at(
-                F.array(*[F.lit(x) for x in tables[pc][s]]),
-                F.element_at(F.col("code"), s + 1) + 1,
-            )
-            t = term if t is None else t + term
-        return t
-
-    dist = None
-    for pc in probed:
-        dist = (F.when(F.col("cell") == pc, cell_dist(pc)) if dist is None
-                else dist.when(F.col("cell") == pc, cell_dist(pc)))
-    return (
-        coded.select("vec_id", F.round(dist, 6).alias("adc_dist"))
-        .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
-        .limit(topk)
-    )
-
-
-def ann_recall_report(
-    embeddings: DataFrame, n_queries: int = 16, k: int = 10,
-    n_planes: int = 4, n_centroids: int = 8, nprobe: int = 2,
-    m: int = 4, pq_k: int = 8, refine_iters: int = 1,
-    query_offset: int = 100, id_col: str = "vec_id", vec_col: str = "embedding",
-    return_candidates: bool = False,
-) -> DataFrame:
-    """Batched recall@k of every ANN path against brute-force ground truth —
-    the statistically meaningful version of the single-query sim_ann_recall
-    driver row (10 hit samples per path flip with data luck; this averages
-    over ``n_queries`` query vectors).
-
-    Architecture is the one a 100 TB ANN service actually runs: the INDEX
-    (bucket bits, IVF cell, PQ codes — seed, trained, residual) is built in
-    ONE projection pass, and ONE scan of it scores EVERY path for the whole
-    query batch — per-(row, query) scores are computed once into plain
-    columns, then a (path, score, keep) struct explode stacks the 7 paths
-    so a single two-phase window takes every per-(path, query) top-k
-    (per-query constants — bucket bits, probe cells, ADC lookup tables —
-    ride along as driver-side literal arrays indexed by qid; no join, no
-    per-query job, no per-path corpus scan).  The only shuffle in the whole
-    report is that one top-k window over the stacked candidates.
-
-    Queries are the ``n_queries`` lowest-id vectors with id >=
-    ``query_offset`` (disjoint from the id-0.. seed vectors that form the
-    planes/centroids/codebooks, so the index isn't trivially echoing its
-    own seeds).  Each path mirrors its single-query operator's exact
-    rounding/tie rules, pinned by the batch-vs-single consistency test.
-
-    -> (path, n_queries, k, mean_recall, min_recall, max_recall)."""
-    from pyspark.sql import Window
-
-    spark = embeddings.sparkSession
-
-    # -- query batch + index constants: TWO bounded driver-side collects
-    # (the queries, which carry an id >= query_offset filter, and ONE
-    # lowest-id-prefix collect sliced locally into planes / centroids /
-    # every codebook seed — the same one-collect-serves-all pattern
-    # ivf_pq_topk documents; training iterations inside pq_codebooks /
-    # residual_codebooks still run their own distributed AVG jobs) --
-    qrows = (
-        embeddings.filter(F.col(id_col) >= query_offset)
-        .select(id_col, vec_col).orderBy(F.col(id_col).asc())
-        .limit(n_queries).collect()
-    )
-    qvecs = [[float(x) for x in r[1]] for r in qrows]
-    nq = len(qvecs)
-    seeds = collect_planes(
-        embeddings, max(n_planes, n_centroids + pq_k), id_col, vec_col)
-    planes = seeds[:n_planes]
-    cents = seeds[:n_centroids]
-    cb_seed = pq_codebooks(embeddings, m, pq_k, id_col, vec_col, seeds=seeds)
-    cb_tr = pq_codebooks(embeddings, m, pq_k, id_col, vec_col,
-                         refine_iters=refine_iters, seeds=seeds)
-    rcents, cb_res = residual_codebooks(
-        embeddings, n_centroids, m, pq_k, refine_iters, id_col, vec_col,
-        seeds=seeds)
-    d = len(cents[0]) // m
-
-    # per-query driver-side constants, one list entry per qid
-    qbits = [_query_bits(q, planes) for q in qvecs]
-    qnorm = [_pydot(q, q) ** 0.5 for q in qvecs]
-
-    # per-path probe sets: each mirrors ITS operator's exact probe rounding
-    # — ivf_topk ranks cells by round(FULL L2, 6) while ivf_pq_topk /
-    # ivf_pq_residual_topk rank by round(REDUCED -2 q.c + c.c, 6); the q.q
-    # constant shifts values before rounding, so near-ties can order
-    # differently and one shared probe list would desync the batch from
-    # one of the shipped operators on tie data
-    def probe_full(q, cs):
-        ranked = sorted(
-            (round(sum((a - b) ** 2 for a, b in zip(q, c)), 6), i)
-            for i, c in enumerate(cs))
-        return [i for _, i in ranked[:nprobe]]
-
-    probes_ivf = [probe_full(q, cents) for q in qvecs]
-    probes = [_probe_reduced(q, cents, nprobe) for q in qvecs]
-
-    lut_seed = [_adc_tables(q, cb_seed, d) for q in qvecs]
-    lut_tr = [_adc_tables(q, cb_tr, d) for q in qvecs]
-    # residual tables are per (qid, probed cell); dense by cell index with
-    # zero rows for unprobed cells (those rows never survive the filter)
-    zero_tbl = [[0.0] * len(cb_res[s]) for s in range(m)]
-    lut_res = []
-    for qi, q in enumerate(qvecs):
-        by_cell = []
-        for c in range(n_centroids):
-            if c in probes[qi]:
-                qr = [x - y for x, y in zip(q, rcents[c])]
-                by_cell.append(_adc_tables(qr, cb_res, d))
-            else:
-                by_cell.append(zero_tbl)
-        lut_res.append(by_cell)
-
-    # every per-query constant table goes through _sql_array_lit: built
-    # element-wise these trees are tens of thousands of py4j round trips
-    # (the 32-query residual table alone measured 6.5 s of driver RPC)
-    qbits_lit = _sql_array_lit(qbits)
-    qnorm_lit = _sql_array_lit(qnorm)
-    probes_lit = _sql_array_lit(probes)
-    probes_ivf_lit = _sql_array_lit(probes_ivf)
-    lut_seed_lit, lut_tr_lit, lut_res_lit = map(
-        _sql_array_lit, (lut_seed, lut_tr, lut_res))
-    qv_structs = F.expr("array(" + ",".join(
-        f"named_struct('qid',{i},'qv',"
-        + "array(" + ",".join(repr(float(x)) + "D" for x in q) + "))"
-        for i, q in enumerate(qvecs)
-    ) + ")")
-
-    # -- the index: one projection pass, consumed by ONE scoring scan (no
-    # cache needed — nothing reads it twice) --
-    cents_lit = _sql_array_lit([[float(x) for x in c] for c in rcents])
-    v = F.col(vec_col).cast("array<double>")
-    b1 = embeddings.select(
-        F.col(id_col).alias("vec_id"), v.alias("v"), _norm(v).alias("nv"),
-        _bucket_expr(vec_col, planes).alias("bucket"),
-        _cell_expr(vec_col, cents).alias("cell"),
-    )
-    b2 = b1.select(  # two-select pattern: codes slice plain columns
-        "*",
-        F.zip_with(F.col("v"), F.element_at(cents_lit, F.col("cell") + 1),
-                   lambda a, b: a - b).alias("rv"),
-    )
-    index = b2.select(
-        "vec_id", "v", "nv", "bucket", "cell",
-        F.array(*[_pq_code_expr("v", cb_seed[s], s, d) for s in range(m)]).alias("c_seed"),
-        F.array(*[_pq_code_expr("v", cb_tr[s], s, d) for s in range(m)]).alias("c_tr"),
-        F.array(*[_pq_code_expr("rv", cb_res[s], s, d) for s in range(m)]).alias("c_res"),
-    )
-
-    qid = F.col("q.qid")
-    cos = _dot(F.col("v"), F.col("q.qv")) / (F.col("nv") * F.element_at(qnorm_lit, qid + 1))
-
-    def adc(code_col, lut3):
-        t = None
-        for s in range(m):
-            term = F.element_at(
-                F.element_at(F.element_at(lut3, qid + 1), s + 1),
-                F.element_at(F.col(code_col), s + 1) + 1,
-            )
-            t = term if t is None else t + term
-        return F.round(t, 6)
-
-    def adc_res_expr():
-        t = None
-        for s in range(m):
-            term = F.element_at(
-                F.element_at(
-                    F.element_at(F.element_at(lut_res_lit, qid + 1),
-                                 F.col("cell") + 1),
-                    s + 1),
-                F.element_at(F.col("c_res"), s + 1) + 1,
-            )
-            t = term if t is None else t + term
-        return F.round(t, 6)
-
-    exploded = index.select("*", F.explode(qv_structs).alias("q"))
-    in_probe = F.array_contains(F.element_at(probes_lit, qid + 1), F.col("cell"))
-    in_probe_ivf = F.array_contains(F.element_at(probes_ivf_lit, qid + 1), F.col("cell"))
-
-    # every per-(row, query) score lands in a plain column ONCE (a union of
-    # per-path branches would re-run the cosine and ADC expressions — and
-    # re-scan the index — once per path); each mirrors its single-query
-    # operator's rounding exactly (gt/lsh/ivf cosine rounded to 4, ranked
-    # desc; PQ family ADC rounded to 6, ranked asc)
-    scored = exploded.select(
-        qid.alias("qid"), "vec_id",
-        F.round(cos, 4).alias("s_cos"),
-        adc("c_seed", lut_seed_lit).alias("s_seed"),
-        adc("c_tr", lut_tr_lit).alias("s_tr"),
-        adc_res_expr().alias("s_res"),
-        (F.col("bucket") == F.element_at(qbits_lit, qid + 1)).alias("k_lsh"),
-        in_probe_ivf.alias("k_ivf"), in_probe.alias("k_pq"),
-    )
-
-    # stack the 7 paths as (path, score, keep) structs in ONE further
-    # explode: the negated cosine orders ASCENDING exactly as the ADC
-    # distances do (negation is exact on doubles, ties unchanged), so a
-    # single window ordering serves every path and the whole report is ONE
-    # scan of the index; candidates never expose the score, only ids
-    def entry(name, score, keep):
-        return F.struct(F.lit(name).alias("path"), score.alias("score"),
-                        keep.alias("keep"))
-
-    stack = F.array(
-        entry("gt", -F.col("s_cos"), F.lit(True)),
-        entry("lsh", -F.col("s_cos"), F.col("k_lsh")),
-        entry("ivf", -F.col("s_cos"), F.col("k_ivf")),
-        entry("pq", F.col("s_seed"), F.lit(True)),
-        entry("pq_trained", F.col("s_tr"), F.lit(True)),
-        entry("ivfpq", F.col("s_seed"), F.col("k_pq")),
-        entry("ivfpq_res", F.col("s_res"), F.col("k_pq")),
-    )
-    paths = ["gt", "lsh", "ivf", "pq", "pq_trained", "ivfpq", "ivfpq_res"]
-
-    # two-phase top-k: a single per-(path, qid) window would shuffle every
-    # candidate into at most paths x n_queries tasks — a bottleneck on a
-    # wide cluster (the gt path scans the FULL corpus per query by
-    # definition).  Phase 1 takes the per-(path, qid, vec_id%P) top-k
-    # (P ~ cluster width, so the heavy window fans out); phase 2 windows
-    # only the surviving rows.  Exact: the global top-k is contained in the
-    # union of bucket top-ks (pinned by the batch-vs-single consistency
-    # test).
-    n_pre = max(spark.sparkContext.defaultParallelism, 8)
-    order = (F.col("score").asc(), F.col("vec_id").asc())
-    w1 = Window.partitionBy("path", "qid", "pre").orderBy(*order)
-    w2 = Window.partitionBy("path", "qid").orderBy(*order)
-    topk_all = (
-        scored.select("qid", "vec_id", F.explode(stack).alias("e"))
-        .filter(F.col("e.keep"))
-        .select(F.col("e.path").alias("path"), "qid", "vec_id",
-                F.col("e.score").alias("score"),
-                F.pmod(F.col("vec_id"), F.lit(n_pre)).alias("pre"))
-        .withColumn("rn", F.row_number().over(w1))
-        .filter(F.col("rn") <= k)
-        .withColumn("rn2", F.row_number().over(w2))
-        .filter(F.col("rn2") <= k)
-        .select("path", "qid", "vec_id")
-    )
-
-    # a candidate set is bounded (paths x queries x k rows at most):
-    # compute it eagerly so the one heavy job runs HERE and the recall
-    # aggregation below works on a local bounded frame
-    base = spark.createDataFrame(topk_all.collect(), topk_all.schema)
-
-    if return_candidates:
-        # raw per-(path, qid) top-k ids, ground truth included as path "gt"
-        # — the surface the batch-vs-single consistency test pins
-        return base
-
-    gt = base.filter(F.col("path") == "gt").select(
-        "qid", "vec_id", F.lit(1).alias("_hit"))
-    cand = base.filter(F.col("path") != "gt")
-    per_q = (
-        cand.join(F.broadcast(gt), ["qid", "vec_id"], "left")
-        .groupBy("path", "qid").agg(F.count("_hit").alias("h"))
-    )
-    # dense (path, qid) grid so an empty LSH bucket counts as recall 0,
-    # not a silently missing row
-    grid = spark.createDataFrame(
-        [(p, q) for p in paths if p != "gt" for q in range(nq)],
-        "path string, qid int",
-    )
-    return (
-        grid.join(per_q, ["path", "qid"], "left").fillna(0, subset=["h"])
-        .groupBy("path")
-        .agg(
-            F.lit(nq).alias("n_queries"), F.lit(k).alias("k"),
-            F.round(F.avg(F.col("h") / k), 4).alias("mean_recall"),
-            F.round(F.min(F.col("h") / k), 4).alias("min_recall"),
-            F.round(F.max(F.col("h") / k), 4).alias("max_recall"),
-        )
-        .orderBy("path")
     )

@@ -40,7 +40,6 @@ def transform_transcripts(
     transcripts: DataFrame,
     docs_meta: DataFrame | None = None,
     dictionary: DataFrame | None = None,
-    broadcast_dict: bool = True,
 ) -> tuple[DataFrame, int]:
     """The pipeline's transform chain on one self-contained transcript set
     (a partition group in batch mode, a micro-batch in streaming mode):
@@ -59,9 +58,7 @@ def transform_transcripts(
     extracted = extract_triples(rdf_docs)
     parts = [triples_of(extracted)]
     if dictionary is not None:
-        parts.append(
-            link_entities(free_docs, dictionary, broadcast_dict=broadcast_dict)
-        )
+        parts.append(link_entities(free_docs, dictionary))
     triples = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
     return dedup_triples(canonicalize(triples)), errors_of(extracted).count()
 
@@ -74,7 +71,6 @@ def run_pipeline(
     docs_meta: DataFrame | None = None,
     dictionary: DataFrame | None = None,
     n_groups: int = 8,
-    broadcast_dict: bool = True,
     stop_after_groups: int | None = None,
 ) -> PipelineReport:
     """``stop_after_groups`` simulates a mid-job kill for the resume tests."""
@@ -91,9 +87,7 @@ def run_pipeline(
         part = transcripts.filter(
             F.pmod(F.xxhash64("conv_id"), F.lit(n_groups)) == g
         )
-        triples, n_err = transform_transcripts(
-            part, docs_meta, dictionary, broadcast_dict
-        )
+        triples, n_err = transform_transcripts(part, docs_meta, dictionary)
         n_new = store.merge(spark, triples)
         store.commit_lineage(spark, snapshot_id, ph, n_new)
         report.groups_committed += 1

@@ -23,7 +23,7 @@ eviction; a long-lived session composing many catalog queries should call
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from rio_spark.operators.assemble import assemble_documents_salted
 from rio_spark.operators.canonicalize import connected_components
@@ -34,7 +34,6 @@ from rio_spark.operators.dedup import (
     simhash_bits,
 )
 from rio_spark.operators.extract import errors_of, extract_triples, triples_of
-from rio_spark.operators.sessions import ntz_epoch, session_stats
 from rio_spark.operators.similarity import cosine_pairs_above, lsh_bucket_ids
 from rio_spark.operators.text import (
     LANG_PROFILES,
@@ -682,303 +681,9 @@ SELECT bucket, COUNT(*) AS n FROM b GROUP BY bucket
 
 
 # ---------------------------------------------------------------------------
-# Relational / OLAP coverage (TPC-H-style) + event streams
-# ---------------------------------------------------------------------------
-
-def q_tpch_q1(spark, sf_dir) -> DataFrame:
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= "1998-09-02")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("sum_disc_price"),
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))), 2
-            ).alias("sum_charge"),
-            F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
-            F.round(F.avg("l_extendedprice"), 4).alias("avg_price"),
-            F.round(F.avg("l_discount"), 6).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-ORACLE_TPCH_Q1 = """
-SELECT l_returnflag, l_linestatus,
-       round(sum(l_quantity), 2) AS sum_qty,
-       round(sum(l_extendedprice), 2) AS sum_base_price,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS sum_disc_price,
-       round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 2) AS sum_charge,
-       round(avg(l_quantity), 4) AS avg_qty,
-       round(avg(l_extendedprice), 4) AS avg_price,
-       round(avg(l_discount), 6) AS avg_disc,
-       count(*) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-def q_tpch_q3(spark, sf_dir) -> DataFrame:
-    c = _read(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _read(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1995-03-15")
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1995-03-15")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue")
-        )
-        .select(
-            "l_orderkey",
-            ntz_epoch(F.col("o_orderdate")).alias("o_orderdate_epoch"),
-            "o_orderpriority",
-            "revenue",
-        )
-        .orderBy(F.col("revenue").desc(), F.col("l_orderkey").asc())
-        .limit(10)
-    )
-
-
-ORACLE_TPCH_Q3 = """
-SELECT l_orderkey,
-       CAST(epoch(o_orderdate) AS BIGINT) AS o_orderdate_epoch,
-       o_orderpriority,
-       round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1995-03-15 00:00:00'
-  AND l_shipdate > TIMESTAMP '1995-03-15 00:00:00'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY revenue DESC, l_orderkey ASC
-LIMIT 10
-"""
-
-
-def q_tpch_q5(spark, sf_dir) -> DataFrame:
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders")
-    li = _read(spark, sf_dir, "lineitem")
-    s = _read(spark, sf_dir, "supplier")
-    n = _read(spark, sf_dir, "nation")
-    r = _read(spark, sf_dir, "region")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, o.o_custkey == c.c_custkey)
-        .join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
-        .groupBy("n_name")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue")
-        )
-        .orderBy(F.col("revenue").desc(), F.col("n_name").asc())
-    )
-
-
-ORACLE_TPCH_Q5 = """
-SELECT n_name, round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN supplier ON l_suppkey = s_suppkey
-JOIN nation ON s_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY n_name
-ORDER BY revenue DESC, n_name ASC
-"""
-
-
-def q_tpch_q6(spark, sf_dir) -> DataFrame:
-    li = _read(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= "1996-01-01")
-        & (F.col("l_shipdate") < "1997-01-01")
-        & (F.col("l_discount") >= 0.03)
-        & (F.col("l_discount") <= 0.05)
-        & (F.col("l_quantity") < 24)
-    ).agg(F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 2).alias("revenue"))
-
-
-ORACLE_TPCH_Q6 = """
-SELECT round(sum(l_extendedprice * l_discount), 2) AS revenue
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00'
-  AND l_discount BETWEEN 0.03 AND 0.05
-  AND l_quantity < 24
-"""
-
-
-def q_window_topk(spark, sf_dir) -> DataFrame:
-    """Top-3 line items by revenue per supplier (window row_number)."""
-    li = _read(spark, sf_dir, "lineitem")
-    rev = F.round(F.col("l_extendedprice") * (1 - F.col("l_discount")), 4)
-    w = W.partitionBy("l_suppkey").orderBy(
-        F.col("revenue").desc(), F.col("l_orderkey").asc(), F.col("l_linenumber").asc()
-    )
-    return (
-        li.select("l_suppkey", "l_orderkey", "l_linenumber", rev.alias("revenue"))
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("l_suppkey", "l_orderkey", "l_linenumber", "revenue", "rk")
-    )
-
-
-ORACLE_WINDOW_TOPK = """
-SELECT l_suppkey, l_orderkey, l_linenumber, revenue, rk FROM (
-  SELECT l_suppkey, l_orderkey, l_linenumber,
-         round(l_extendedprice * (1 - l_discount), 4) AS revenue,
-         row_number() OVER (PARTITION BY l_suppkey
-                            ORDER BY round(l_extendedprice * (1 - l_discount), 4) DESC,
-                                     l_orderkey ASC, l_linenumber ASC) AS rk
-  FROM lineitem
-) WHERE rk <= 3
-"""
-
-
-def q_events_sessionize(spark, sf_dir) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    st = session_stats(ev, gap_minutes=30)
-    return st.select(
-        "user_id",
-        "session_id",
-        "n_events",
-        ntz_epoch(F.col("t_start")).alias("t_start_epoch"),
-        ntz_epoch(F.col("t_end")).alias("t_end_epoch"),
-        "total_value",
-    )
-
-
-ORACLE_EVENTS_SESSIONIZE = """
-WITH base AS (
-  -- whole-second epochs, matching Spark's truncating timestamp->long cast
-  SELECT *, CAST(floor(epoch(ts)) AS BIGINT) AS e FROM events
-), s AS (
-  SELECT *,
-         CASE WHEN lag(e) OVER w IS NULL
-                OR e - lag(e) OVER w > 1800 THEN 1 ELSE 0 END AS is_new
-  FROM base
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), s2 AS (
-  SELECT *,
-         sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM s
-)
-SELECT user_id, CAST(session_id AS BIGINT) AS session_id, count(*) AS n_events,
-       min(e) AS t_start_epoch,
-       max(e) AS t_end_epoch,
-       round(sum(value), 4) AS total_value
-FROM s2 GROUP BY user_id, session_id
-"""
-
-
-def q_events_tumbling(spark, sf_dir) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    from rio_spark.operators.sessions import tumbling_counts
-
-    tc = tumbling_counts(ev, minutes=60)
-    return tc.select(
-        ntz_epoch(F.col("w_start")).alias("w_start_epoch"),
-        "event_type",
-        "n",
-        "total_value",
-    )
-
-
-ORACLE_EVENTS_TUMBLING = """
-SELECT CAST(floor(epoch(ts) / 3600) * 3600 AS BIGINT) AS w_start_epoch,
-       event_type, count(*) AS n, round(sum(value), 4) AS total_value
-FROM events
-GROUP BY 1, 2
-"""
-
-
-def q_events_json_props(spark, sf_dir) -> DataFrame:
-    """Semi-structured column: extract props.k (JSON) and aggregate."""
-    ev = _read(spark, sf_dir, "events")
-    return (
-        ev.select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("long").alias("k"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.max("k").alias("max_k"),
-        )
-    )
-
-
-ORACLE_EVENTS_JSON_PROPS = """
--- sum(BIGINT) is HUGEINT in DuckDB; cast back so the typed value-hash matches
--- Spark's sum(long) -> long (CORRECTNESS_r01 root cause).
-SELECT event_type, count(*) AS n,
-       CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k,
-       max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
-FROM events GROUP BY event_type
-"""
-
-
-def q_events_distinct_users(spark, sf_dir) -> DataFrame:
-    ev = _read(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_users"),
-        F.count("*").alias("n_events"),
-    )
-
-
-ORACLE_EVENTS_DISTINCT_USERS = """
-SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n_events
-FROM events GROUP BY event_type
-"""
-
-
-def q_tpch_rollup(spark, sf_dir) -> DataFrame:
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(F.round(F.sum("l_quantity"), 2).alias("sum_qty"), F.count("*").alias("n"))
-    )
-
-
-ORACLE_TPCH_ROLLUP = """
-SELECT l_returnflag, l_linestatus, round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
-FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-"""
-
-
-def q_tpch_pivot(spark, sf_dir) -> DataFrame:
-    li = _read(spark, sf_dir, "lineitem")
-    return (
-        li.groupBy("l_returnflag")
-        .pivot("l_linestatus", ["O", "F"])
-        .agg(F.round(F.sum("l_quantity"), 2))
-        .withColumnsRenamed({"O": "qty_o", "F": "qty_f"})
-    )
-
-
-ORACLE_TPCH_PIVOT = """
-SELECT l_returnflag,
-       round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity END), 2) AS qty_o,
-       round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity END), 2) AS qty_f
-FROM lineitem GROUP BY l_returnflag
-"""
-
-
-# ---------------------------------------------------------------------------
 # Round-2 additions: remaining parsers (S2/S4/S6), formatter roundtrips
 # (K2-K5), J2 blocked linking, LSH pair paths, streaming replays, CC skew
-# stress, multimodal with a real oracle.
+# stress.
 # ---------------------------------------------------------------------------
 
 G_NS = "http://ex.org/g/"
@@ -1515,24 +1220,6 @@ SELECT doc_id, n_tokens, (cum - n_tokens) // 2048 AS bin_id FROM c
 """
 
 
-def q_events_quantiles(spark, sf_dir) -> DataFrame:
-    """Exact per-type value quantiles (PERCENTILE_DISC: engine-exact because
-    it picks actual data values; the sketch upgrade path is documented in
-    operators/stats.py)."""
-    from rio_spark.operators.stats import group_quantiles
-
-    return group_quantiles(_read(spark, sf_dir, "events"), "event_type", "value")
-
-
-ORACLE_EVENTS_QUANTILES = """
-SELECT event_type,
-       quantile_disc(value, 0.5) AS p50,
-       quantile_disc(value, 0.9) AS p90,
-       quantile_disc(value, 0.99) AS p99
-FROM events GROUP BY event_type ORDER BY event_type
-"""
-
-
 def q_text_tfidf(spark, sf_dir) -> DataFrame:
     """TF-IDF-style salience, linear idf (score = tf*N/df: two IEEE double
     ops on exact counts — bit-reproducible, no rounding, no ln())."""
@@ -1804,35 +1491,6 @@ QUALIFY row_number() OVER (PARTITION BY node ORDER BY cnt DESC, label ASC) = 1
 )
 
 
-def q_events_funnel(spark, sf_dir) -> DataFrame:
-    """Ordered funnel view -> click -> purchase (strictly increasing ts)."""
-    from rio_spark.operators.sessions import funnel_counts
-
-    return funnel_counts(
-        _read(spark, sf_dir, "events"), ["view", "click", "purchase"]
-    )
-
-
-ORACLE_EVENTS_FUNNEL = """
-WITH s1 AS (
-  SELECT user_id AS u, min(ts) AS ft FROM events WHERE event_type = 'view' GROUP BY user_id
-),
-s2 AS (
-  SELECT e.user_id AS u, min(e.ts) AS ft
-  FROM events e JOIN s1 ON e.user_id = s1.u AND e.ts > s1.ft
-  WHERE e.event_type = 'click' GROUP BY e.user_id
-),
-s3 AS (
-  SELECT e.user_id AS u, min(e.ts) AS ft
-  FROM events e JOIN s2 ON e.user_id = s2.u AND e.ts > s2.ft
-  WHERE e.event_type = 'purchase' GROUP BY e.user_id
-)
-SELECT CAST(1 AS INT) AS step, 'view' AS event_type, count(*) AS users FROM s1
-UNION ALL SELECT CAST(2 AS INT), 'click', count(*) FROM s2
-UNION ALL SELECT CAST(3 AS INT), 'purchase', count(*) FROM s3
-"""
-
-
 def q_dedup_lsh_pairs(spark, sf_dir) -> DataFrame:
     """MinHash-LSH banding candidates (k=4 minhashes, 2 bands) over documents
     plus injected exact duplicates (every 10th doc), so the band join provably
@@ -2027,26 +1685,14 @@ WHERE round(list_dot_product(a.v, b.v)
 
 
 def q_sim_ann_topk(spark, sf_dir) -> DataFrame:
-    """ANN top-k: one plane collect, query bucket computed driver-side,
-    candidates = plain FILTER on the bucket expression (single Spark job, no
-    probe/fallback jobs)."""
-    from rio_spark.operators.similarity import (
-        _bucket_expr,
-        _query_bits,
-        collect_planes,
-        cosine_to_query,
-    )
+    """ANN top-k (similarity.py ann_topk_lsh): one plane collect, query
+    bucket computed driver-side, candidates = plain FILTER on the bucket
+    expression (single Spark job, no probe jobs)."""
+    from rio_spark.operators.similarity import ann_topk_lsh
 
     emb = _embeddings(spark, sf_dir)
     qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    planes = collect_planes(emb, 4)
-    cand = emb.filter(_bucket_expr("embedding", planes) == _query_bits(qv, planes))
-    return (
-        cosine_to_query(cand, qv)
-        .select("vec_id", F.round("cosine", 4).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
-        .limit(5)
-    )
+    return ann_topk_lsh(emb, qv, k=5, n_planes=4)
 
 
 ORACLE_SIM_ANN_TOPK = f"""
@@ -2070,134 +1716,6 @@ SELECT vec_id,
          AS cosine
 FROM c, q, qb
 WHERE c.bucket = qb.qbits
-ORDER BY cosine DESC, vec_id ASC
-LIMIT 5
-"""
-
-
-_CENTROIDS8_SQL = """
-  SELECT list(embedding::DOUBLE[] ORDER BY vec_id) AS cents
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)
-"""
-
-# per-vector nearest-centroid index: argmin over rounded reduced L2
-# (-2 v.c + c.c — the v.v term cancels), first index wins ties (matches
-# Spark's array_min over (d, cell) structs)
-_IVF_CELL_SQL = """
-  list_position(
-    list_transform(generate_series(1, 8), i ->
-      round(-2 * list_dot_product(e.embedding::DOUBLE[], p.cents[i])
-            + list_dot_product(p.cents[i], p.cents[i]), 6)),
-    list_min(
-      list_transform(generate_series(1, 8), i ->
-        round(-2 * list_dot_product(e.embedding::DOUBLE[], p.cents[i])
-              + list_dot_product(p.cents[i], p.cents[i]), 6)))
-  ) - 1
-"""
-
-
-def q_sim_ivf_cells(spark, sf_dir) -> DataFrame:
-    """IVF coarse quantizer: cell histogram (the partition layout an IVF
-    index would shuffle by at scale)."""
-    from rio_spark.operators.similarity import ivf_cells
-
-    return (
-        ivf_cells(_embeddings(spark, sf_dir), n_centroids=8)
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-ORACLE_SIM_IVF_CELLS = f"""
-WITH p AS ({_CENTROIDS8_SQL})
-SELECT CAST({_IVF_CELL_SQL} AS INT) AS cell, count(*) AS n
-FROM embeddings e, p
-GROUP BY 1
-"""
-
-
-def q_sim_ivf_refined(spark, sf_dir) -> DataFrame:
-    """IVF with ONE k-means (Lloyd) refinement iteration: seed centroids ->
-    distributed per-(cell, dim) mean -> refined-cell histogram. The refined
-    partition layout is visibly more balanced than the seed one
-    (sim_ivf_cells) — the property an IVF index shuffles by at scale."""
-    from rio_spark.operators.similarity import (
-        _cell_expr,
-        collect_planes,
-        kmeans_refine,
-    )
-
-    emb = _embeddings(spark, sf_dir)
-    labels, cents = kmeans_refine(emb, collect_planes(emb, 8), iters=1)
-    return (
-        emb.select(_cell_expr("embedding", cents, labels=labels).alias("cell"))
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
-    )
-
-
-ORACLE_SIM_IVF_REFINED = f"""
-WITH p AS ({_CENTROIDS8_SQL}),
-cells AS (
-  SELECT e.vec_id, e.embedding, CAST({_IVF_CELL_SQL} AS INT) AS cell
-  FROM embeddings e, p
-),
-dims AS (
-  -- centroid components rounded to 6 decimals (matching kmeans_refine) so
-  -- the distance INPUTS are bit-identical across engines, not just the
-  -- rounded distances
-  SELECT cell, i, round(avg(x), 6) AS m FROM (
-    SELECT cell, unnest(embedding::DOUBLE[]) AS x,
-           generate_subscripts(embedding::DOUBLE[], 1) AS i
-    FROM cells
-  ) GROUP BY cell, i
-),
-refined AS (SELECT cell, list(m ORDER BY i) AS c FROM dims GROUP BY cell),
-d2 AS (
-  SELECT e.vec_id, r.cell,
-         round(-2 * list_dot_product(e.embedding::DOUBLE[], r.c)
-               + list_dot_product(r.c, r.c), 6) AS d
-  FROM embeddings e, refined r
-),
-assigned AS (
-  SELECT vec_id, cell,
-         row_number() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-  FROM d2
-)
-SELECT cell, count(*) AS n FROM assigned WHERE rn = 1 GROUP BY cell
-"""
-
-
-def q_sim_ivf_topk(spark, sf_dir) -> DataFrame:
-    """IVF-flat ANN: nprobe=2 nearest cells to the query, exact cosine top-k
-    inside them only — candidates are a FILTER on the cell expression."""
-    from rio_spark.operators.similarity import ivf_topk
-
-    emb = _embeddings(spark, sf_dir)
-    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    return ivf_topk(emb, qv, k=5, n_centroids=8, nprobe=2)
-
-
-ORACLE_SIM_IVF_TOPK = f"""
-WITH p AS ({_CENTROIDS8_SQL}),
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-pr AS (
-  SELECT i - 1 AS cell,
-         round(list_sum(list_transform(generate_series(1, len(q.qv)),
-               j -> (q.qv[j] - p.cents[i][j]) * (q.qv[j] - p.cents[i][j]))), 6) AS d
-  FROM q, p, generate_series(1, 8) t(i)
-),
-probe AS (SELECT cell FROM pr ORDER BY d, cell LIMIT 2),
-cand AS (
-  SELECT e.vec_id, e.embedding::DOUBLE[] AS v, CAST({_IVF_CELL_SQL} AS INT) AS cell
-  FROM embeddings e, p
-)
-SELECT vec_id,
-       round(list_dot_product(c.v, q.qv)
-             / (sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(q.qv, q.qv))), 4)
-         AS cosine
-FROM cand c, q
-WHERE c.cell IN (SELECT cell FROM probe)
 ORDER BY cosine DESC, vec_id ASC
 LIMIT 5
 """
@@ -2250,193 +1768,6 @@ SELECT DISTINCT md5('streamdoc ' || (doc_id % 37)) AS h FROM documents
 """
 
 
-def q_streaming_tumbling(spark, sf_dir) -> DataFrame:
-    """Watermarked tumbling-window streaming aggregation replayed over the
-    events table; the final (complete-mode) state must equal the batch
-    group-by — same oracle as ``events_tumbling``."""
-    from rio_spark.streaming.windows import read_event_stream, windowed_counts_stream
-
-    ev = read_event_stream(spark, sf_dir, glob="events.parquet")
-    agg = windowed_counts_stream(ev, minutes=60)
-    return _drain_stream(agg, "complete").select(
-        ntz_epoch(F.col("w_start")).alias("w_start_epoch"),
-        "event_type",
-        "n",
-        "total_value",
-    )
-
-
-ORACLE_STREAMING_TUMBLING = ORACLE_EVENTS_TUMBLING
-
-
-def q_streaming_enrich(spark, sf_dir) -> DataFrame:
-    """Stream-static broadcast enrichment (streaming/enrich.py): the events
-    stream inner-joins the static customer dimension (stateless in Spark's
-    model — no watermark, no state store), aggregated per nation in
-    complete mode; the availableNow replay's final state must equal the
-    batch join + group-by."""
-    from rio_spark.streaming.enrich import enrich_stream
-    from rio_spark.streaming.windows import read_event_stream
-
-    ev = read_event_stream(spark, sf_dir, glob="events.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    joined = enrich_stream(ev, cust, ev["user_id"] + 1 == cust["c_custkey"])
-    agg = joined.groupBy("c_nationkey").agg(
-        F.count("*").alias("n"),
-        F.round(F.sum("value"), 4).alias("total_value"),
-    )
-    return _drain_stream(agg, "complete")
-
-
-ORACLE_STREAMING_ENRICH = """
-SELECT c_nationkey, count(*) AS n, round(sum(value), 4) AS total_value
-FROM events JOIN customer ON user_id + 1 = c_custkey
-GROUP BY c_nationkey
-"""
-
-
-def q_streaming_join(spark, sf_dir) -> DataFrame:
-    """Watermarked stream-stream interval join (streaming/join.py): click
-    events matched to the same user's purchases within the following hour —
-    both sides unbounded, state bounded by watermark + time-range predicate.
-    The availableNow replay's append output must equal the batch interval
-    join; output is the deterministic (click_id, purchase_id) pair set."""
-    from rio_spark.streaming.join import interval_join_streams
-    from rio_spark.streaming.windows import read_event_stream
-
-    ev = read_event_stream(spark, sf_dir, glob="events.parquet")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("c_ts"), F.col("event_id").alias("click_id")
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("p_ts"), F.col("event_id").alias("purchase_id")
-    )
-    pairs = interval_join_streams(
-        clicks, purchases, key="user_id",
-        left_ts="c_ts", right_ts="p_ts", within="1 hour",
-    )
-    return _drain_stream(pairs.select("click_id", "purchase_id"), "append")
-
-
-ORACLE_STREAMING_JOIN = """
-SELECT c.event_id AS click_id, p.event_id AS purchase_id
-FROM events c
-JOIN events p
-  ON c.user_id = p.user_id
- AND p.ts >= c.ts
- AND p.ts <= c.ts + INTERVAL 1 HOUR
-WHERE c.event_type = 'click' AND p.event_type = 'purchase'
-"""
-
-
-def q_streaming_join_capped(spark, sf_dir) -> DataFrame:
-    """Capped stream-stream interval join (streaming/join.py
-    capped_interval_join_streams): clicks matched to purchases within the
-    following hour on a DELIBERATELY skewed key (user_id % 2 — two hot
-    keys, so over-cap windows exist at every sf), with at most cap=2
-    purchases per (key, hour window) joining,
-    smallest (ts, id) first, overflow marked ``truncated``.  The replay
-    stages the events file plus two far-future sentinel files and reads
-    one file per micro-batch, so the watermark closes (and the operator
-    emits) every real window: batch 1 = data, batch 2 = sentinel pushes
-    the watermark past the data, batch 3 = second sentinel fires the
-    remaining event-time timeouts.  Sentinel rows sit in windows the
-    watermark never reaches, so they emit nothing themselves."""
-    import datetime
-    import os
-    import shutil
-    import tempfile
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from rio_spark.streaming.join import capped_interval_join_streams
-    from rio_spark.streaming.windows import read_event_stream
-
-    stage = tempfile.mkdtemp(prefix="rio_capped_join_")
-    shutil.copy(f"{sf_dir}/events.parquet", f"{stage}/a_events.parquet")
-    schema = pq.read_schema(f"{sf_dir}/events.parquet").remove_metadata()
-    for i, (name, day) in enumerate([("b_flush1", 1), ("c_flush2", 2)]):
-        ts = datetime.datetime(2099, 1, day)
-        # distinct keys (user 0 vs 1): the two sentinel rows advance both
-        # sides' watermarks but can never match EACH OTHER if a final
-        # flush batch closes their window
-        sent = pa.table(
-            {
-                "event_id": [-1 - 2 * i, -2 - 2 * i],
-                "ts": [ts, ts],
-                "user_id": [0, 1],
-                "event_type": ["click", "purchase"],
-                "value": [0.0, 0.0],
-                "props": ["{}", "{}"],
-            },
-            schema=schema,
-        )
-        path = f"{stage}/{name}.parquet"
-        pq.write_table(sent, path)
-        os.utime(path, (1_000_000 + i + 1, 1_000_000 + i + 1))
-    os.utime(f"{stage}/a_events.parquet", (1_000_000, 1_000_000))
-
-    ev = read_event_stream(spark, stage, max_files=1)
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        (F.col("user_id") % 2).alias("k5"),
-        F.col("ts").alias("c_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        (F.col("user_id") % 2).alias("k5"),
-        F.col("ts").alias("p_ts"),
-        F.col("event_id").alias("purchase_id"),
-    )
-    pairs = capped_interval_join_streams(
-        clicks, purchases, key="k5",
-        left_ts="c_ts", right_ts="p_ts",
-        left_id="click_id", right_id="purchase_id",
-        within_s=3600, watermark="30 minutes", cap=2,
-    )
-    out = _drain_stream(pairs, "append").select(
-        "k", "left_id", "right_id", "truncated"
-    )
-    # the drain above ran the replay to completion; the staged input files
-    # are dead weight now (the memory sink holds the rows)
-    shutil.rmtree(stage, ignore_errors=True)
-    return out
-
-
-# batch recompute: rank purchases by (ts, CAST(id AS VARCHAR)) inside each
-# (key, hour window) — string order on the id tiebreak matches the
-# operator's string-typed state — keep rank <= 2, join under the interval,
-# flag windows that overflowed
-ORACLE_STREAMING_JOIN_CAPPED = """
-WITH c AS (
-  SELECT CAST(user_id % 2 AS VARCHAR) AS k, ts, event_id
-  FROM events WHERE event_type = 'click'
-),
-p AS (
-  SELECT CAST(user_id % 2 AS VARCHAR) AS k, ts, event_id,
-         CAST(floor(epoch(ts) / 3600) AS BIGINT) AS w
-  FROM events WHERE event_type = 'purchase'
-),
-pr AS (
-  SELECT *,
-         row_number() OVER (
-           PARTITION BY k, w ORDER BY ts, CAST(event_id AS VARCHAR)
-         ) AS rn,
-         count(*) OVER (PARTITION BY k, w) AS cnt
-  FROM p
-)
-SELECT c.k,
-       CAST(c.event_id AS VARCHAR) AS left_id,
-       CAST(pr.event_id AS VARCHAR) AS right_id,
-       (pr.cnt > 2) AS truncated
-FROM c JOIN pr
-  ON c.k = pr.k
- AND pr.ts >= c.ts
- AND pr.ts <= c.ts + INTERVAL 1 HOUR
-WHERE pr.rn <= 2
-"""
-
-
 def q_text_repetition(spark, sf_dir) -> DataFrame:
     """Repetition quality signal (operators/text.py repetition_stats):
     duplicated-trigram fraction per document, the Gopher-style repetitious-
@@ -2459,52 +1790,6 @@ SELECT doc_id,
        round((len(sh) - len(list_distinct(sh))) / CAST(len(sh) AS DOUBLE), 4)
          AS dup_fraction
 FROM s
-"""
-
-
-def q_events_retention(spark, sf_dir) -> DataFrame:
-    """Weekly cohort retention matrix (operators/sessions.py
-    cohort_retention): engagement analytics over the events stream —
-    dedup + two hash aggregations + one user-key join, no windows."""
-    from rio_spark.operators.sessions import cohort_retention
-
-    return cohort_retention(_read(spark, sf_dir, "events"))
-
-
-ORACLE_EVENTS_RETENTION = """
-WITH e AS (
-  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 604800 AS w FROM events
-),
-d AS (SELECT DISTINCT user_id, w FROM e),
-f AS (SELECT user_id, min(w) AS cohort_week FROM d GROUP BY user_id)
-SELECT f.cohort_week, d.w - f.cohort_week AS week_offset,
-       count(*) AS n_users
-FROM d JOIN f USING (user_id)
-GROUP BY 1, 2
-"""
-
-
-def q_events_trailing(spark, sf_dir) -> DataFrame:
-    """Per-user daily totals vs a 3-day trailing baseline (operators/
-    sessions.py trailing_user_stats) — the anomaly/ramp shape, exercising
-    bounded ROWS-frame windows (deterministic in-order frame summation)."""
-    from rio_spark.operators.sessions import trailing_user_stats
-
-    return trailing_user_stats(_read(spark, sf_dir, "events"))
-
-
-ORACLE_EVENTS_TRAILING = """
-WITH daily AS (
-  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) // 86400 AS day,
-         sum(value) AS total
-  FROM events GROUP BY 1, 2
-)
-SELECT user_id, day, round(total, 4) AS total,
-       round(avg(total) OVER (
-         PARTITION BY user_id ORDER BY day
-         ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING
-       ), 4) AS trailing_avg
-FROM daily
 """
 
 
@@ -2884,127 +2169,6 @@ WHERE rank <= 5
 """
 
 
-def q_events_asof(spark, sf_dir) -> DataFrame:
-    """As-of join: every click gets the latest purchase at-or-before it for
-    the same user — union-tag + forward-fill window, ONE shuffle on user_id
-    (never a range theta-join)."""
-    from rio_spark.operators.asof import asof_join
-
-    ev = _read(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "event_id"
-    )
-    out = asof_join(clicks, purchases, on="user_id", ts="ts",
-                    payload=["event_id"], tiebreak="event_id")
-    return out.select(
-        "event_id",
-        "user_id",
-        ntz_epoch(F.col("ts")).alias("ts_epoch"),
-        F.col("asof_event_id").alias("purchase_event_id"),
-    )
-
-
-ORACLE_EVENTS_ASOF = """
-WITH p AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'purchase')
-SELECT e.event_id, e.user_id, CAST(floor(epoch(e.ts)) AS BIGINT) AS ts_epoch,
-       (SELECT p.event_id FROM p
-        WHERE p.user_id = e.user_id AND p.ts <= e.ts
-        ORDER BY p.ts DESC, p.event_id DESC LIMIT 1) AS purchase_event_id
-FROM events e WHERE e.event_type = 'click'
-"""
-
-
-def q_orders_semi(spark, sf_dir) -> DataFrame:
-    """Semi-join shape (TPC-H Q4 style, adapted to the available columns):
-    orders from Q1-1995 having at least one lineitem shipped after June."""
-    o = _read(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1995-01-01") & (F.col("o_orderdate") < "1995-04-01")
-    )
-    li = _read(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1995-06-01")
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count("*").alias("order_count"))
-        .orderBy("o_orderpriority")
-    )
-
-
-ORACLE_ORDERS_SEMI = """
-SELECT o_orderpriority, count(*) AS order_count
-FROM orders o
-WHERE o_orderdate >= TIMESTAMP '1995-01-01 00:00:00'
-  AND o_orderdate < TIMESTAMP '1995-04-01 00:00:00'
-  AND EXISTS (SELECT 1 FROM lineitem
-              WHERE l_orderkey = o.o_orderkey
-                AND l_shipdate > TIMESTAMP '1995-06-01 00:00:00')
-GROUP BY o_orderpriority
-ORDER BY o_orderpriority
-"""
-
-
-def q_customers_anti(spark, sf_dir) -> DataFrame:
-    """Anti-join shape: customers with no orders, counted per segment."""
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .groupBy("c_mktsegment")
-        .agg(F.count("*").alias("n"), F.min("c_custkey").alias("min_custkey"))
-    )
-
-
-ORACLE_CUSTOMERS_ANTI = """
-SELECT c_mktsegment, count(*) AS n, min(c_custkey) AS min_custkey
-FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c.c_custkey)
-GROUP BY c_mktsegment
-"""
-
-
-def q_streaming_sessions(spark, sf_dir) -> DataFrame:
-    """Streaming gap-based session windows (built-in session_window) replayed
-    over the events table; timestamps truncated to seconds FIRST so the
-    merge boundary is reproducible in the epoch-second oracle (raw event ts
-    carry sub-second precision). Session end = last event + gap; an event at
-    EXACTLY prev + gap still merges — Spark splits only when the gap is
-    STRICTLY greater (verified against a real 1800s gap at sf0.1)."""
-    from rio_spark.streaming.windows import read_event_stream, session_windows_stream
-
-    ev = read_event_stream(spark, sf_dir, glob="events.parquet").withColumn(
-        "ts", F.date_trunc("second", F.col("ts"))
-    )
-    agg = session_windows_stream(ev, gap_minutes=30)
-    return _drain_stream(agg, "complete").select(
-        "user_id",
-        ntz_epoch(F.col("s_start")).alias("s_start_epoch"),
-        ntz_epoch(F.col("s_end")).alias("s_end_epoch"),
-        "n_events",
-        "total_value",
-    )
-
-
-ORACLE_STREAMING_SESSIONS = """
-WITH base AS (
-  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS e, value FROM events
-), s AS (
-  -- STRICTLY greater: session_window merges an event landing exactly at
-  -- last + gap (sf0.1 has such a gap; >= split one session too many)
-  SELECT *,
-         CASE WHEN lag(e) OVER w IS NULL OR e - lag(e) OVER w > 1800
-              THEN 1 ELSE 0 END AS is_new
-  FROM base WINDOW w AS (PARTITION BY user_id ORDER BY e)
-), s2 AS (
-  SELECT *, sum(is_new) OVER (PARTITION BY user_id ORDER BY e
-                              ROWS UNBOUNDED PRECEDING) AS sid
-  FROM s
-)
-SELECT user_id, min(e) AS s_start_epoch, max(e) + 1800 AS s_end_epoch,
-       count(*) AS n_events, round(sum(value), 4) AS total_value
-FROM s2 GROUP BY user_id, sid
-"""
-
-
 def q_streaming_kg_extract(spark, sf_dir) -> DataFrame:
     """KG extraction as a STREAMING job: the same mapInArrow grammar-kernel
     operator running stateless inside a Structured Streaming query (documents
@@ -3073,86 +2237,6 @@ ORACLE_STREAMING_MATERIALIZE = (
     + ORACLE_KG_EXTRACT_NT
     + ")"
 )
-
-
-def q_multimodal_features(spark, sf_dir) -> DataFrame:
-    """Multimodal plumbing: binary payloads + typed metadata through a real
-    mapInPandas Arrow kernel (codec layer stubbed — no image libs in this
-    container). The payload is an md5 counter stream, so the byte-histogram
-    feature has a REAL cross-engine oracle (DuckDB reproduces the bytes as
-    hex and counts high nibbles)."""
-    from rio_spark.operators.multimodal import extract_features, synthetic_assets
-
-    feats = extract_features(synthetic_assets(spark, n=64))
-    return feats.select(
-        "asset_id",
-        "kind",
-        F.round(F.element_at("features", 1), 6).alias("f0"),
-        F.round(F.element_at("features", 16), 6).alias("f15"),
-    )
-
-
-ORACLE_MULTIMODAL_FEATURES = """
-WITH a AS (
-  SELECT CAST(t.i AS BIGINT) AS asset_id,
-         CASE CAST(t.i % 3 AS INT) WHEN 0 THEN 'image' WHEN 1 THEN 'audio' ELSE 'video' END AS kind,
-         CAST(256 + (t.i * 37) % 512 AS INT) AS size
-  FROM range(64) t(i)
-),
-hx AS (
-  SELECT a.asset_id, a.kind, a.size,
-         substr(string_agg(md5('asset' || a.asset_id || ':' || j.j), '' ORDER BY j.j),
-                1, a.size * 2) AS hx
-  FROM a JOIN range(48) j(j) ON j.j * 16 < a.size
-  GROUP BY a.asset_id, a.kind, a.size
-)
-SELECT asset_id, kind,
-  round(len(list_filter(generate_series(1, size), k -> substr(hx, 2*k - 1, 1) = '0'))
-        * 1.0 / size, 6) AS f0,
-  round(len(list_filter(generate_series(1, size), k -> substr(hx, 2*k - 1, 1) = 'f'))
-        * 1.0 / size, 6) AS f15
-FROM hx
-"""
-
-
-def q_multimodal_frames(spark, sf_dir) -> DataFrame:
-    """Video frame sampling from metadata only — the column-pruned scan never
-    touches the binary payload (check ReadSchema if this ever regresses)."""
-    from rio_spark.operators.multimodal import sample_frames, synthetic_assets
-
-    return sample_frames(synthetic_assets(spark, n=64), every_ms=250)
-
-
-ORACLE_MULTIMODAL_FRAMES = """
-WITH v AS (
-  SELECT CAST(i AS BIGINT) AS asset_id, 1000 + i * 13 AS dur
-  FROM range(64) t(i) WHERE i % 3 = 2
-)
-SELECT asset_id, CAST(j AS INT) AS frame_idx, CAST(j * 250 AS INT) AS offset_ms
-FROM (SELECT asset_id,
-             unnest(generate_series(0, CAST(floor(dur / 250.0) AS INT))) AS j
-      FROM v)
-"""
-
-
-def q_multimodal_resize(spark, sf_dir) -> DataFrame:
-    """Aspect-preserving resize targets as column math over image metadata."""
-    from rio_spark.operators.multimodal import resize_meta, synthetic_assets
-
-    return resize_meta(synthetic_assets(spark, n=64), max_dim=64)
-
-
-ORACLE_MULTIMODAL_RESIZE = """
-WITH img AS (
-  SELECT CAST(i AS BIGINT) AS asset_id,
-         CAST(64 + i % 128 AS INT) AS width, CAST(48 + i % 96 AS INT) AS height
-  FROM range(64) t(i) WHERE i % 3 = 0
-)
-SELECT asset_id, width, height,
-       CAST(floor(width * least(64.0 / width, 64.0 / height, 1.0)) AS INT) AS target_width,
-       CAST(floor(height * least(64.0 / width, 64.0 / height, 1.0)) AS INT) AS target_height
-FROM img
-"""
 
 
 def q_kg_canonicalize(spark, sf_dir) -> DataFrame:
@@ -3372,572 +2456,6 @@ FROM per, tot
 """
 
 
-_PQ_SEEDS_SQL = """
-  SELECT list(embedding::DOUBLE[] ORDER BY vec_id) AS seeds
-  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)
-"""
-
-
-def _pq_code_sql(s: int, d: int = 16, k: int = 8) -> str:
-    """Subspace-s PQ code (0-based argmin, first index wins ties) — mirrors
-    similarity._pq_code_expr: round(-2 v_s.c + c.c, 6) over the k seeds'
-    s-th subvectors; DuckDB list slices are 1-based inclusive."""
-    a, b = s * d + 1, s * d + d
-    sub = f"(e.embedding::DOUBLE[])[{a}:{b}]"
-    dist = (
-        f"round(-2 * list_dot_product({sub}, cb.seeds[i][{a}:{b}])"
-        f" + list_dot_product(cb.seeds[i][{a}:{b}], cb.seeds[i][{a}:{b}]), 6)"
-    )
-    lst = f"list_transform(generate_series(1, {k}), i -> {dist})"
-    return f"(list_position({lst}, list_min({lst})) - 1)"
-
-
-def _pq_table_sql(s: int, d: int = 16, k: int = 8) -> str:
-    """ADC lookup table for subspace s: [round(||q_s - c||^2, 6)] over the k
-    codebook entries, in full q.q - 2 q.c + c.c form (the same term order
-    the Spark side's driver-computed literals use)."""
-    a, b = s * d + 1, s * d + d
-    qs = f"q.qv[{a}:{b}]"
-    cells = ", ".join(
-        f"round(list_dot_product({qs}, {qs})"
-        f" - 2 * list_dot_product({qs}, cb.seeds[{c}][{a}:{b}])"
-        f" + list_dot_product(cb.seeds[{c}][{a}:{b}], cb.seeds[{c}][{a}:{b}]), 6)"
-        for c in range(1, k + 1)
-    )
-    return f"[{cells}]"
-
-
-def q_sim_pq_codes(spark, sf_dir) -> DataFrame:
-    """Product-quantization encoding (similarity.py pq_encode): every
-    embedding compressed to m=4 subspace codes (k=8 centroids each — the
-    m-byte representation a billion-vector ANN index stores). One pure
-    projection; code emitted as a pipe-joined string for the oracle hash."""
-    from rio_spark.operators.similarity import pq_encode
-
-    codes = pq_encode(_embeddings(spark, sf_dir), m=4, k=8)
-    return codes.select(
-        "vec_id", F.concat_ws("|", F.col("code").cast("array<string>")).alias("code")
-    )
-
-
-ORACLE_SIM_PQ_CODES = f"""
-WITH cb AS ({_PQ_SEEDS_SQL})
-SELECT vec_id,
-       CAST({_pq_code_sql(0)} AS VARCHAR) || '|' || CAST({_pq_code_sql(1)} AS VARCHAR)
-       || '|' || CAST({_pq_code_sql(2)} AS VARCHAR) || '|' || CAST({_pq_code_sql(3)} AS VARCHAR)
-         AS code
-FROM embeddings e, cb
-"""
-
-
-def q_sim_pq_topk(spark, sf_dir) -> DataFrame:
-    """ADC top-k over PQ codes (similarity.py pq_topk): query = vec 0's
-    embedding, distance = sum of per-subspace lookup-table entries indexed
-    by the code — the scan touches only the compact codes, never the raw
-    vectors. Deterministic (distance, vec_id) ranking."""
-    from rio_spark.operators.similarity import pq_topk
-
-    emb = _embeddings(spark, sf_dir)
-    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    return pq_topk(emb, qv, topk=5, m=4, k=8)
-
-
-ORACLE_SIM_PQ_TOPK = f"""
-WITH cb AS ({_PQ_SEEDS_SQL}),
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-tb AS (
-  SELECT {_pq_table_sql(0)} AS t0, {_pq_table_sql(1)} AS t1,
-         {_pq_table_sql(2)} AS t2, {_pq_table_sql(3)} AS t3
-  FROM q, cb
-)
-SELECT e.vec_id,
-       round(tb.t0[{_pq_code_sql(0)} + 1] + tb.t1[{_pq_code_sql(1)} + 1]
-             + tb.t2[{_pq_code_sql(2)} + 1] + tb.t3[{_pq_code_sql(3)} + 1], 6)
-         AS adc_dist
-FROM embeddings e, cb, tb
-ORDER BY adc_dist ASC, e.vec_id ASC
-LIMIT 5
-"""
-
-
-def q_sim_ivfpq_topk(spark, sf_dir) -> DataFrame:
-    """IVF-PQ search (similarity.py ivf_pq_topk): coarse quantizer prunes
-    to the query's 2 nearest cells (pure filter), ADC over PQ codes ranks
-    the survivors — the composed billion-vector index shape. Query = vec
-    0's embedding; codebooks/centroids derive from the full set."""
-    from rio_spark.operators.similarity import ivf_pq_topk
-
-    emb = _embeddings(spark, sf_dir)
-    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    return ivf_pq_topk(emb, qv, topk=5, n_centroids=8, nprobe=2, m=4, k=8)
-
-
-# probed cells = the 2 smallest (rounded reduced-L2, index) pairs against
-# the 8 coarse centroids — 2-element-list sort is the (d, idx) struct order;
-# candidates filter on the IVF cell expression, ranking is the PQ ADC sum
-ORACLE_SIM_IVFPQ_TOPK = f"""
-WITH p AS ({_CENTROIDS8_SQL}),
-cb AS ({_PQ_SEEDS_SQL}),
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-probed AS (
-  SELECT list_transform(
-           list_sort(list_transform(generate_series(1, 8), i ->
-             [round(-2 * list_dot_product(q.qv, p.cents[i])
-                    + list_dot_product(p.cents[i], p.cents[i]), 6),
-              CAST(i - 1 AS DOUBLE)]))[1:2],
-           x -> CAST(x[2] AS INT)) AS cells
-  FROM q, p
-),
-tb AS (
-  SELECT {_pq_table_sql(0)} AS t0, {_pq_table_sql(1)} AS t1,
-         {_pq_table_sql(2)} AS t2, {_pq_table_sql(3)} AS t3
-  FROM q, cb
-)
-SELECT e.vec_id,
-       round(tb.t0[{_pq_code_sql(0)} + 1] + tb.t1[{_pq_code_sql(1)} + 1]
-             + tb.t2[{_pq_code_sql(2)} + 1] + tb.t3[{_pq_code_sql(3)} + 1], 6)
-         AS adc_dist
-FROM embeddings e, p, cb, tb, probed
-WHERE list_contains(probed.cells, CAST({_IVF_CELL_SQL} AS INT))
-ORDER BY adc_dist ASC, e.vec_id ASC
-LIMIT 5
-"""
-
-
-# -- round 6: trained PQ, residual IVF-PQ, and the recall gate ---------------
-
-
-def _pq_refined_ctes(s: int, d: int = 16) -> str:
-    """One Lloyd iteration of subspace ``s``'s PQ codebook as CTEs — the
-    exact per-subspace mirror of kmeans_refine (and of the IVF-refinement
-    oracle): assign codes with the seed codebook, per-(code, dim) AVG
-    rounded to 6 decimals so the distance INPUTS are bit-identical across
-    engines, surviving codes kept in ascending original-code order."""
-    a, b = s * d + 1, s * d + d
-    return f"""a{s} AS (
-  SELECT (e.embedding::DOUBLE[])[{a}:{b}] AS sub, {_pq_code_sql(s)} AS code
-  FROM embeddings e, cb
-),
-d{s} AS (
-  SELECT code, i, round(avg(x), 6) AS m FROM (
-    SELECT code, unnest(sub) AS x, generate_subscripts(sub, 1) AS i FROM a{s}
-  ) GROUP BY code, i
-),
-r{s} AS (SELECT code, list(m ORDER BY i) AS c FROM d{s} GROUP BY code),
-rc{s} AS (SELECT list(c ORDER BY code) AS cbs FROM r{s})"""
-
-
-def _pq_tcode_sql(s: int, d: int = 16) -> str:
-    """Subspace-s code against the REFINED codebook rc{s} (0-based argmin,
-    first index wins ties; codebook length is data-dependent after
-    empty-entry drops, hence generate_series over len)."""
-    a, b = s * d + 1, s * d + d
-    sub = f"(e.embedding::DOUBLE[])[{a}:{b}]"
-    dist = (
-        f"round(-2 * list_dot_product({sub}, rc{s}.cbs[i])"
-        f" + list_dot_product(rc{s}.cbs[i], rc{s}.cbs[i]), 6)"
-    )
-    lst = f"list_transform(generate_series(1, len(rc{s}.cbs)), i -> {dist})"
-    return f"(list_position({lst}, list_min({lst})) - 1)"
-
-
-def _pq_ttable_sql(s: int, d: int = 16) -> str:
-    """ADC lookup table for subspace s against the refined codebook."""
-    a, b = s * d + 1, s * d + d
-    qs = f"q.qv[{a}:{b}]"
-    dist = (
-        f"round(list_dot_product({qs}, {qs})"
-        f" - 2 * list_dot_product({qs}, rc{s}.cbs[i])"
-        f" + list_dot_product(rc{s}.cbs[i], rc{s}.cbs[i]), 6)"
-    )
-    return f"list_transform(generate_series(1, len(rc{s}.cbs)), i -> {dist})"
-
-
-def q_sim_pq_trained(spark, sf_dir) -> DataFrame:
-    """ADC top-k over LLOYD-TRAINED PQ codebooks (similarity.py
-    pq_codebooks(refine_iters=1) -> pq_topk): each subspace's codebook is
-    refined with the same distributed kernel IVF refinement uses, so codes
-    tile the data instead of echoing the seed vectors. Same plan shape as
-    sim_pq_topk — training only changes the driver-side literal tables."""
-    from rio_spark.operators.similarity import pq_codebooks, pq_topk
-
-    emb = _embeddings(spark, sf_dir)
-    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    cbs = pq_codebooks(emb, m=4, k=8, refine_iters=1)
-    return pq_topk(emb, qv, topk=5, m=4, k=8, codebooks=cbs)
-
-
-ORACLE_SIM_PQ_TRAINED = f"""
-WITH cb AS ({_PQ_SEEDS_SQL}),
-{_pq_refined_ctes(0)},
-{_pq_refined_ctes(1)},
-{_pq_refined_ctes(2)},
-{_pq_refined_ctes(3)},
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-tb AS (
-  SELECT {_pq_ttable_sql(0)} AS t0, {_pq_ttable_sql(1)} AS t1,
-         {_pq_ttable_sql(2)} AS t2, {_pq_ttable_sql(3)} AS t3
-  FROM q, rc0, rc1, rc2, rc3
-)
-SELECT e.vec_id,
-       round(tb.t0[{_pq_tcode_sql(0)} + 1] + tb.t1[{_pq_tcode_sql(1)} + 1]
-             + tb.t2[{_pq_tcode_sql(2)} + 1] + tb.t3[{_pq_tcode_sql(3)} + 1], 6)
-         AS adc_dist
-FROM embeddings e, rc0, rc1, rc2, rc3, tb
-ORDER BY adc_dist ASC, e.vec_id ASC
-LIMIT 5
-"""
-
-
-def _argmin_cell_sql(vec: str, cents: str = "ct.cents", n: int = 8) -> str:
-    """Nearest-centroid argmin (rounded reduced L2, first index wins) with
-    caller-chosen centroid CTE/alias — the composable form of
-    _IVF_CELL_SQL for oracles that hold several constant sets at once."""
-    dist = (
-        f"round(-2 * list_dot_product({vec}, {cents}[i])"
-        f" + list_dot_product({cents}[i], {cents}[i]), 6)"
-    )
-    lst = f"list_transform(generate_series(1, {n}), i -> {dist})"
-    return f"(list_position({lst}, list_min({lst})) - 1)"
-
-
-def _res_seed_code_sql(rowv: str, s: int, d: int = 16, k: int = 8) -> str:
-    """Subspace-s code of residual ``rowv`` against the residual SEED
-    codebooks rcb.seeds (full-length seed residuals, sliced here)."""
-    a, b = s * d + 1, s * d + d
-    sub = f"{rowv}[{a}:{b}]"
-    cb = f"rcb.seeds[i][{a}:{b}]"
-    dist = (
-        f"round(-2 * list_dot_product({sub}, {cb})"
-        f" + list_dot_product({cb}, {cb}), 6)"
-    )
-    lst = f"list_transform(generate_series(1, {k}), i -> {dist})"
-    return f"(list_position({lst}, list_min({lst})) - 1)"
-
-
-def _res_ref_code_sql(rowv: str, s: int, cbs: str, d: int = 16) -> str:
-    """Subspace-s code of residual ``rowv`` against a REFINED codebook
-    list ``cbs`` (data-dependent length after empty-entry drops)."""
-    a, b = s * d + 1, s * d + d
-    sub = f"{rowv}[{a}:{b}]"
-    dist = (
-        f"round(-2 * list_dot_product({sub}, {cbs}[i])"
-        f" + list_dot_product({cbs}[i], {cbs}[i]), 6)"
-    )
-    lst = f"list_transform(generate_series(1, len({cbs})), i -> {dist})"
-    return f"(list_position({lst}, list_min({lst})) - 1)"
-
-
-def _res_refine_iter_ctes(s: int, it: int, d: int = 16, k: int = 8) -> str:
-    """One Lloyd iteration of residual-PQ subspace ``s`` (iteration ``it``,
-    1-based) as CTEs — the residual mirror of _pq_refined_ctes: assign
-    codes over ALL rows' residuals (arr) with the previous codebooks
-    (rcb seeds for it=1, zc{s}_{it-1} after), per-(code, dim) AVG rounded
-    to 6 decimals, surviving codes kept in ascending order."""
-    a, b = s * d + 1, s * d + d
-    if it == 1:
-        code = _res_seed_code_sql("arr.rv", s, d, k)
-        src = "arr, rcb"
-    else:
-        code = _res_ref_code_sql("arr.rv", s, f"zc{s}_{it - 1}.cbs", d)
-        src = f"arr, zc{s}_{it - 1}"
-    return f"""za{s}_{it} AS (
-  SELECT arr.rv[{a}:{b}] AS sub, {code} AS code FROM {src}
-),
-zd{s}_{it} AS (
-  SELECT code, i, round(avg(x), 6) AS m FROM (
-    SELECT code, unnest(sub) AS x, generate_subscripts(sub, 1) AS i FROM za{s}_{it}
-  ) GROUP BY code, i
-),
-zr{s}_{it} AS (SELECT code, list(m ORDER BY i) AS c FROM zd{s}_{it} GROUP BY code),
-zc{s}_{it} AS (SELECT list(c ORDER BY code) AS cbs FROM zr{s}_{it})"""
-
-
-_RES_ITERS = 2  # matches refine_iters=2 in the residual catalog queries
-
-
-def _res_table_sql(s: int, d: int = 16) -> str:
-    """Per-probed-cell ADC table for subspace s over the query residual
-    qr.qrv against the REFINED codebooks (full q.q - 2 q.c + c.c form,
-    matching the Spark driver literals)."""
-    a, b = s * d + 1, s * d + d
-    qs = f"qr.qrv[{a}:{b}]"
-    cbs = f"zc{s}_{_RES_ITERS}.cbs"
-    dist = (
-        f"round(list_dot_product({qs}, {qs})"
-        f" - 2 * list_dot_product({qs}, {cbs}[i])"
-        f" + list_dot_product({cbs}[i], {cbs}[i]), 6)"
-    )
-    return f"list_transform(generate_series(1, len({cbs})), i -> {dist})"
-
-
-# shared CTE body: residual seed codebooks + per-row cells/residuals +
-# probed cells + per-cell query-residual ADC tables (used by both the
-# residual top-k oracle and the recall oracle)
-_RESIDUAL_CTES = f"""sd AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings ORDER BY vec_id LIMIT 8 OFFSET 8),
-sdc AS (SELECT sd.vec_id, sd.v, {_argmin_cell_sql("sd.v")} AS cell FROM sd, ct),
-sre AS (
-  SELECT sdc.vec_id,
-         list_transform(generate_series(1, len(sdc.v)),
-                        j -> sdc.v[j] - ct.cents[sdc.cell + 1][j]) AS rv
-  FROM sdc, ct
-),
-rcb AS (SELECT list(rv ORDER BY vec_id) AS seeds FROM sre),
-rprobed AS (
-  SELECT list_transform(
-           list_sort(list_transform(generate_series(1, 8), i ->
-             [round(-2 * list_dot_product(q.qv, ct.cents[i])
-                    + list_dot_product(ct.cents[i], ct.cents[i]), 6),
-              CAST(i - 1 AS DOUBLE)]))[1:2],
-           x -> CAST(x[2] AS INT)) AS cells
-  FROM q, ct
-),
-rec AS (
-  SELECT e.vec_id, e.embedding::DOUBLE[] AS v,
-         CAST({_argmin_cell_sql("e.embedding::DOUBLE[]")} AS INT) AS cell
-  FROM embeddings e, ct
-),
-arr AS (
-  SELECT rec.vec_id,
-         list_transform(generate_series(1, len(rec.v)),
-                        j -> rec.v[j] - ct.cents[rec.cell + 1][j]) AS rv
-  FROM rec, ct
-),
-{_res_refine_iter_ctes(0, 1)},
-{_res_refine_iter_ctes(1, 1)},
-{_res_refine_iter_ctes(2, 1)},
-{_res_refine_iter_ctes(3, 1)},
-{_res_refine_iter_ctes(0, 2)},
-{_res_refine_iter_ctes(1, 2)},
-{_res_refine_iter_ctes(2, 2)},
-{_res_refine_iter_ctes(3, 2)},
-er AS (
-  SELECT rec.vec_id, rec.cell,
-         list_transform(generate_series(1, len(rec.v)),
-                        j -> rec.v[j] - ct.cents[rec.cell + 1][j]) AS rv
-  FROM rec, ct, rprobed
-  WHERE list_contains(rprobed.cells, rec.cell)
-),
-qr AS (
-  SELECT pc.cell,
-         list_transform(generate_series(1, len(q.qv)),
-                        j -> q.qv[j] - ct.cents[pc.cell + 1][j]) AS qrv
-  FROM (SELECT unnest(cells) AS cell FROM rprobed) pc, ct, q
-),
-rtb AS (
-  SELECT qr.cell, {_res_table_sql(0)} AS t0, {_res_table_sql(1)} AS t1,
-         {_res_table_sql(2)} AS t2, {_res_table_sql(3)} AS t3
-  FROM qr, {", ".join(f"zc{s}_{_RES_ITERS}" for s in range(4))}
-)"""
-
-# the probed rows' codes are assigned against the REFINED codebooks — the
-# same tables rtb was built from (seed-coded rows against refined tables
-# would silently mis-index once refinement drops an empty entry)
-_RESIDUAL_DIST_SQL = "round(" + " + ".join(
-    f"rtb.t{s}[{_res_ref_code_sql('er.rv', s, f'zc{s}_{_RES_ITERS}.cbs')} + 1]"
-    for s in range(4)
-) + ", 6)"
-
-_RESIDUAL_FROM = ", ".join(f"zc{s}_{_RES_ITERS}" for s in range(4))
-
-
-def q_sim_ivfpq_residual(spark, sf_dir) -> DataFrame:
-    """Residual IVF-PQ (similarity.py ivf_pq_residual_topk): PQ codes
-    quantize v - centroid[cell] — residuals concentrate around the origin,
-    so one shared codebook set covers them far better than raw vectors
-    (the faiss IVFPQ default). Same cost shape as the non-residual
-    variant: cell filter, projection-only encode, per-probed-cell ADC
-    tables as bounded driver constants."""
-    from rio_spark.operators.similarity import ivf_pq_residual_topk
-
-    emb = _embeddings(spark, sf_dir)
-    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    return ivf_pq_residual_topk(
-        emb, qv, topk=5, n_centroids=8, nprobe=2, m=4, k=8, refine_iters=2)
-
-
-ORACLE_SIM_IVFPQ_RESIDUAL = f"""
-WITH ct AS ({_CENTROIDS8_SQL}),
-q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-{_RESIDUAL_CTES}
-SELECT er.vec_id, {_RESIDUAL_DIST_SQL} AS adc_dist
-FROM er, rtb, {_RESIDUAL_FROM}
-WHERE er.cell = rtb.cell
-ORDER BY adc_dist ASC, er.vec_id ASC
-LIMIT 5
-"""
-
-
-def q_sim_ann_recall(spark, sf_dir) -> DataFrame:
-    """Recall@10 of EVERY ANN path against the brute-force ground truth —
-    the falsifiability gate for the whole similarity stack (an ANN index
-    without a recall number is unfalsifiable). Paths: LSH bucket filter,
-    IVF (nprobe=2), PQ-ADC with seed codebooks, PQ-ADC with Lloyd-trained
-    codebooks, IVF-PQ (non-residual), IVF-PQ residual. One row per path:
-    (path, n_returned, hits, recall); ground truth is topk_cosine@10, the
-    join is a broadcast of the 10-row truth set."""
-    from functools import reduce
-
-    from rio_spark.operators.similarity import (
-        ann_topk_lsh,
-        ivf_pq_residual_topk,
-        ivf_pq_topk,
-        ivf_topk,
-        pq_codebooks,
-        pq_topk,
-        topk_cosine,
-    )
-
-    emb = _embeddings(spark, sf_dir)
-    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
-    gt = topk_cosine(emb, qv, 10).select("vec_id", F.lit(1).alias("_hit"))
-    paths = {
-        "lsh": ann_topk_lsh(emb, qv, k=10, n_planes=4),
-        "ivf": ivf_topk(emb, qv, k=10, n_centroids=8, nprobe=2),
-        "pq": pq_topk(emb, qv, topk=10, m=4, k=8),
-        "pq_trained": pq_topk(
-            emb, qv, topk=10, m=4, k=8,
-            codebooks=pq_codebooks(emb, m=4, k=8, refine_iters=1),
-        ),
-        "ivfpq": ivf_pq_topk(emb, qv, topk=10, n_centroids=8, nprobe=2, m=4, k=8),
-        "ivfpq_res": ivf_pq_residual_topk(
-            emb, qv, topk=10, n_centroids=8, nprobe=2, m=4, k=8, refine_iters=2
-        ),
-    }
-    cand = reduce(
-        DataFrame.union,
-        [df.select(F.lit(name).alias("path"), "vec_id") for name, df in paths.items()],
-    )
-    return (
-        cand.join(F.broadcast(gt), "vec_id", "left")
-        .groupBy("path")
-        .agg(
-            F.count("*").alias("n_returned"),
-            F.count("_hit").alias("hits"),
-            F.round(F.count("_hit") / 10.0, 4).alias("recall"),
-        )
-    )
-
-
-ORACLE_SIM_ANN_RECALL = f"""
-WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
-gt AS (
-  SELECT vec_id
-  FROM embeddings e, q
-  ORDER BY round(list_dot_product(e.embedding::DOUBLE[], q.qv)
-                 / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-                    * sqrt(list_dot_product(q.qv, q.qv))), 4) DESC, vec_id ASC
-  LIMIT 10
-),
-p AS ({_PLANES_SQL}),
-qb AS (
-  SELECT
-    (CASE WHEN list_dot_product(q.qv, p.planes[1]) >= 0 THEN '1' ELSE '0' END)
-    || (CASE WHEN list_dot_product(q.qv, p.planes[2]) >= 0 THEN '1' ELSE '0' END)
-    || (CASE WHEN list_dot_product(q.qv, p.planes[3]) >= 0 THEN '1' ELSE '0' END)
-    || (CASE WHEN list_dot_product(q.qv, p.planes[4]) >= 0 THEN '1' ELSE '0' END) AS qbits
-  FROM q, p
-),
-lsh AS (
-  SELECT vec_id
-  FROM embeddings e, p, q, qb
-  WHERE {_BUCKET4_SQL} = qb.qbits
-  ORDER BY round(list_dot_product(e.embedding::DOUBLE[], q.qv)
-                 / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-                    * sqrt(list_dot_product(q.qv, q.qv))), 4) DESC, vec_id ASC
-  LIMIT 10
-),
-ct AS ({_CENTROIDS8_SQL}),
-iprobed AS (
-  SELECT list_transform(
-           list_sort(list_transform(generate_series(1, 8), i ->
-             [round(list_sum(list_transform(generate_series(1, len(q.qv)),
-                    j -> (q.qv[j] - ct.cents[i][j]) * (q.qv[j] - ct.cents[i][j]))), 6),
-              CAST(i - 1 AS DOUBLE)]))[1:2],
-           x -> CAST(x[2] AS INT)) AS cells
-  FROM q, ct
-),
-ivf AS (
-  SELECT vec_id
-  FROM embeddings e, ct, q, iprobed
-  WHERE list_contains(iprobed.cells, CAST({_argmin_cell_sql("e.embedding::DOUBLE[]")} AS INT))
-  ORDER BY round(list_dot_product(e.embedding::DOUBLE[], q.qv)
-                 / (sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[]))
-                    * sqrt(list_dot_product(q.qv, q.qv))), 4) DESC, vec_id ASC
-  LIMIT 10
-),
-cb AS ({_PQ_SEEDS_SQL}),
-stb AS (
-  SELECT {_pq_table_sql(0)} AS t0, {_pq_table_sql(1)} AS t1,
-         {_pq_table_sql(2)} AS t2, {_pq_table_sql(3)} AS t3
-  FROM q, cb
-),
-pq AS (
-  SELECT e.vec_id
-  FROM embeddings e, cb, stb
-  ORDER BY round(stb.t0[{_pq_code_sql(0)} + 1] + stb.t1[{_pq_code_sql(1)} + 1]
-                 + stb.t2[{_pq_code_sql(2)} + 1] + stb.t3[{_pq_code_sql(3)} + 1], 6) ASC,
-           e.vec_id ASC
-  LIMIT 10
-),
-{_pq_refined_ctes(0)},
-{_pq_refined_ctes(1)},
-{_pq_refined_ctes(2)},
-{_pq_refined_ctes(3)},
-ttb AS (
-  SELECT {_pq_ttable_sql(0)} AS t0, {_pq_ttable_sql(1)} AS t1,
-         {_pq_ttable_sql(2)} AS t2, {_pq_ttable_sql(3)} AS t3
-  FROM q, rc0, rc1, rc2, rc3
-),
-pqt AS (
-  SELECT e.vec_id
-  FROM embeddings e, rc0, rc1, rc2, rc3, ttb
-  ORDER BY round(ttb.t0[{_pq_tcode_sql(0)} + 1] + ttb.t1[{_pq_tcode_sql(1)} + 1]
-                 + ttb.t2[{_pq_tcode_sql(2)} + 1] + ttb.t3[{_pq_tcode_sql(3)} + 1], 6) ASC,
-           e.vec_id ASC
-  LIMIT 10
-),
-nprobed AS (
-  SELECT list_transform(
-           list_sort(list_transform(generate_series(1, 8), i ->
-             [round(-2 * list_dot_product(q.qv, ct.cents[i])
-                    + list_dot_product(ct.cents[i], ct.cents[i]), 6),
-              CAST(i - 1 AS DOUBLE)]))[1:2],
-           x -> CAST(x[2] AS INT)) AS cells
-  FROM q, ct
-),
-ivfpq AS (
-  SELECT e.vec_id
-  FROM embeddings e, ct, cb, stb, nprobed
-  WHERE list_contains(nprobed.cells, CAST({_argmin_cell_sql("e.embedding::DOUBLE[]")} AS INT))
-  ORDER BY round(stb.t0[{_pq_code_sql(0)} + 1] + stb.t1[{_pq_code_sql(1)} + 1]
-                 + stb.t2[{_pq_code_sql(2)} + 1] + stb.t3[{_pq_code_sql(3)} + 1], 6) ASC,
-           e.vec_id ASC
-  LIMIT 10
-),
-{_RESIDUAL_CTES},
-res AS (
-  SELECT er.vec_id
-  FROM er, rtb, {_RESIDUAL_FROM}
-  WHERE er.cell = rtb.cell
-  ORDER BY {_RESIDUAL_DIST_SQL} ASC, er.vec_id ASC
-  LIMIT 10
-),
-cand AS (
-  SELECT 'lsh' AS path, vec_id FROM lsh
-  UNION ALL SELECT 'ivf' AS path, vec_id FROM ivf
-  UNION ALL SELECT 'pq' AS path, vec_id FROM pq
-  UNION ALL SELECT 'pq_trained' AS path, vec_id FROM pqt
-  UNION ALL SELECT 'ivfpq' AS path, vec_id FROM ivfpq
-  UNION ALL SELECT 'ivfpq_res' AS path, vec_id FROM res
-)
-SELECT cand.path, count(*) AS n_returned, count(gt.vec_id) AS hits,
-       round(count(gt.vec_id) / 10.0, 4) AS recall
-FROM cand LEFT JOIN gt ON cand.vec_id = gt.vec_id
-GROUP BY cand.path
-"""
-
-
 # Dict ORDER is load-bearing: the correctness driver checks at most the
 # FIRST 50 entries in insertion order (observed: CORRECTNESS_r02's 50 rows
 # are exactly queries()[0:50] of the round-2 ordering — an exact
@@ -3945,39 +2463,26 @@ GROUP BY cand.path
 # policy: any query that has never had a driver row, plus queries new this
 # round, go in the first 50; the tail (>50) holds only queries already
 # driver-green in a previous round, so the UNION of rounds covers every
-# query with a green driver row. All 60+ run in the local full-value parity
+# query with a green driver row. All 65 run in the local full-value parity
 # suite (tests/test_oracle_parity.py) every round regardless of position.
 QUERIES = {
-    # -- round-7 window [0:50): the mechanical rotation the r6 verdict
-    # requires — exactly the 50 queries whose newest driver row is
+    # -- round-7 rotation: the queries whose newest driver row is
     # round-5 vintage (the former tail), so a prefix-50 correctness
-    # window leaves every catalog query at most one round old.
+    # window leaves every catalog query at most one round old.  The
+    # window [0:50) also covers the head of the round-6 tail below.
     # Entry CONTENTS are unchanged this round (r7 is the optimization
     # round: every restructured query was re-proved against its frozen
     # oracle; see OPTIMIZATION_r07.md). ---------------------------------
     "dedup_decontaminate": q_dedup_decontaminate,
     "kg_kcore_fixpoint": q_kg_kcore_fixpoint,
-    "streaming_join_capped": q_streaming_join_capped,
     "sim_dup_groups": q_sim_dup_groups,
     "corpus_mix": q_corpus_mix,
     "streaming_materialize": q_streaming_materialize,
-    "sim_pq_codes": q_sim_pq_codes,
-    "sim_pq_topk": q_sim_pq_topk,
-    "sim_ivfpq_topk": q_sim_ivfpq_topk,
     "dedup_minhash": q_dedup_minhash,
     "dedup_near_groups": q_dedup_near_groups,
     "text_pack_batches": q_text_pack_batches,
-    "events_asof": q_events_asof,
     "streaming_dedup": q_streaming_dedup,
-    "streaming_enrich": q_streaming_enrich,
-    "multimodal_features": q_multimodal_features,
-    "streaming_tumbling": q_streaming_tumbling,
-    "streaming_sessions": q_streaming_sessions,
     "streaming_kg_extract": q_streaming_kg_extract,
-    "multimodal_frames": q_multimodal_frames,
-    "multimodal_resize": q_multimodal_resize,
-    "orders_semi": q_orders_semi,
-    "customers_anti": q_customers_anti,
     "kg_extract_rdfxml": q_kg_extract_rdfxml,
     "kg_extract_nquads": q_kg_extract_nquads,
     "kg_extract_trig": q_kg_extract_trig,
@@ -3996,21 +2501,15 @@ QUERIES = {
     "text_vocab": q_text_vocab,
     "text_tfidf": q_text_tfidf,
     "text_ngrams": q_text_ngrams,
-    "events_quantiles": q_events_quantiles,
     "kg_triangles": q_kg_triangles,
     "kg_degree_stats": q_kg_degree_stats,
     "kg_communities": q_kg_communities,
     "kg_reachability": q_kg_reachability,
-    "events_funnel": q_events_funnel,
     "kg_cc_incremental": q_kg_cc_incremental,
     "kg_pagerank_conserve": q_kg_pagerank_conserve,
     "corpus_clean_e2e": q_corpus_clean_e2e,
-    # -- TAIL [50:]: driver-green in round 6 (CORRECTNESS_r06);
+    # -- round-6 tail: driver-green in round 6 (CORRECTNESS_r06);
     # freshness enforced by tests/test_oracle_parity.py. ----------------
-    "sim_pq_trained": q_sim_pq_trained,
-    "sim_ivfpq_residual": q_sim_ivfpq_residual,
-    "sim_ann_recall": q_sim_ann_recall,
-    "streaming_join": q_streaming_join,
     "kg_bgp_star": q_kg_bgp_star,
     "kg_pagerank": q_kg_pagerank,
     "kg_pipeline_e2e": q_kg_pipeline_e2e,
@@ -4021,9 +2520,7 @@ QUERIES = {
     "dedup_exact": q_dedup_exact,
     "dedup_lsh_pairs": q_dedup_lsh_pairs,
     "text_repetition": q_text_repetition,
-    "events_retention": q_events_retention,
     "kg_kcore": q_kg_kcore,
-    "events_trailing": q_events_trailing,
     "kg_common_neighbors": q_kg_common_neighbors,
     "kg_error_stats": q_kg_error_stats,
     "kg_format_ntriples": q_kg_format_ntriples,
@@ -4036,20 +2533,6 @@ QUERIES = {
     "sim_pairs_lsh": q_sim_pairs_lsh,
     "sim_ann_topk": q_sim_ann_topk,
     "sim_lsh_buckets": q_sim_lsh_buckets,
-    "sim_ivf_cells": q_sim_ivf_cells,
-    "sim_ivf_refined": q_sim_ivf_refined,
-    "sim_ivf_topk": q_sim_ivf_topk,
-    "tpch_q1": q_tpch_q1,
-    "tpch_q3": q_tpch_q3,
-    "tpch_q5": q_tpch_q5,
-    "tpch_q6": q_tpch_q6,
-    "tpch_rollup": q_tpch_rollup,
-    "tpch_pivot": q_tpch_pivot,
-    "window_topk": q_window_topk,
-    "events_sessionize": q_events_sessionize,
-    "events_tumbling": q_events_tumbling,
-    "events_json_props": q_events_json_props,
-    "events_distinct_users": q_events_distinct_users,
     "text_tokens": q_text_tokens,
     "text_langid": q_text_langid,
     "text_quality": q_text_quality,
@@ -4060,18 +2543,11 @@ QUERIES = {
 }
 
 ORACLES = {
-    "sim_pq_trained": ORACLE_SIM_PQ_TRAINED,
-    "sim_ivfpq_residual": ORACLE_SIM_IVFPQ_RESIDUAL,
-    "sim_ann_recall": ORACLE_SIM_ANN_RECALL,
     "dedup_decontaminate": ORACLE_DEDUP_DECONTAMINATE,
     "kg_kcore_fixpoint": ORACLE_KG_KCORE_FIXPOINT,
-    "streaming_join_capped": ORACLE_STREAMING_JOIN_CAPPED,
     "sim_dup_groups": ORACLE_SIM_DUP_GROUPS,
     "corpus_mix": _oracle_corpus_mix(),
     "streaming_materialize": ORACLE_STREAMING_MATERIALIZE,
-    "sim_pq_codes": ORACLE_SIM_PQ_CODES,
-    "sim_pq_topk": ORACLE_SIM_PQ_TOPK,
-    "sim_ivfpq_topk": ORACLE_SIM_IVFPQ_TOPK,
     "kg_extract_nt": ORACLE_KG_EXTRACT_NT,
     "kg_extract_turtle": ORACLE_KG_EXTRACT_TURTLE,
     "kg_extract_rdfxml": ORACLE_KG_EXTRACT_RDFXML,
@@ -4107,21 +2583,16 @@ ORACLES = {
     "text_tfidf": ORACLE_TEXT_TFIDF,
     "text_ngrams": ORACLE_TEXT_NGRAMS,
     "text_pack_batches": ORACLE_TEXT_PACK_BATCHES,
-    "events_quantiles": ORACLE_EVENTS_QUANTILES,
     "kg_bgp_star": ORACLE_KG_BGP_STAR,
     "kg_triangles": ORACLE_KG_TRIANGLES,
     "kg_degree_stats": ORACLE_KG_DEGREE_STATS,
     "kg_communities": ORACLE_KG_COMMUNITIES,
     "kg_reachability": ORACLE_KG_REACHABILITY,
     "corpus_clean_e2e": _oracle_corpus_clean(),
-    "events_funnel": ORACLE_EVENTS_FUNNEL,
     "kg_pagerank": ORACLE_KG_PAGERANK,
     "kg_pagerank_conserve": ORACLE_KG_PAGERANK_CONSERVE,
-    "streaming_join": ORACLE_STREAMING_JOIN,
     "text_repetition": ORACLE_TEXT_REPETITION,
-    "events_retention": ORACLE_EVENTS_RETENTION,
     "kg_kcore": ORACLE_KG_KCORE,
-    "events_trailing": ORACLE_EVENTS_TRAILING,
     "kg_common_neighbors": ORACLE_KG_COMMON_NEIGHBORS,
     "kg_error_stats": ORACLE_KG_ERROR_STATS,
     "kg_cc_incremental": ORACLE_KG_CC_INCREMENTAL,
@@ -4135,29 +2606,6 @@ ORACLES = {
     "sim_pairs_lsh": ORACLE_SIM_PAIRS_LSH,
     "sim_ann_topk": ORACLE_SIM_ANN_TOPK,
     "sim_lsh_buckets": ORACLE_SIM_LSH_BUCKETS,
-    "sim_ivf_cells": ORACLE_SIM_IVF_CELLS,
-    "sim_ivf_refined": ORACLE_SIM_IVF_REFINED,
-    "sim_ivf_topk": ORACLE_SIM_IVF_TOPK,
-    "tpch_q1": ORACLE_TPCH_Q1,
-    "tpch_q3": ORACLE_TPCH_Q3,
-    "tpch_q5": ORACLE_TPCH_Q5,
-    "tpch_q6": ORACLE_TPCH_Q6,
-    "window_topk": ORACLE_WINDOW_TOPK,
-    "events_sessionize": ORACLE_EVENTS_SESSIONIZE,
-    "events_tumbling": ORACLE_EVENTS_TUMBLING,
-    "events_json_props": ORACLE_EVENTS_JSON_PROPS,
-    "events_distinct_users": ORACLE_EVENTS_DISTINCT_USERS,
-    "tpch_rollup": ORACLE_TPCH_ROLLUP,
-    "tpch_pivot": ORACLE_TPCH_PIVOT,
-    "orders_semi": ORACLE_ORDERS_SEMI,
-    "customers_anti": ORACLE_CUSTOMERS_ANTI,
-    "events_asof": ORACLE_EVENTS_ASOF,
     "streaming_dedup": ORACLE_STREAMING_DEDUP,
-    "streaming_tumbling": ORACLE_STREAMING_TUMBLING,
-    "streaming_sessions": ORACLE_STREAMING_SESSIONS,
     "streaming_kg_extract": ORACLE_STREAMING_KG_EXTRACT,
-    "streaming_enrich": ORACLE_STREAMING_ENRICH,
-    "multimodal_features": ORACLE_MULTIMODAL_FEATURES,
-    "multimodal_frames": ORACLE_MULTIMODAL_FRAMES,
-    "multimodal_resize": ORACLE_MULTIMODAL_RESIZE,
 }

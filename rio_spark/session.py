@@ -13,6 +13,33 @@ from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
+MAX_HEAP_GB = 16
+
+
+def heap_for_host(meminfo: str) -> str:
+    """Driver heap for a host, from the text of its ``/proc/meminfo``: half
+    of ``MemAvailable`` (the Python workers and the page cache need the
+    rest), in whole GB, at least 1g and at most 16g."""
+    for line in meminfo.splitlines():
+        if line.startswith("MemAvailable:"):
+            kb = int(line.split()[1])
+            return f"{max(1, min(MAX_HEAP_GB, kb // (2 << 20)))}g"
+    raise ValueError("meminfo has no MemAvailable line")
+
+
+def _driver_mem() -> str:
+    mem = os.environ.get("RIO_SPARK_DRIVER_MEM")
+    if mem:
+        return mem
+    try:
+        with open("/proc/meminfo") as f:
+            return heap_for_host(f.read())
+    except (OSError, ValueError) as e:
+        raise RuntimeError(
+            f"cannot size the driver heap from /proc/meminfo ({e}); "
+            "set RIO_SPARK_DRIVER_MEM, e.g. RIO_SPARK_DRIVER_MEM=4g"
+        ) from e
+
 
 def get_spark(
     app_name: str = "rio_spark",
@@ -20,7 +47,8 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
+    mem = _driver_mem()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -40,16 +68,13 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         # local mode = driver-only: the heap serves all executor threads.
         # FIXED-size heap (Xms=Xmx): heap growth means host page-allocation
-        # churn (this sandbox is a microVM where page faults are costly) and
-        # produced 2-8x run-to-run variance at 32 cores; a pre-sized 16g heap
-        # is stable and fast. Undersized (8g) throttles wide runs via GC.
-        .config("spark.driver.memory", os.environ.get("RIO_SPARK_DRIVER_MEM", "16g"))
+        # churn (on a microVM page faults are costly) and produced 2-8x
+        # run-to-run variance at 32 cores; a pre-sized heap is stable and
+        # fast. Sized from the host (heap_for_host): a fixed 16g cannot
+        # start on a 15 GB host; 8g throttled 32-core runs via GC.
+        .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
-        .config(
-            "spark.driver.extraJavaOptions",
-            "-Djava.io.tmpdir=/tmp -Xms"
-            + os.environ.get("RIO_SPARK_DRIVER_MEM", "16g"),
-        )
+        .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp -Xms" + mem)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

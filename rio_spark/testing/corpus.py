@@ -8,12 +8,14 @@ serd-tests/*/manifest.ttl are excluded there too). These are DATA files, used
 as oracle inputs; the parsers themselves are original (SURVEY.md §5).
 
 Falls back to a small built-in corpus when the reference checkout is absent,
-so the repo's tests stay runnable standalone.
+so the repo's tests stay runnable standalone; the fallback warns and names
+what is missing.
 """
 
 from __future__ import annotations
 
 import re
+import warnings
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -240,5 +242,32 @@ _BUILTIN: list[ConformanceDoc] = [
 ]
 
 
+REFERENCE_SUITES = ("serd-tests", "rio-tests")
+
+
+def missing_suites() -> list[str]:
+    """The reference suite directories that are absent on this host."""
+    return [
+        str(REFERENCE_TESTSUITE / s)
+        for s in REFERENCE_SUITES
+        if not (REFERENCE_TESTSUITE / s).exists()
+    ]
+
+
+def describe_corpus(docs: list[ConformanceDoc]) -> str:
+    missing = missing_suites()
+    if not missing:
+        return f"{len(docs)} documents (built-in + {' + '.join(REFERENCE_SUITES)})"
+    return f"{len(docs)} documents (missing: {', '.join(missing)})"
+
+
 def load_corpus() -> list[ConformanceDoc]:
-    return _BUILTIN + load_serd_corpus() + load_rio_corpus()
+    """The built-in documents plus the reference's serd and rio suites.  A
+    missing suite is not an error, but it is never silent: the call warns
+    with each missing directory and the number of documents loaded."""
+    docs = _BUILTIN + load_serd_corpus() + load_rio_corpus()
+    if missing_suites():
+        warnings.warn(
+            f"conformance corpus incomplete: {describe_corpus(docs)}", stacklevel=2
+        )
+    return docs

@@ -5,5 +5,15 @@ import pytest
 def spark():
     from rio_spark.session import get_spark
 
-    s = get_spark(app_name="rio_spark_tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="rio_spark_tests", shuffle_partitions=8)
     yield s
+
+
+def pytest_report_header(config):
+    import warnings
+
+    from rio_spark.testing.corpus import describe_corpus, load_corpus
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        return f"conformance corpus: {describe_corpus(load_corpus())}"

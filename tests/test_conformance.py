@@ -19,10 +19,11 @@ from rio_spark.kernels import (
     parse_turtle,
 )
 from rio_spark.model import serialize_triples
-from rio_spark.testing.corpus import load_corpus
+from rio_spark.testing.corpus import describe_corpus, load_corpus
 from rio_spark.testing.isomorphism import are_isomorphic, precision_recall
 
-CORPUS = load_corpus()
+CORPUS = load_corpus()  # warns, naming what is missing, without the reference
+ON_CORPUS = f"on {describe_corpus(CORPUS)}"
 PARSERS = {
     "nt": lambda body, base: parse_ntriples(body),
     "nq": lambda body, base: parse_nquads(body),
@@ -74,9 +75,11 @@ def test_aggregate_precision_recall_gate():
         tp_like += (p + r) / 2
         if p < 1.0 or r < 1.0:
             worst.append((doc.name, p, r))
-    assert n_docs > 0
-    assert tp_like / n_docs >= 0.95, f"aggregate P/R gate failed; worst: {worst[:10]}"
-    assert not worst, f"per-doc P/R below 1.0: {worst[:10]}"
+    assert n_docs > 0, f"no eval documents {ON_CORPUS}"
+    assert tp_like / n_docs >= 0.95, (
+        f"aggregate P/R gate failed {ON_CORPUS}; worst: {worst[:10]}"
+    )
+    assert not worst, f"per-doc P/R below 1.0 {ON_CORPUS}: {worst[:10]}"
 
 
 def test_xml_literal_source_form_capture():
@@ -107,3 +110,16 @@ def test_xml_literal_source_form_capture():
     assert o == (
         f'"{want}"^^<http://www.w3.org/1999/02/22-rdf-syntax-ns#XMLLiteral>'
     )
+
+
+def test_missing_reference_corpus_warns(monkeypatch, tmp_path):
+    from rio_spark.testing import corpus
+
+    absent = tmp_path / "absent"
+    monkeypatch.setattr(corpus, "REFERENCE_TESTSUITE", absent)
+    with pytest.warns(UserWarning) as rec:
+        docs = corpus.load_corpus()
+    msg = str(rec[0].message)
+    assert str(absent / "serd-tests") in msg
+    assert str(absent / "rio-tests") in msg
+    assert f"{len(docs)} documents" in msg

@@ -94,28 +94,6 @@ def test_k_core_cascades(spark):
     assert after2 == [("a", "b"), ("a", "c"), ("b", "c")]
 
 
-def test_cohort_retention_hand_case(spark):
-    """Two users: u1 active weeks 0 and 1, u2 only week 1 -> u1's cohort has
-    one user at offsets 0 and 1; u2's cohort (week 1) one user at offset 0."""
-    from datetime import datetime
-
-    from rio_spark.operators.sessions import cohort_retention
-
-    w0 = datetime(2024, 1, 4)  # both fall in distinct epoch-weeks
-    w1 = datetime(2024, 1, 11)
-    ev = spark.createDataFrame(
-        [(1, w0), (1, w0), (1, w1), (2, w1)], "user_id long, ts timestamp"
-    )
-    got = {
-        (r["cohort_week"] , r["week_offset"]): r["n_users"]
-        for r in cohort_retention(ev).collect()
-    }
-    weeks = sorted({w for w, _ in got})
-    base = weeks[0]
-    norm = {(w - base, o): n for (w, o), n in got.items()}
-    assert norm == {(0, 0): 1, (0, 1): 1, (1, 0): 1}
-
-
 def test_k_core_fixpoint_converges_past_any_fixed_budget(spark):
     """rounds=None peels a long pendant chain to the true 2-core: a
     10-link tail off a triangle needs ~10 rounds (one link per round) —

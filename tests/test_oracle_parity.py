@@ -35,7 +35,7 @@ def test_query_matches_oracle(spark, duck, name):
 def test_all_queries_have_callables():
     for name in ORACLES:
         assert name in QUERIES
-    # round 2: every query has an oracle (multimodal included)
+    # every query has an oracle
     assert set(QUERIES) == set(ORACLES)
 
 

@@ -1,14 +1,8 @@
-"""r7 optimization gate for cc_incremental's scan-only mode: the
-batch-scale formulation (labels semi-reduced to touched endpoints,
-broadcast lookups, new nodes derived from the lookup misses instead of an
-anti-join against the full labeling) must be row-identical to the classic
-join formulation (the default — faster at bench scale, impossible past
-the broadcast cap) and to the from-scratch recompute. Cases cover every
-branch of the new-node derivation: endpoints with old labels, genuinely
-new endpoints, new-new edges forming their own component, bridges merging
-two old components, and untouched old components."""
-
-import pytest
+"""cc_incremental must be row-identical to the from-scratch recompute.
+The hand case covers every branch of the new-node derivation: endpoints
+with old labels, genuinely new endpoints, new-new edges forming their own
+component, bridges merging two old components, and untouched old
+components."""
 
 from rio_spark.operators.canonicalize import cc_incremental, connected_components
 
@@ -17,7 +11,7 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_scan_only_matches_classic_and_scratch(spark):
+def test_incremental_matches_scratch(spark):
     # old graph: components {a1,a2,a3}, {b1,b2}, {z1,z2} (z untouched)
     old_edges = spark.createDataFrame(
         [("a1", "a2"), ("a2", "a3"), ("b1", "b2"), ("z1", "z2")],
@@ -30,55 +24,6 @@ def test_scan_only_matches_classic_and_scratch(spark):
         [("a3", "b1"), ("a1", "n1"), ("n2", "n3"), ("n4", "n4")],
         "src string, dst string",
     )
-    classic = _rows(cc_incremental(labels, batch))
-    scan_only = _rows(cc_incremental(labels, batch, scan_only_labels=True))
-    assert scan_only == classic
-    # and both equal the from-scratch recompute over old ∪ new
+    incremental = _rows(cc_incremental(labels, batch))
     scratch = _rows(connected_components(old_edges.unionByName(batch)))
-    assert classic == scratch
-
-
-def test_scan_only_labels_never_shuffled_or_broadcast(spark, monkeypatch):
-    """Plan contract of scan_only_labels=True: the old labeling must never
-    be the shuffled or broadcast side — every join it feeds is a broadcast
-    of the BATCH-scale side (semi reduction, relabel map, new-node semi).
-
-    The semi-reduction join itself runs EAGERLY behind a localCheckpoint,
-    so the returned DataFrame's plan cannot show it; the checkpoint hook
-    below captures every eagerly-materialized segment's plan at
-    checkpoint time, which is where a regression (e.g. a dropped
-    broadcast hint sort-merging the full labeling) would hide."""
-    try:  # Spark 4: the concrete class overrides the abstract base's method
-        from pyspark.sql.classic.dataframe import DataFrame
-    except ImportError:  # Spark 3
-        from pyspark.sql import DataFrame
-
-    captured = []
-    real_ck = DataFrame.localCheckpoint
-
-    def capturing_ck(self, eager=True):
-        captured.append(self._jdf.queryExecution().executedPlan().toString())
-        return real_ck(self, eager=eager)
-
-    old_edges = spark.createDataFrame(
-        [("a1", "a2"), ("b1", "b2")], "src string, dst string"
-    )
-    labels = connected_components(old_edges)
-    batch = spark.createDataFrame([("a1", "n1")], "src string, dst string")
-    monkeypatch.setattr(DataFrame, "localCheckpoint", capturing_ck)
-    out = cc_incremental(labels, batch, scan_only_labels=True)
-    final_plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "SortMergeJoin" not in final_plan
-    assert "BroadcastHashJoin" in final_plan
-    # the semi reduction runs inside a checkpointed segment: it must be a
-    # BROADCAST LeftSemi (a sort-merge here would shuffle the full
-    # labeling — the exact regression the contract forbids). The CC loop
-    # over the contracted graph also checkpoints under the hook; its
-    # internal joins shuffle only the batch-scale contracted graph and are
-    # out of this contract, so the assertion is scoped to the LeftSemi
-    # (touched) segments.
-    semi_segments = [p for p in captured if "LeftSemi" in p]
-    assert semi_segments, "the semi-reduction checkpoint was not captured"
-    for p in semi_segments:
-        assert "SortMergeJoin" not in p
-        assert "BroadcastHashJoin" in p
+    assert incremental == scratch

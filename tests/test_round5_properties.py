@@ -1,6 +1,6 @@
 """Property-based tests for the round-5 operators: k-core fixpoint vs a
 large fixed budget, decontamination threshold monotonicity and exact
-containment, PQ code ranges and order-insensitivity. Spark per-example cost
+containment. Spark per-example cost
 is high, so example counts stay small; the kernels' own property suite
 (test_kernel_properties.py) carries the high-volume fuzzing."""
 
@@ -57,21 +57,3 @@ def test_decontaminate_containment_properties(spark, bench_words, extra_words):
     high = decontaminate(corpus, bench, n=3, threshold=0.6).collect()
     low_keys = {(r.doc_id, r.bench_id) for r in low}
     assert {(r.doc_id, r.bench_id) for r in high} <= low_keys
-
-
-@settings(max_examples=6, deadline=None)
-@given(st.randoms(use_true_random=False))
-def test_pq_codes_in_range_and_order_insensitive(spark, rnd):
-    """Codes always lie in [0, k); shuffling the input rows changes nothing
-    (encoding is a pure projection; codebooks key on vec_id order)."""
-    from rio_spark.operators.similarity import pq_encode
-
-    vecs = [(i, [rnd.uniform(-1, 1) for _ in range(8)]) for i in range(12)]
-    shuffled = list(vecs)
-    rnd.shuffle(shuffled)
-    a = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    b = spark.createDataFrame(shuffled, "vec_id long, embedding array<double>")
-    ca = {r.vec_id: list(r.code) for r in pq_encode(a, m=2, k=4).collect()}
-    cb = {r.vec_id: list(r.code) for r in pq_encode(b, m=2, k=4).collect()}
-    assert ca == cb
-    assert all(0 <= c < 4 for code in ca.values() for c in code)

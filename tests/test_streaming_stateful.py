@@ -81,79 +81,6 @@ def test_streaming_dedup_bounded_state_evicts_oldest(spark, tmp_path):
     assert sorted(out.doc_id) == ["a", "b", "c", "d"]  # d = re-admitted t1
 
 
-def test_capped_interval_join_hand_case(spark, tmp_path):
-    """One hot key, one hour window holding 3 purchases with cap=2: only the
-    two smallest-(ts, id) purchases join, matches carry truncated=true; a
-    quiet key's single match stays unmarked. Two sentinel files drive the
-    watermark past the data so the windows close and emit."""
-    from datetime import datetime
-
-    from pyspark.sql import functions as F
-
-    from rio_spark.streaming.join import capped_interval_join_streams
-
-    def ev(eid, minute, user, kind):
-        return (eid, datetime(2024, 1, 1, 10, minute), user, kind)
-
-    rows = [
-        ev(1, 0, 0, "click"),
-        ev(10, 5, 0, "purchase"),
-        ev(11, 10, 0, "purchase"),
-        ev(12, 15, 0, "purchase"),  # 3rd purchase in (key 0, 10:00) -> capped
-        ev(2, 0, 1, "click"),
-        ev(20, 20, 1, "purchase"),
-    ]
-    sentinels = [
-        [(90, datetime(2099, 1, 1), 50, "click"), (91, datetime(2099, 1, 1), 51, "purchase")],
-        [(92, datetime(2099, 2, 1), 50, "click"), (93, datetime(2099, 2, 1), 51, "purchase")],
-    ]
-    schema = "event_id long, ts timestamp, user_id long, event_type string"
-    src = tmp_path / "src"
-    src.mkdir()
-    import os
-    for i, batch in enumerate([rows] + sentinels):
-        d = str(src / f"f{i}")
-        spark.createDataFrame(batch, schema).coalesce(1).write.parquet(d)
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (1_000_000 + i, 1_000_000 + i))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    clicks = stream.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("c_ts"), F.col("event_id").alias("cid")
-    )
-    purchases = stream.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("p_ts"), F.col("event_id").alias("pid")
-    )
-    out = capped_interval_join_streams(
-        clicks, purchases, key="user_id",
-        left_ts="c_ts", right_ts="p_ts", left_id="cid", right_id="pid",
-        within_s=3600, watermark="10 minutes", cap=2,
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("capped_join")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT * FROM capped_join").toPandas()
-    finally:
-        q.stop()
-
-    pairs = {(r.k, r.left_id, r.right_id): r.truncated for r in got.itertuples()}
-    assert pairs == {
-        ("0", "1", "10"): True,
-        ("0", "1", "11"): True,   # purchase 12 displaced by the cap
-        ("1", "2", "20"): False,  # quiet key unmarked
-    }
-
-
 def test_stream_merge_to_store_idempotent_across_restart(spark, tmp_path):
     """Streaming KG materialize (streaming/materialize.py): two micro-batches
     of documents stream through the extraction kernel into GraphStore.merge
@@ -208,139 +135,3 @@ def test_stream_merge_to_store_idempotent_across_restart(spark, tmp_path):
     lin2 = store.lineage(spark).toPandas()
     assert len(lin2) == 4
     assert int(lin2.triple_count.sum()) == 2
-
-
-def test_capped_interval_join_left_cap_bounds_hot_clicks(spark, tmp_path):
-    """left_cap bounds the buffered-left dimension symmetrically: with
-    left_cap=1 only the smallest-(ts, id) click of the hot (key, window)
-    keeps its matches, and the window's surviving matches are marked
-    truncated even though the purchase side is under its own cap."""
-    from datetime import datetime
-
-    from pyspark.sql import functions as F
-
-    from rio_spark.streaming.join import capped_interval_join_streams
-
-    rows = [
-        (1, datetime(2024, 1, 1, 10, 0), 0, "click"),
-        (2, datetime(2024, 1, 1, 10, 5), 0, "click"),   # dropped by left_cap=1
-        (10, datetime(2024, 1, 1, 10, 10), 0, "purchase"),
-    ]
-    sentinels = [
-        [(90, datetime(2099, 1, 1), 50, "click"), (91, datetime(2099, 1, 1), 51, "purchase")],
-        [(92, datetime(2099, 2, 1), 50, "click"), (93, datetime(2099, 2, 1), 51, "purchase")],
-    ]
-    schema = "event_id long, ts timestamp, user_id long, event_type string"
-    src = tmp_path / "src"
-    src.mkdir()
-    import os
-    for i, batch in enumerate([rows] + sentinels):
-        d = str(src / f"f{i}")
-        spark.createDataFrame(batch, schema).coalesce(1).write.parquet(d)
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (1_000_000 + i, 1_000_000 + i))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*")
-    )
-    clicks = stream.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("c_ts"), F.col("event_id").alias("cid")
-    )
-    purchases = stream.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("p_ts"), F.col("event_id").alias("pid")
-    )
-    out = capped_interval_join_streams(
-        clicks, purchases, key="user_id",
-        left_ts="c_ts", right_ts="p_ts", left_id="cid", right_id="pid",
-        within_s=3600, watermark="10 minutes", cap=5, left_cap=1,
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("capped_join_left")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT * FROM capped_join_left").toPandas()
-    finally:
-        q.stop()
-
-    pairs = {(r.k, r.left_id, r.right_id): r.truncated for r in got.itertuples()}
-    assert pairs == {("0", "1", "10"): True}  # click 2's match dropped, marked
-
-
-def test_capped_interval_join_deterministic_across_batching(spark, tmp_path):
-    """The emitted match set must not depend on how the replay is chopped
-    into micro-batches: cap membership is a property of each window's FINAL
-    row set, so one-file-per-batch and all-files-at-once replays agree."""
-    from datetime import datetime
-
-    from pyspark.sql import functions as F
-
-    from rio_spark.streaming.join import capped_interval_join_streams
-
-    rows1 = [
-        (1, datetime(2024, 1, 1, 10, 0), 0, "click"),
-        (11, datetime(2024, 1, 1, 10, 40), 0, "purchase"),
-    ]
-    rows2 = [
-        (2, datetime(2024, 1, 1, 10, 2), 0, "click"),
-        (10, datetime(2024, 1, 1, 10, 5), 0, "purchase"),  # smaller ts, later file
-        (12, datetime(2024, 1, 1, 10, 50), 0, "purchase"),  # displaced by cap=2
-    ]
-    sentinels = [
-        [(90, datetime(2099, 1, 1), 50, "click"), (91, datetime(2099, 1, 1), 51, "purchase")],
-        [(92, datetime(2099, 2, 1), 50, "click"), (93, datetime(2099, 2, 1), 51, "purchase")],
-    ]
-    schema = "event_id long, ts timestamp, user_id long, event_type string"
-
-    def replay(tag, max_files):
-        import os
-        src = tmp_path / f"src_{tag}"
-        src.mkdir()
-        for i, batch in enumerate([rows1, rows2] + sentinels):
-            d = str(src / f"f{i}")
-            spark.createDataFrame(batch, schema).coalesce(1).write.parquet(d)
-            for f in os.listdir(d):
-                os.utime(os.path.join(d, f), (1_000_000 + i, 1_000_000 + i))
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", max_files)
-            .parquet(f"{src}/*")
-        )
-        clicks = stream.filter(F.col("event_type") == "click").select(
-            "user_id", F.col("ts").alias("c_ts"), F.col("event_id").alias("cid")
-        )
-        purchases = stream.filter(F.col("event_type") == "purchase").select(
-            "user_id", F.col("ts").alias("p_ts"), F.col("event_id").alias("pid")
-        )
-        out = capped_interval_join_streams(
-            clicks, purchases, key="user_id",
-            left_ts="c_ts", right_ts="p_ts", left_id="cid", right_id="pid",
-            within_s=3600, watermark="10 minutes", cap=2,
-        )
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory").queryName(f"det_{tag}")
-            .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            got = spark.sql(f"SELECT * FROM det_{tag}").toPandas()
-        finally:
-            q.stop()
-        return sorted((r.k, r.left_id, r.right_id, r.truncated) for r in got.itertuples())
-
-    one = replay("one", 1)
-    many = replay("many", 4)
-    assert one == many
-    # and the cap really bit: purchase 12 (largest ts) is absent, the
-    # survivors are marked
-    ids = {r for _, _, r, _ in one}
-    assert "12" not in ids and {"10", "11"} <= ids
-    assert all(t for *_, t in one)

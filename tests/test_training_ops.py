@@ -1,5 +1,5 @@
 """Training-data pipeline operators: dedup family, similarity search, text
-analysis, multimodal plumbing, sessionization, streaming windows."""
+analysis."""
 
 import pandas as pd
 import pytest
@@ -13,13 +13,6 @@ from rio_spark.operators.dedup import (
     ngram_jaccard_pairs,
     simhash_bits,
 )
-from rio_spark.operators.multimodal import (
-    extract_features,
-    resize_meta,
-    sample_frames,
-    synthetic_assets,
-)
-from rio_spark.operators.sessions import session_stats, tumbling_counts
 from rio_spark.operators.similarity import (
     ann_topk_lsh,
     cosine_pairs_above,
@@ -246,56 +239,6 @@ def test_fingerprint_deterministic(spark, docs):
     assert len(fp1.loc["a1", "fp"]) == 32
 
 
-def test_multimodal_features(spark):
-    assets = synthetic_assets(spark, n=12).cache()
-    feats = extract_features(assets).toPandas()
-    assert len(feats) == 12
-    assert all(len(f) == 16 for f in feats.features)
-    assert all(abs(sum(f) - 1.0) < 1e-9 for f in feats.features)
-    # determinism
-    feats2 = extract_features(assets).toPandas().sort_values("asset_id")
-    assert list(feats.sort_values("asset_id").features.map(tuple)) == list(
-        feats2.features.map(tuple)
-    )
-
-
-def test_multimodal_frames_and_resize(spark):
-    assets = synthetic_assets(spark, n=12)
-    frames = sample_frames(assets, every_ms=500).toPandas()
-    assert (frames.offset_ms % 500 == 0).all()
-    rs = resize_meta(assets, max_dim=32).toPandas()
-    assert (rs.target_width <= 32).all() and (rs.target_height <= 32).all()
-
-
-def test_sessionization(spark):
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    st = session_stats(events, gap_minutes=30).toPandas()
-    assert (st.n_events >= 1).all()
-    assert (st.t_end >= st.t_start).all()
-    tc = tumbling_counts(events, minutes=60).toPandas()
-    assert tc.n.sum() == events.count()
-
-
-def test_streaming_windowed_counts(spark, tmp_path):
-    from rio_spark.streaming.windows import (
-        read_event_stream,
-        run_to_memory,
-        windowed_counts_stream,
-    )
-
-    events = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    src = str(tmp_path / "stream_src")
-    events.write.parquet(src)
-    q = run_to_memory(
-        windowed_counts_stream(read_event_stream(spark, src), minutes=60), "win_counts"
-    )
-    try:
-        got = spark.sql("SELECT sum(n) AS total FROM win_counts").first()["total"]
-        assert got == events.count()
-    finally:
-        q.stop()
-
-
 def test_decontaminate_containment_and_guard(spark):
     """Containment is measured toward the benchmark item: a corpus doc
     holding a benchmark's full text flags at 1.0, a half-prefix flags
@@ -336,111 +279,3 @@ def test_decontaminate_containment_and_guard(spark):
     assert flagged  # without the guard the preamble doc flags
     guarded = decontaminate(pre_only, bench2, n=3, threshold=0.2, max_bench_df=1).collect()
     assert not guarded
-
-
-def test_pq_encode_and_adc_topk(spark):
-    """Seed vectors encode to their own codebook index in every subspace
-    (their subvector distance to themselves is 0); ADC distance of a seed
-    query against itself is 0, so it ranks first; ties break by vec_id."""
-    import numpy as np
-
-    from rio_spark.operators.similarity import pq_codebooks, pq_encode, pq_topk
-
-    rng = np.random.RandomState(7)
-    vecs = [(i, [float(x) for x in rng.randn(8)]) for i in range(16)]
-    emb = spark.createDataFrame(vecs, "vec_id long, embedding array<double>")
-    cb = pq_codebooks(emb, m=2, k=4)
-    assert len(cb) == 2 and len(cb[0]) == 4 and len(cb[0][0]) == 4
-
-    codes = {r.vec_id: list(r.code) for r in pq_encode(emb, m=2, k=4).collect()}
-    for seed_id in range(4):  # the 4 lowest-id vectors ARE the codebooks
-        assert codes[seed_id] == [seed_id, seed_id]
-
-    q0 = vecs[0][1]
-    top = pq_topk(emb, q0, topk=3, m=2, k=4).collect()
-    assert top[0].vec_id == 0 and top[0].adc_dist == 0.0
-    assert [r.adc_dist for r in top] == sorted(r.adc_dist for r in top)
-
-
-def test_ann_recall_report_batch_matches_single_query(spark):
-    """The batched evaluator must return EXACTLY the ids each single-query
-    operator returns (same filters, same rounding, same tie rules) — per
-    path, per query.  Also: ivf with nprobe == n_centroids is exhaustive,
-    so its recall vs the brute ground truth must be 1.0."""
-    from rio_spark.operators.similarity import (
-        ann_recall_report, ann_topk_lsh, ivf_pq_residual_topk, ivf_pq_topk,
-        ivf_topk, pq_codebooks, pq_topk, topk_cosine)
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    args = dict(n_queries=3, k=5, n_planes=4, n_centroids=8, nprobe=2,
-                m=4, pq_k=8, refine_iters=1, query_offset=100)
-    cand = ann_recall_report(emb, return_candidates=True, **args)
-    got = {
-        (r["path"], r["qid"]): [] for r in cand.select("path", "qid").distinct().collect()
-    }
-    for r in cand.collect():
-        got[(r["path"], r["qid"])].append(r["vec_id"])
-
-    qrows = (emb.filter("vec_id >= 100").orderBy("vec_id").limit(3).collect())
-    cb_tr = pq_codebooks(emb, m=4, k=8, refine_iters=1)
-    for qi, row in enumerate(qrows):
-        qv = [float(x) for x in row["embedding"]]
-        single = {
-            "gt": topk_cosine(emb, qv, 5),
-            "lsh": ann_topk_lsh(emb, qv, k=5, n_planes=4),
-            "ivf": ivf_topk(emb, qv, k=5, n_centroids=8, nprobe=2),
-            "pq": pq_topk(emb, qv, topk=5, m=4, k=8),
-            "pq_trained": pq_topk(emb, qv, topk=5, m=4, k=8, codebooks=cb_tr),
-            "ivfpq": ivf_pq_topk(emb, qv, topk=5, n_centroids=8, nprobe=2, m=4, k=8),
-            "ivfpq_res": ivf_pq_residual_topk(
-                emb, qv, topk=5, n_centroids=8, nprobe=2, m=4, k=8, refine_iters=1),
-        }
-        for name, df in single.items():
-            want = sorted(r["vec_id"] for r in df.collect())
-            assert sorted(got[(name, qi)]) == want, (name, qi)
-
-    exhaustive = ann_recall_report(
-        emb, n_queries=3, k=5, n_centroids=4, nprobe=4, query_offset=100)
-    ivf_row = [r for r in exhaustive.collect() if r["path"] == "ivf"][0]
-    assert ivf_row["mean_recall"] == 1.0
-
-
-def test_sql_array_lit_matches_flit_tree(spark):
-    """_sql_array_lit must produce the exact Literal the element-wise
-    F.lit/F.array tree would: bit-identical doubles (repr is the shortest
-    round-trip decimal), ints, and quote-bearing strings, at any nesting."""
-    from rio_spark.operators.similarity import _sql_array_lit
-
-    doubles = [0.1, -0.0, 5e-324, 1.7976931348623157e308, -123456.789012345,
-               1e-300, 3.141592653589793]
-    nested = [doubles, [7.25, -8.5]]
-    df = spark.range(1).select(
-        _sql_array_lit(doubles).alias("a"),
-        F.array(*[F.lit(float(x)) for x in doubles]).alias("b"),
-        _sql_array_lit(nested).alias("na"),
-        F.array(*[F.array(*[F.lit(float(x)) for x in row]) for row in nested]).alias("nb"),
-        _sql_array_lit([1, -2, 0]).alias("ia"),
-        _sql_array_lit(["it's", "plain"]).alias("sa"),
-    )
-    row = df.first()
-    import struct
-    assert [struct.pack(">d", x) for x in row["a"]] == [
-        struct.pack(">d", x) for x in row["b"]]
-    assert [[struct.pack(">d", x) for x in r] for r in row["na"]] == [
-        [struct.pack(">d", x) for x in r] for r in row["nb"]]
-    assert list(row["ia"]) == [1, -2, 0]
-    assert list(row["sa"]) == ["it's", "plain"]
-
-
-def test_sql_array_lit_refuses_unrenderable(spark):
-    """Non-finite doubles would parse as COLUMN NAMES ('infD'); bools have
-    no double rendering — both must fail loudly at build time, not at
-    analysis time with an unresolved-column riddle."""
-    from rio_spark.operators.similarity import _sql_array_lit
-
-    with pytest.raises(ValueError, match="non-finite"):
-        _sql_array_lit([1.0, float("inf")])
-    with pytest.raises(ValueError, match="non-finite"):
-        _sql_array_lit([float("nan")])
-    with pytest.raises(TypeError, match="bool"):
-        _sql_array_lit([True])
