@@ -721,8 +721,11 @@ class GraphStore:
         subject bounds cannot overlap the batch (zone-map file skipping —
         no directory listing, no partition discovery, no footer reads on
         the read path), so merge cost scales with batch size, not table
-        size. The append + manifest flip is the Iceberg commit: a crash
-        anywhere leaves the previous snapshot live and at most orphan
+        size. New rows are clustered by ``p_bucket`` before the append, so a
+        commit writes one file per touched bucket (at most ``n_buckets``);
+        that also bounds the files every later merge scans and reads
+        footers of. The append + manifest flip is the Iceberg commit: a
+        crash anywhere leaves the previous snapshot live and at most orphan
         files for expiry."""
         self._bootstrap_if_legacy()
         batch = self._bucketed(triples).dropDuplicates(
@@ -765,7 +768,10 @@ class GraphStore:
                 & F.col("b.graph").eqNullSafe(F.col("ex.graph"))
             )
             new_rows = b.join(scoped, cond, "left_anti")
-        new_rows = new_rows.cache()
+        # one task per bucket: the partitioned append writes one file per
+        # task per bucket, so unclustered rows would write up to
+        # (shuffle partitions x touched buckets) files per commit
+        new_rows = new_rows.repartition("p_bucket").cache()
         n = new_rows.count()
         if n:
             before = self._list_data_files()
@@ -794,7 +800,7 @@ class GraphStore:
         target_rows_per_file: int = 1_000_000,
     ) -> dict[int, tuple[int, int]]:
         """Small-file compaction: every incremental merge appends one file
-        per task per touched bucket, so a long-lived store accumulates
+        per touched bucket, so a long-lived store accumulates
         thousands of KB-sized files per bucket and scan/planning cost
         explodes — THE standing maintenance problem of incremental lakehouse
         tables.  Buckets at or above ``min_files`` live files are rewritten

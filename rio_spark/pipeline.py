@@ -10,17 +10,23 @@ The unit of commit/resume is an input partition group
 so a group is independently correct; a rerun skips groups already in lineage
 (anti-join against the lineage table) and re-merging a half-committed group
 is idempotent because MERGE dedups on the quad key.
+
+Each group runs the kernel stage exactly once: :func:`run_group` persists
+extraction ∪ linking as one frame, counts its error rows under the same
+action, and every later reader (canonicalization's sameAs edges and
+rewrite, MERGE's bounds and anti-join) scans that frame; it is unpersisted
+before the step returns.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from rio_spark.operators.assemble import assemble_documents_salted
 from rio_spark.operators.canonicalize import canonicalize
-from rio_spark.operators.extract import dedup_triples, errors_of, extract_triples, triples_of
+from rio_spark.operators.extract import extract_triples, triples_of
 from rio_spark.operators.linking import link_entities
 from rio_spark.operators.materialize import GraphStore
 
@@ -36,15 +42,19 @@ class PipelineReport:
     per_group: list = field(default_factory=list)
 
 
-def transform_transcripts(
+def run_group(
+    spark: SparkSession,
     transcripts: DataFrame,
+    store: GraphStore,
+    snapshot_id: str,
+    partition_hash: str,
     docs_meta: DataFrame | None = None,
     dictionary: DataFrame | None = None,
-) -> tuple[DataFrame, int]:
-    """The pipeline's transform chain on one self-contained transcript set
-    (a partition group in batch mode, a micro-batch in streaming mode):
-    salted assembly -> extraction + entity linking -> canonicalize ->
-    quad dedup. Returns (triples, error_row_count)."""
+) -> tuple[int, int]:
+    """One self-contained transcript set (a partition group in batch mode, a
+    micro-batch in streaming mode) through the whole chain: salted assembly
+    -> extraction + entity linking -> canonicalize -> MERGE -> lineage row.
+    Returns (quads merged, error rows)."""
     docs = assemble_documents_salted(transcripts)
     if docs_meta is not None:
         docs = docs.join(F.broadcast(docs_meta), "conv_id", "left")
@@ -52,15 +62,20 @@ def transform_transcripts(
         docs = docs.withColumn("format", F.lit(None).cast("string")).withColumn(
             "base_iri", F.lit(None).cast("string")
         )
-    rdf_docs = docs.filter(F.col("format").isNotNull())
-    free_docs = docs.filter(F.col("format").isNull())
-
-    extracted = extract_triples(rdf_docs)
-    parts = [triples_of(extracted)]
+    rows = extract_triples(docs.filter(F.col("format").isNotNull()))
     if dictionary is not None:
-        parts.append(link_entities(free_docs, dictionary))
-    triples = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    return dedup_triples(canonicalize(triples)), errors_of(extracted).count()
+        # linked rows carry null error columns, so they read as good triples
+        linked = link_entities(docs.filter(F.col("format").isNull()), dictionary)
+        rows = rows.unionByName(linked, allowMissingColumns=True)
+    errors = Observation("group_errors")
+    rows = rows.observe(errors, F.count("error_kind").alias("n")).persist()
+    try:
+        rows.count()  # the one kernel run: fills the cache, fires the observation
+        n_new = store.merge(spark, canonicalize(triples_of(rows)))
+        store.commit_lineage(spark, snapshot_id, partition_hash, n_new)
+        return n_new, errors.get["n"]
+    finally:
+        rows.unpersist()
 
 
 def run_pipeline(
@@ -87,9 +102,7 @@ def run_pipeline(
         part = transcripts.filter(
             F.pmod(F.xxhash64("conv_id"), F.lit(n_groups)) == g
         )
-        triples, n_err = transform_transcripts(part, docs_meta, dictionary)
-        n_new = store.merge(spark, triples)
-        store.commit_lineage(spark, snapshot_id, ph, n_new)
+        n_new, n_err = run_group(spark, part, store, snapshot_id, ph, docs_meta, dictionary)
         report.groups_committed += 1
         report.triples_merged += n_new
         report.error_rows += n_err

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from rio_spark.operators.materialize import GraphStore
+from rio_spark.pipeline import run_group
 
 
 def stream_merge_to_store(
@@ -58,11 +59,10 @@ def run_streaming_pipeline(
     dictionary: DataFrame | None = None,
 ):
     """The FULL KG pipeline as a streaming job: each micro-batch of
-    transcript turns runs the batch pipeline's transform chain
-    (rio_spark.pipeline.transform_transcripts — salted assembly, kernel
-    extraction, entity linking, canonicalization, quad dedup) inside
-    ``foreachBatch`` and MERGEs into the snapshot store with a
-    ``batch-<id>`` lineage row.
+    transcript turns runs the batch pipeline's group step
+    (rio_spark.pipeline.run_group — salted assembly, kernel extraction,
+    entity linking, canonicalization, MERGE into the snapshot store) inside
+    ``foreachBatch``, with a ``batch-<id>`` lineage row.
 
     Ingest contract: a micro-batch must hold COMPLETE conversations (file
     = landing-zone unit, the standard CDC contract) — assembly groups by
@@ -73,13 +73,12 @@ def run_streaming_pipeline(
     same effective-exactly-once argument as stream_merge_to_store.
 
     Starts (and returns) the streaming query."""
-    from rio_spark.pipeline import transform_transcripts
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        triples, n_err = transform_transcripts(batch_df, docs_meta, dictionary)
-        n_new = store.merge(spark, triples)
-        store.commit_lineage(spark, snapshot_id, f"batch-{batch_id}", n_new)
+        _, n_err = run_group(
+            spark, batch_df, store, snapshot_id, f"batch-{batch_id}", docs_meta, dictionary
+        )
         if n_err:
             # error rows are part of the batch contract: surface the count
             # in lineage alongside the merge (negative-count convention

@@ -52,6 +52,24 @@ def test_merge_prunes_buckets(spark, tmp_path):
     assert store.merge(spark, b2) == 1
 
 
+def test_merge_writes_one_file_per_touched_bucket(spark, tmp_path):
+    store = GraphStore(str(tmp_path / "store"), n_buckets=8)
+    batch = spark.createDataFrame(
+        quads([("d", f"<s{i}>", "<p>", "<o>", None) for i in range(200)])
+    ).repartition(8)
+    assert store.merge(spark, batch) == 200
+    files = store._live_files()
+    buckets = {f.split("/", 1)[0] for f in files}
+    assert len(buckets) == 8
+    assert len(files) == len(buckets)
+    more = spark.createDataFrame(
+        quads([("d", f"<s{i}>", "<p>", "<o2>", None) for i in range(3)])
+    ).repartition(8)
+    assert store.merge(spark, more) == 3
+    added = set(store._live_files()) - set(files)
+    assert len(added) == len({f.split("/", 1)[0] for f in added}) <= 3
+
+
 @pytest.fixture(scope="module")
 def pipeline_inputs(spark):
     pdf, _ = synthetic_transcripts_pdf(N_CONVS, CORPUS)
@@ -114,6 +132,102 @@ def test_lineage_rows_recorded(spark, tmp_path, pipeline_inputs):
     assert len(lin2) == 6
     snapB = lin2[lin2.input_snapshot_id == "snapB"]
     assert (snapB.triple_count == 0).all()  # nothing new: merge dedups
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_pipeline_parses_each_rdf_conversation_once(spark, tmp_path, pipeline_inputs, monkeypatch):
+    """Every RDF-labelled conversation reaches the kernel stage exactly once
+    per run, however many actions the group's canonicalization and MERGE
+    take — also against a non-empty store, where MERGE adds its bounds scan
+    and anti-join."""
+    import rio_spark.pipeline as pipeline
+
+    transcripts, meta_df, dictionary = pipeline_inputs
+    store = GraphStore(str(tmp_path / "store"), n_buckets=8)
+    first = run_pipeline(spark, transcripts, store, "first", meta_df, dictionary, n_groups=2)
+    assert first.triples_merged > 0 and first.error_rows > 0
+
+    parsed = spark.sparkContext.accumulator(0)
+    extract = pipeline.extract_triples
+
+    def counted_extract(docs, *args, **kwargs):
+        def count(batches):
+            for batch in batches:
+                parsed.add(batch.num_rows)
+                yield batch
+
+        return extract(docs.mapInArrow(count, docs.schema), *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "extract_triples", counted_extract)
+    again = run_pipeline(spark, transcripts, store, "again", meta_df, dictionary, n_groups=2)
+    n_rdf = meta_df.filter(F.col("format").isNotNull()).count()
+    assert parsed.value == n_rdf
+    assert again.error_rows == first.error_rows
+    assert again.triples_merged == 0
+
+
+def test_pipeline_leaves_no_cached_frame(spark, tmp_path, pipeline_inputs):
+    """The group frame's lifetime ends inside the group step: after a run
+    the session's cache manager holds nothing."""
+    transcripts, meta_df, dictionary = pipeline_inputs
+    spark.catalog.clearCache()
+    store = GraphStore(str(tmp_path / "store"), n_buckets=4)
+    rep = run_pipeline(spark, transcripts, store, "s", meta_df, dictionary, n_groups=1)
+    assert rep.triples_merged > 0
+    assert _cache_is_empty(spark)
+
+
+def test_streaming_pipeline_matches_batch_and_resumes(spark, tmp_path, pipeline_inputs):
+    """run_streaming_pipeline over the same transcripts landed as 2 files
+    builds the same quad set as run_pipeline, records one lineage row per
+    micro-batch (plus a ``batch-<id>-errors`` row when it has error rows),
+    leaves no cached frame, and a restart on the same checkpoint merges
+    nothing."""
+    from rio_spark.streaming.materialize import run_streaming_pipeline
+
+    transcripts, meta_df, dictionary = pipeline_inputs
+    key = ["subject", "predicate", "object", "graph"]
+    batch_store = GraphStore(str(tmp_path / "batch"), n_buckets=4)
+    rep = run_pipeline(spark, transcripts, batch_store, "b", meta_df, dictionary, n_groups=2)
+
+    landing = tmp_path / "landing"
+    for i in range(2):  # complete conversations per file
+        transcripts.filter(F.pmod(F.xxhash64("conv_id"), F.lit(2)) == i).coalesce(1).write.parquet(
+            str(landing / f"f{i}")
+        )
+    store = GraphStore(str(tmp_path / "stream"), n_buckets=4)
+
+    def replay():
+        stream = (
+            spark.readStream.schema(TRANSCRIPT_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .option("recursiveFileLookup", "true")
+            .parquet(str(landing))
+        )
+        run_streaming_pipeline(
+            stream, store, "s", str(tmp_path / "ckpt"), meta_df, dictionary
+        ).awaitTermination()
+
+    spark.catalog.clearCache()
+    replay()
+    assert _cache_is_empty(spark)
+    streamed = store.graph(spark).select(key)
+    batched = batch_store.graph(spark).select(key)
+    assert streamed.count() == batched.count() > 0
+    assert streamed.exceptAll(batched).isEmpty() and batched.exceptAll(streamed).isEmpty()
+    lin = store.lineage(spark).toPandas()
+    errs = lin.partition_hash.str.endswith("-errors")
+    assert sorted(lin.partition_hash[~errs]) == ["batch-0", "batch-1"]
+    assert int(lin.triple_count[~errs].sum()) == rep.triples_merged
+    assert int(lin.triple_count[errs].sum()) == rep.error_rows > 0
+
+    snapshot = store.current_snapshot()
+    replay()  # same checkpoint: both files already processed
+    assert store.current_snapshot() == snapshot
+    assert len(store.lineage(spark).toPandas()) == len(lin)
 
 
 def test_compaction_preserves_content_and_reduces_files(spark, tmp_path):
