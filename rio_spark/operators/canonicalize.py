@@ -1,16 +1,25 @@
-"""Canonicalization: alias merging via distributed connected components (J3).
-
-Implements the alternating large-star / small-star algorithm from the
-published "Connected Components in MapReduce and Beyond" approach — each
-round is two DataFrame self-aggregations, converging in O(log n) rounds —
-entirely with built-in ops (groupBy + min + explode), no Python in the loop.
-At 10^12-edge scale each round is one shuffle on the node key; lineage is cut
-with localCheckpoint so the plan doesn't grow across iterations.
+"""Canonicalization: alias merging over owl:sameAs components (J3).
 
 The reference's only join-like machinery is its bnode-isomorphism search
 (SURVEY.md §2.6); alias merging itself comes from the north rule: owl:sameAs
 (or linker-emitted equivalence) edges collapse each component onto one
 stable canonical IRI (lexicographic min — deterministic).
+
+Two component resolvers live here:
+
+* :func:`canonical_mapping` (the pipeline path) collects the distinct alias
+  edges to the driver with ONE Spark action and runs a union-find there.
+  Its output is broadcast by :func:`rewrite_triples` anyway, so every
+  (node, canonical) row reaches the driver regardless; driver memory is
+  bounded by the distinct alias edges, which for a sameAs forest is the
+  size of the mapping the rewrite broadcasts.
+* :func:`connected_components` is the distributed alternating large-star /
+  small-star algorithm ("Connected Components in MapReduce and Beyond") —
+  each round is two DataFrame self-aggregations, converging in O(log n)
+  rounds — entirely with built-in ops (groupBy + min + explode), no Python
+  in the loop. Lineage is cut with localCheckpoint so the plan doesn't grow
+  across iterations. Its callers (near-dup grouping, the catalog's CC
+  queries, :func:`cc_incremental`) keep the result distributed.
 """
 
 from __future__ import annotations
@@ -102,12 +111,14 @@ def connected_components(
             # rounds (cache spills to disk at scale; freed right after the
             # round materializes)
             ls = large_star(e).cache()
-            e = small_star(ls).distinct().localCheckpoint(eager=False)
-            row = e.agg(
-                F.count("*").alias("n"),
-                F.expr("bit_xor(xxhash64(u, v))").alias("h"),  # overflow-free under ANSI
-            ).first()
-            ls.unpersist()
+            try:
+                e = small_star(ls).distinct().localCheckpoint(eager=False)
+                row = e.agg(
+                    F.count("*").alias("n"),
+                    F.expr("bit_xor(xxhash64(u, v))").alias("h"),  # overflow-free under ANSI
+                ).first()
+            finally:
+                ls.unpersist()
             sig = (row["n"], row["h"])
             if sig == prev_sig:
                 break
@@ -127,11 +138,33 @@ def sameas_edges(triples: DataFrame) -> DataFrame:
 
 
 def canonical_mapping(triples: DataFrame) -> DataFrame:
-    """(node, canonical) for every node touched by an alias edge, canonical =
-    lexicographic min of its component (stable entity IRI)."""
-    cc = connected_components(sameas_edges(triples))
-    return cc.select(F.col("node"), F.col("component").alias("canonical")).filter(
-        F.col("node") != F.col("canonical")
+    """(node, canonical) for every node touched by an alias edge that is not
+    its own canonical; canonical = lexicographic min of its owl:sameAs
+    component (stable entity IRI).
+
+    Runs ONE Spark action, the ``collect()`` of the distinct alias edges;
+    components are resolved on the driver by a union-find that always keeps
+    the smaller root, so each root is its component's minimum. Python's
+    code-point order on ``str`` equals Spark's UTF-8 binary string order.
+    Driver memory is O(distinct alias edges). The result is a local
+    DataFrame, small enough for :func:`rewrite_triples` to broadcast."""
+    parent: dict[str, str] = {}
+
+    def find(x: str) -> str:
+        root = x
+        while parent.setdefault(root, root) != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for src, dst in sameas_edges(triples).distinct().collect():
+        a, b = find(src), find(dst)
+        if a != b:
+            parent[max(a, b)] = min(a, b)
+    return triples.sparkSession.createDataFrame(
+        [(x, r) for x in parent if (r := find(x)) != x],
+        "node string, canonical string",
     )
 
 
@@ -167,7 +200,9 @@ def rewrite_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
 
 def canonicalize(triples: DataFrame) -> DataFrame:
     """Full pass: derive alias components from owl:sameAs edges and rewrite
-    every triple onto canonical ids."""
+    every triple onto canonical ids. The component resolution runs now (one
+    Spark job collecting the alias edges, a union-find on the driver, see
+    :func:`canonical_mapping`); the rewrite stays lazy."""
     return rewrite_triples(triples, canonical_mapping(triples))
 
 

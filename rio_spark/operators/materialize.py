@@ -772,17 +772,19 @@ class GraphStore:
         # task per bucket, so unclustered rows would write up to
         # (shuffle partitions x touched buckets) files per commit
         new_rows = new_rows.repartition("p_bucket").cache()
-        n = new_rows.count()
-        if n:
-            before = self._list_data_files()
-            new_rows.write.mode("append").partitionBy("p_bucket").parquet(self.graph_dir)
-            added = self._list_data_files() - before
-            self._commit(
-                set(live) | added, "merge", expect_parent=base,
-                bounds={**known_bounds, **self._file_bounds(added)},
-            )
-        new_rows.unpersist()
-        return n
+        try:
+            n = new_rows.count()
+            if n:
+                before = self._list_data_files()
+                new_rows.write.mode("append").partitionBy("p_bucket").parquet(self.graph_dir)
+                added = self._list_data_files() - before
+                self._commit(
+                    set(live) | added, "merge", expect_parent=base,
+                    bounds={**known_bounds, **self._file_bounds(added)},
+                )
+            return n
+        finally:
+            new_rows.unpersist()
 
     def commit_lineage(
         self, spark: SparkSession, snapshot_id: str, partition_hash: str, triple_count: int

@@ -1796,7 +1796,7 @@ FROM s
 def q_kg_pipeline_e2e(spark, sf_dir) -> DataFrame:
     """The per-group body of run_pipeline as ONE chained oracle-checked plan:
     turn stream -> salted assembly -> NT kernel extraction -> owl:sameAs
-    connected-components canonicalization -> quad-set dedup (store/MERGE step
+    canonicalization (driver-side union-find) -> quad-set dedup (store/MERGE step
     excluded — materialization is pinned by the pipeline CLI + resume tests).
     Entities are zero-padded so the component minimum is the group leader."""
     from rio_spark.operators.canonicalize import canonicalize
@@ -2240,10 +2240,11 @@ ORACLE_STREAMING_MATERIALIZE = (
 
 
 def q_kg_canonicalize(spark, sf_dir) -> DataFrame:
-    """Full J3 path: owl:sameAs alias edges -> connected components ->
-    canonical mapping -> broadcast triple rewrite (degenerate self-loops
-    dropped). Entities are zero-padded so the lexicographic component min is
-    the group leader the oracle can name."""
+    """Full J3 path: owl:sameAs alias edges collected in one Spark job ->
+    driver-side union-find -> canonical mapping (a local frame) -> broadcast
+    triple rewrite (degenerate self-loops dropped). Entities are zero-padded
+    so the lexicographic component min is the group leader the oracle can
+    name."""
     from rio_spark.operators.canonicalize import canonicalize
 
     docs = _documents(spark, sf_dir)

@@ -1,5 +1,7 @@
 """Entity linking (J1/J2) and connected-components canonicalization (J3)."""
 
+import random
+
 import pandas as pd
 import pytest
 
@@ -7,8 +9,10 @@ from pyspark.sql import functions as F
 
 from rio_spark.operators.canonicalize import (
     OWL_SAMEAS,
+    canonical_mapping,
     canonicalize,
     connected_components,
+    sameas_edges,
 )
 from rio_spark.operators.linking import (
     detect_mentions,
@@ -124,3 +128,98 @@ def test_canonicalize_rewrites_aliases(spark):
     assert len(self_rows) == 0
     # untouched triples survive
     assert ('"33"' in set(out.object))
+
+
+TRIPLE_SCHEMA = "doc_id string, subject string, predicate string, object string, graph string"
+
+
+def _sameas_graph(seed: int) -> list[tuple[str, str]]:
+    """Seeded alias edge list mixing chains, cycles, duplicate and reversed
+    edges, self-loops, blank-node and literal endpoints, and non-ASCII IRIs
+    whose order differs between UTF-16 and code points (U+FF21 vs U+1D538)."""
+    rng = random.Random(seed)
+    pool = (
+        [f"<http://e/n{i:02d}>" for i in range(30)]
+        + [f"_:b{i}" for i in range(6)]
+        + [f'"lit {i}"' for i in range(4)]
+        + ["<http://e/é>", "<http://e/e>", "<http://e/日本>", "<http://e/日>",
+           "<http://e/\uff21>", "<http://e/\U0001d538>", "<http://e/z>"]
+    )
+    rng.shuffle(pool)
+    edges = []
+    for _ in range(4):  # chains, some closed into cycles
+        chain = rng.sample(pool, rng.randint(2, 7))
+        edges += list(zip(chain, chain[1:]))
+        if rng.random() < 0.5:
+            edges.append((chain[-1], chain[0]))
+    edges += [(rng.choice(pool), rng.choice(pool)) for _ in range(8)]
+    edges += [(b, a) for a, b in rng.sample(edges, 4)]  # reversed
+    edges += rng.sample(edges, 4)  # duplicated
+    edges += [(x, x) for x in rng.sample(pool, 3)]  # self-loops
+    return edges
+
+
+def _triples(spark, edges):
+    rows = [("d", s, OWL_SAMEAS, o, None) for s, o in edges]
+    rows += [("d", "<http://e/n00>", "<http://e/knows>", "<http://e/z>", None),
+             ("d", "_:b0", "<http://e/age>", '"3"', "<http://e/g>")]
+    return spark.createDataFrame(rows, TRIPLE_SCHEMA)
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2, 3, 4])
+def test_canonical_mapping_matches_connected_components(spark, seed):
+    """The driver-side union-find names the same canonical for every alias
+    as the distributed large-star/small-star components (node != component)."""
+    triples = _triples(spark, _sameas_graph(seed))
+    got = {(r["node"], r["canonical"]) for r in canonical_mapping(triples).collect()}
+    ref = {
+        (r["node"], r["component"])
+        for r in connected_components(sameas_edges(triples)).collect()
+        if r["node"] != r["component"]
+    }
+    assert got == ref
+    assert got  # every seed has at least one alias
+
+
+def test_canonical_mapping_of_no_sameas_edges_is_empty(spark):
+    triples = _triples(spark, [])
+    mapping = canonical_mapping(triples)
+    assert mapping.schema.simpleString() == "struct<node:string,canonical:string>"
+    assert mapping.count() == 0
+    assert connected_components(sameas_edges(triples)).count() == 0
+
+
+def _jobs_of_canonicalize(spark, n_path: int, group: str):
+    path = [f"<http://e/p{i:03d}>" for i in range(n_path)]
+    rows = [("d", a, OWL_SAMEAS, b, None) for a, b in zip(path, path[1:])]
+    rows += [("d", f"<http://e/q{i}>", "<http://e/knows>", f"<http://e/r{i}>", None)
+             for i in range(50)]
+    rows.append(("d", path[-1], "<http://e/end>", path[1], None))
+    triples = spark.createDataFrame(rows, TRIPLE_SCHEMA).cache()
+    triples.count()
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "canonicalize job count")
+    try:
+        out = canonicalize(triples)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    rewritten = {
+        (r["predicate"], r["subject"], r["object"])
+        for r in out.filter(F.col("subject").startswith("<http://e/p")).collect()
+    }
+    triples.unpersist()
+    return n_jobs, rewritten
+
+
+def test_canonicalize_submits_at_most_two_jobs(spark):
+    """Alias resolution is one collect (its shuffle stage runs as a job of
+    its own under AQE), however long the sameAs path."""
+    short_jobs, short_rows = _jobs_of_canonicalize(spark, 4, "canon-path-4")
+    long_jobs, long_rows = _jobs_of_canonicalize(spark, 64, "canon-path-64")
+    assert long_jobs <= 2
+    assert long_jobs == short_jobs
+    # every alias collapsed onto the path's minimum; the sameAs self-loops dropped
+    end = ("<http://e/end>", "<http://e/p000>", "<http://e/p000>")
+    assert short_rows == long_rows == {end}

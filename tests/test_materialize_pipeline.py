@@ -138,6 +138,23 @@ def _cache_is_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_failed_merge_leaves_no_cached_frame(spark, tmp_path, monkeypatch):
+    """MERGE owns its cached new rows: a commit that raises still leaves the
+    session's cache manager empty."""
+    spark.catalog.clearCache()
+    store = GraphStore(str(tmp_path / "store"), n_buckets=2)
+    assert store.merge(spark, spark.createDataFrame(quads([("d", "<s>", "<p>", "<o>", None)]))) == 1
+
+    def failing_commit(self, *args, **kwargs):
+        raise OSError("manifest write failed")
+
+    monkeypatch.setattr(GraphStore, "_commit", failing_commit)
+    batch = spark.createDataFrame(quads([("d", "<s>", "<p>", "<o2>", None)]))
+    with pytest.raises(OSError, match="manifest write failed"):
+        store.merge(spark, batch)
+    assert _cache_is_empty(spark)
+
+
 def test_pipeline_parses_each_rdf_conversation_once(spark, tmp_path, pipeline_inputs, monkeypatch):
     """Every RDF-labelled conversation reaches the kernel stage exactly once
     per run, however many actions the group's canonicalization and MERGE
