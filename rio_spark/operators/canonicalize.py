@@ -24,6 +24,7 @@ Two component resolvers live here:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 OWL_SAMEAS = "<http://www.w3.org/2002/07/owl#sameAs>"
@@ -147,7 +148,9 @@ def canonical_mapping(triples: DataFrame) -> DataFrame:
     the smaller root, so each root is its component's minimum. Python's
     code-point order on ``str`` equals Spark's UTF-8 binary string order.
     Driver memory is O(distinct alias edges). The result is a local
-    DataFrame, small enough for :func:`rewrite_triples` to broadcast."""
+    DataFrame built from an Arrow table (a LocalRelation: evaluating or
+    broadcasting it runs no Spark job and no Python worker), small enough
+    for :func:`rewrite_triples` to broadcast."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -162,10 +165,11 @@ def canonical_mapping(triples: DataFrame) -> DataFrame:
         a, b = find(src), find(dst)
         if a != b:
             parent[max(a, b)] = min(a, b)
-    return triples.sparkSession.createDataFrame(
-        [(x, r) for x in parent if (r := find(x)) != x],
-        "node string, canonical string",
-    )
+    nodes = [x for x in parent if find(x) != x]
+    return triples.sparkSession.createDataFrame(pa.table({
+        "node": pa.array(nodes, pa.string()),
+        "canonical": pa.array([find(x) for x in nodes], pa.string()),
+    }))
 
 
 def rewrite_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:

@@ -64,18 +64,25 @@ import re
 import time
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 GRAPH_COLUMNS = ["subject", "predicate", "object", "graph", "p_bucket"]
+QUAD_KEY = ["subject", "predicate", "object", "graph"]
 # strict bucket-dir name: `p_bucket=N` only — stray staging/temp dirs must
 # never parse as buckets
 _BUCKET_DIR_RE = re.compile(r"^p_bucket=(\d+)$")
 _MANIFEST_RE = re.compile(r"^manifest-(\d+)\.json$")
-LINEAGE_SCHEMA = (
-    "input_snapshot_id string, partition_hash string, triple_count long, committed_at double"
-)
-_EMPTY_GRAPH_SCHEMA = (
-    "subject string, predicate string, object string, graph string, p_bucket int"
+# Arrow schemas: small driver-side frames are built with
+# ``spark.createDataFrame(pa.Table)``, a LocalRelation that needs no Spark
+# job and no Python worker to evaluate (a Python list becomes a PythonRDD,
+# one job per evaluation)
+LINEAGE_SCHEMA = pa.schema([
+    ("input_snapshot_id", pa.string()), ("partition_hash", pa.string()),
+    ("triple_count", pa.int64()), ("committed_at", pa.float64()),
+])
+_EMPTY_GRAPH_SCHEMA = pa.schema(
+    [(c, pa.string()) for c in QUAD_KEY] + [("p_bucket", pa.int32())]
 )
 
 
@@ -358,7 +365,7 @@ class GraphStore:
 
     def _read_files(self, spark: SparkSession, files: list[str]) -> DataFrame:
         if not files:
-            return spark.createDataFrame([], _EMPTY_GRAPH_SCHEMA)
+            return spark.createDataFrame(_EMPTY_GRAPH_SCHEMA.empty_table())
         paths = [f"{self.graph_dir}/{f}" for f in files]
         return spark.read.option("basePath", self.graph_dir).parquet(*paths)
 
@@ -387,11 +394,12 @@ class GraphStore:
         facts about entity X"), file-pruned exactly like MERGE's
         anti-join: only files of the subjects' buckets whose manifest
         bounds can contain one of them are planned, so a lookup into a
-        billion-file store touches a handful of files.  One tiny Spark
-        job computes the subjects' buckets (the bucket function is
-        JVM-side xxhash64 — never reimplemented driver-side, where a
-        drifting copy would silently read the wrong buckets); the scan
-        then filters with ``isin`` (pushed to parquet row groups)."""
+        billion-file store touches a handful of files.  The subjects'
+        buckets come from the JVM-side xxhash64 over a local Arrow frame
+        (never reimplemented driver-side, where a drifting copy would
+        silently read the wrong buckets; the optimizer folds the projection
+        into the local relation, so no Spark job runs); the scan then
+        filters with ``isin`` (pushed to parquet row groups)."""
         if not subjects:
             return self._read_files(spark, [])
         n = self.current_snapshot() if snapshot is None else snapshot
@@ -405,7 +413,7 @@ class GraphStore:
         spec = self._spec_of(m) if m else self.n_buckets
         per_bucket: dict[str, tuple[str, str]] = {}
         rows = spark.createDataFrame(
-            [(s,) for s in subjects], "subject string"
+            pa.table({"subject": pa.array(subjects, pa.string())})
         ).select(
             "subject",
             F.pmod(F.xxhash64("subject"), F.lit(spec)).cast("int").alias("b"),
@@ -644,10 +652,12 @@ class GraphStore:
 
     def lineage(self, spark: SparkSession) -> DataFrame:
         if not Path(self.lineage_dir).exists():
-            return spark.createDataFrame([], LINEAGE_SCHEMA)
+            return spark.createDataFrame(LINEAGE_SCHEMA.empty_table())
         return spark.read.parquet(self.lineage_dir)
 
     def committed_partitions(self, spark: SparkSession, snapshot_id: str) -> set[str]:
+        if not Path(self.lineage_dir).exists():
+            return set()
         lin = self.lineage(spark)
         return {
             r["partition_hash"]
@@ -726,57 +736,60 @@ class GraphStore:
         that also bounds the files every later merge scans and reads
         footers of. The append + manifest flip is the Iceberg commit: a
         crash anywhere leaves the previous snapshot live and at most orphan
-        files for expiry."""
+        files for expiry.
+
+        The input is read once: the bucketed, deduplicated batch is the one
+        persisted frame, which the bounds aggregate and the anti-join both
+        scan, and which is unpersisted before the call returns. The added
+        rows are counted by an observation on the append itself, so there
+        is no separate counting pass. The persisted batch never scans the
+        store, so the append does not make Spark re-list the store's files
+        to refresh a cached plan."""
         self._bootstrap_if_legacy()
-        batch = self._bucketed(triples).dropDuplicates(
-            ["subject", "predicate", "object", "graph"]
-        )
         base = self.current_snapshot()  # the snapshot this merge plans against
         live = self._live_files(base)
         known_bounds = (
             self._read_manifest(base).get("bounds", {}) if base is not None else {}
         )
-        if not live:
-            new_rows = batch
-        else:
-            # bucket-level prune (which buckets the batch touches) PLUS
-            # file-level skip inside each bucket via the manifest's subject
-            # bounds — both from one bounded driver-side agg of the batch
-            batch_bounds = {
-                f"p_bucket={r['p_bucket']}": (r["lo"], r["hi"])
-                for r in batch.groupBy("p_bucket").agg(
-                    F.min("subject").alias("lo"), F.max("subject").alias("hi")
-                ).collect()
-            }
-            scoped_files = [
-                f for f in live
-                if (bb := batch_bounds.get(f.split("/", 1)[0])) is not None
-                and self._may_contain(known_bounds.get(f), bb[0], bb[1])
-            ]
-            scoped = (
-                self._read_files(spark, scoped_files)
-                .select("subject", "predicate", "object", "graph")
-                .alias("ex")
-            )
-            b = batch.alias("b")
-            # null-safe equality on graph: the default graph is NULL and a
-            # plain equi-join would re-insert it forever
-            cond = (
-                (F.col("b.subject") == F.col("ex.subject"))
-                & (F.col("b.predicate") == F.col("ex.predicate"))
-                & (F.col("b.object") == F.col("ex.object"))
-                & F.col("b.graph").eqNullSafe(F.col("ex.graph"))
-            )
-            new_rows = b.join(scoped, cond, "left_anti")
-        # one task per bucket: the partitioned append writes one file per
-        # task per bucket, so unclustered rows would write up to
-        # (shuffle partitions x touched buckets) files per commit
-        new_rows = new_rows.repartition("p_bucket").cache()
+        batch = self._bucketed(triples).dropDuplicates(QUAD_KEY).persist()
         try:
-            n = new_rows.count()
+            new_rows = batch
+            if live:
+                # bucket-level prune (which buckets the batch touches) PLUS
+                # file-level skip inside each bucket via the manifest's
+                # subject bounds — both from one bounded driver-side agg of
+                # the batch
+                batch_bounds = {
+                    f"p_bucket={r['p_bucket']}": (r["lo"], r["hi"])
+                    for r in batch.groupBy("p_bucket").agg(
+                        F.min("subject").alias("lo"), F.max("subject").alias("hi")
+                    ).collect()
+                }
+                scoped_files = [
+                    f for f in live
+                    if (bb := batch_bounds.get(f.split("/", 1)[0])) is not None
+                    and self._may_contain(known_bounds.get(f), bb[0], bb[1])
+                ]
+                scoped = self._read_files(spark, scoped_files).select(QUAD_KEY).alias("ex")
+                # null-safe equality on graph: the default graph is NULL and
+                # a plain equi-join would re-insert it forever
+                cond = (
+                    (F.col("b.subject") == F.col("ex.subject"))
+                    & (F.col("b.predicate") == F.col("ex.predicate"))
+                    & (F.col("b.object") == F.col("ex.object"))
+                    & F.col("b.graph").eqNullSafe(F.col("ex.graph"))
+                )
+                new_rows = batch.alias("b").join(scoped, cond, "left_anti")
+            added_rows = Observation("merge_added")
+            before = self._list_data_files()
+            # one task per bucket: the partitioned append writes one file per
+            # task per bucket, so unclustered rows would write up to
+            # (shuffle partitions x touched buckets) files per commit
+            new_rows.repartition("p_bucket").observe(
+                added_rows, F.count(F.lit(1)).alias("n")
+            ).write.mode("append").partitionBy("p_bucket").parquet(self.graph_dir)
+            n = added_rows.get["n"]
             if n:
-                before = self._list_data_files()
-                new_rows.write.mode("append").partitionBy("p_bucket").parquet(self.graph_dir)
                 added = self._list_data_files() - before
                 self._commit(
                     set(live) | added, "merge", expect_parent=base,
@@ -784,13 +797,15 @@ class GraphStore:
                 )
             return n
         finally:
-            new_rows.unpersist()
+            batch.unpersist()
 
     def commit_lineage(
         self, spark: SparkSession, snapshot_id: str, partition_hash: str, triple_count: int
     ) -> None:
+        row = {"input_snapshot_id": snapshot_id, "partition_hash": partition_hash,
+               "triple_count": triple_count, "committed_at": time.time()}
         spark.createDataFrame(
-            [(snapshot_id, partition_hash, triple_count, time.time())], LINEAGE_SCHEMA
+            pa.Table.from_pylist([row], schema=LINEAGE_SCHEMA)
         ).write.mode("append").parquet(self.lineage_dir)
 
     # -- maintenance -----------------------------------------------------------

@@ -15,7 +15,13 @@ Each group runs the kernel stage exactly once: :func:`run_group` persists
 extraction ∪ linking as one frame, counts its error rows under the same
 action, and every later reader (canonicalization's sameAs edges and
 rewrite, MERGE's bounds and anti-join) scans that frame; it is unpersisted
-before the step returns.
+before the step returns. Assembly runs once too: both branches read the
+same projected documents, so their assembly exchanges are identical and
+AQE reuses one (for a scanned input; over a cached DataFrame AQE plans a
+table-cache stage per branch and reuses nothing above them). MERGE persists its bucketed, deduplicated batch once,
+counts the added rows with an observation on the append, and does not
+re-list the store; the alias mapping and lineage row are local Arrow
+frames, which need no Spark job of their own.
 """
 
 from __future__ import annotations
@@ -54,14 +60,20 @@ def run_group(
     """One self-contained transcript set (a partition group in batch mode, a
     micro-batch in streaming mode) through the whole chain: salted assembly
     -> extraction + entity linking -> canonicalize -> MERGE -> lineage row.
-    Returns (quads merged, error rows)."""
-    docs = assemble_documents_salted(transcripts)
+    Returns (quads merged, error rows). Turns without a ``conv_id`` belong
+    to no document and are dropped."""
+    docs = assemble_documents_salted(transcripts.filter(F.col("conv_id").isNotNull()))
     if docs_meta is not None:
         docs = docs.join(F.broadcast(docs_meta), "conv_id", "left")
     else:
         docs = docs.withColumn("format", F.lit(None).cast("string")).withColumn(
             "base_iri", F.lit(None).cast("string")
         )
+    # one projection (and the conv_id filter above) for both branches: the
+    # extraction branch's inner join would otherwise infer isnotnull(conv_id)
+    # down to the scan and its mapInArrow would keep n_turns, so the two
+    # assembly exchanges would differ and assembly would run twice
+    docs = docs.select("conv_id", "text", "format", "base_iri")
     rows = extract_triples(docs.filter(F.col("format").isNotNull()))
     if dictionary is not None:
         # linked rows carry null error columns, so they read as good triples

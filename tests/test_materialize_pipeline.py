@@ -22,6 +22,12 @@ from rio_spark.testing.corpus import load_corpus
 
 CORPUS = load_corpus()
 N_CONVS = 120
+# Spark jobs one run_pipeline group submits in test_pipeline_group_job_budget,
+# as measured on 4 cores. The same group submitted 29 while local frames came
+# from Python lists, MERGE computed its batch twice and cached a plan that
+# scans the store, and manifest-named reads of more than 32 files ran a
+# listing job.
+JOB_BUDGET = 19
 
 
 def quads(pdf_rows):
@@ -79,6 +85,16 @@ def pipeline_inputs(spark):
         meta[["conv_id", "format", "base_iri"]].where(pd.notnull(meta), None)
     )
     return transcripts, meta_df, entity_dictionary(spark)
+
+
+@pytest.fixture(scope="module")
+def parquet_transcripts(spark, pipeline_inputs, tmp_path_factory):
+    """The pipeline inputs' transcripts read from parquet, as the product
+    reads them. (With a cached DataFrame as input, AQE plans one table-cache
+    stage per reader and reuses no exchange above them.)"""
+    path = str(tmp_path_factory.mktemp("transcripts") / "t")
+    pipeline_inputs[0].write.parquet(path)
+    return spark.read.parquet(path)
 
 
 def test_pipeline_end_to_end_and_resume(spark, tmp_path, pipeline_inputs):
@@ -195,6 +211,107 @@ def test_pipeline_leaves_no_cached_frame(spark, tmp_path, pipeline_inputs):
     rep = run_pipeline(spark, transcripts, store, "s", meta_df, dictionary, n_groups=1)
     assert rep.triples_merged > 0
     assert _cache_is_empty(spark)
+
+
+def _row_counter(spark):
+    """A pass-through ``mapInArrow`` and the accumulator it adds every row
+    it passes to: wrapped around a frame, it counts how often the frame's
+    rows are computed."""
+    seen = spark.sparkContext.accumulator(0)
+
+    def wrap(df):
+        def count(batches):
+            for batch in batches:
+                seen.add(batch.num_rows)
+                yield batch
+
+        return df.mapInArrow(count, df.schema)
+
+    return seen, wrap
+
+
+def test_merge_into_non_empty_store_reads_its_input_once(spark, tmp_path):
+    """MERGE computes its input once: the bounds aggregate and the
+    anti-join share one persisted batch."""
+    schema = "doc_id string, subject string, predicate string, object string, graph string"
+    rows = [("d", f"<http://e/s{i}>", "<http://p/x>", f'"{i % 3}"', None) for i in range(40)]
+    store = GraphStore(str(tmp_path / "store"), n_buckets=4)
+    assert store.merge(spark, spark.createDataFrame(rows[:20], schema)) == 20
+    seen, wrap = _row_counter(spark)
+    assert store.merge(spark, wrap(spark.createDataFrame(rows, schema))) == 20
+    assert seen.value == len(rows)
+
+
+def test_pipeline_reads_each_transcript_row_once_per_group(
+    spark, tmp_path, pipeline_inputs, parquet_transcripts
+):
+    """The extraction and linking branches share one assembly: each group
+    reads its transcripts once (every group scans the whole input, whose
+    group filter sits above the counter)."""
+    _, meta_df, dictionary = pipeline_inputs
+    transcripts = parquet_transcripts
+    seen, wrap = _row_counter(spark)
+    store = GraphStore(str(tmp_path / "store"), n_buckets=4)
+    rep = run_pipeline(spark, wrap(transcripts), store, "s", meta_df, dictionary, n_groups=2)
+    assert rep.triples_merged > 0
+    assert seen.value == 2 * transcripts.count()
+
+
+def test_pipeline_drops_turns_without_conv_id(spark, tmp_path):
+    """A turn with a NULL conv_id belongs to no document and merges no
+    quad. Linked, it would become a NULL-subject quad that MERGE's
+    anti-join never matches, so every rerun would merge it again."""
+    from datetime import datetime
+
+    ts = datetime(2024, 1, 1)
+    transcripts = spark.createDataFrame(
+        [("conv_a", 0, "user", "Alice Johnson flew to Paris", None, ts),
+         (None, 0, "user", "Bob Smith flew to Tokyo", None, ts)],
+        TRANSCRIPT_SCHEMA,
+    )
+    dictionary = entity_dictionary(spark)
+    store = GraphStore(str(tmp_path / "store"), n_buckets=4)
+    first = run_pipeline(spark, transcripts, store, "s1", dictionary=dictionary, n_groups=1)
+    assert first.triples_merged > 0
+    assert store.graph(spark).filter(F.col("subject").isNull()).count() == 0
+    again = run_pipeline(spark, transcripts, store, "s2", dictionary=dictionary, n_groups=1)
+    assert again.triples_merged == 0
+
+
+def test_pipeline_group_job_budget(
+    spark, tmp_path, pipeline_inputs, parquet_transcripts, monkeypatch
+):
+    """One group into a store whose touched buckets hold more than 32 live
+    files submits a fixed, small number of Spark jobs: no listing job for
+    MERGE's manifest-named read, no job to build a local frame, one
+    assembly and one MERGE batch."""
+    _, meta_df, dictionary = pipeline_inputs
+    transcripts = parquet_transcripts
+    store = GraphStore(str(tmp_path / "store"), n_buckets=4)
+    for k in range(9):  # 9 merges x 4 buckets; '!' and '~' bound every batch
+        store.merge(spark, spark.createDataFrame(
+            [(f"<{c}{i}>", "<http://p/x>", f'"{k}"', None) for c in "!~" for i in range(20)],
+            "subject string, predicate string, object string, graph string",
+        ))
+    scanned = []
+    real = GraphStore._read_files
+
+    def spy(self, sp, files):
+        scanned.append(len(files))
+        return real(self, sp, files)
+
+    monkeypatch.setattr(GraphStore, "_read_files", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("pipeline-job-budget", "one run_pipeline group")
+    try:
+        rep = run_pipeline(spark, transcripts, store, "s", meta_df, dictionary, n_groups=1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("pipeline-job-budget"))
+    assert rep.triples_merged > 0
+    assert max(scanned) > 32
+    assert n_jobs <= JOB_BUDGET, n_jobs
 
 
 def test_streaming_pipeline_matches_batch_and_resumes(spark, tmp_path, pipeline_inputs):
