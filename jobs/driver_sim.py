@@ -8,11 +8,12 @@ DuckDB HUGEINT vs Spark long mismatch fails there even when values match).
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rio_spark.plans.catalog import ORACLES, QUERIES  # noqa: E402
 from rio_spark.session import get_spark  # noqa: E402
@@ -25,7 +26,7 @@ ONLY = sys.argv[2].split(",") if len(sys.argv) > 2 else None
 
 
 def main():
-    spark = get_spark(cores=16)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")

@@ -38,16 +38,6 @@ def main() -> None:
     ap.add_argument("--n-groups", type=int, default=8)
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--compact", action="store_true",
-                    help="after committing, compact buckets with many small "
-                         "files (maintenance window: see GraphStore.compact)")
-    ap.add_argument("--compact-min-files", type=int, default=8)
-    ap.add_argument("--tag", help="after committing, pin the resulting store "
-                    "snapshot under this name (a published dataset version "
-                    "survives expiry until the tag is dropped)")
-    ap.add_argument("--expire-keep", type=int, default=None,
-                    help="after committing (and compacting/tagging), expire "
-                         "all but the newest N snapshots and GC their files")
     args = ap.parse_args()
 
     from rio_spark.session import get_spark
@@ -73,29 +63,7 @@ def main() -> None:
         dictionary=entity_dictionary(spark),
         n_groups=args.n_groups,
     )
-    out = report.__dict__
-    if args.compact:
-        out["compaction"] = {
-            str(b): {"files_before": fb, "files_after": fa}
-            for b, (fb, fa) in store.compact(
-                spark, min_files=args.compact_min_files
-            ).items()
-        }
-    if args.tag:
-        # resume-safe: rerunning the same command line (the documented
-        # resume workflow) finds the tag already on the same snapshot and
-        # treats it as done; a tag on a DIFFERENT snapshot stays a loud
-        # error (re-pointing a published version must be deliberate)
-        cur = store.current_snapshot()
-        if store.tags().get(args.tag) == cur:
-            out["tagged"] = {args.tag: cur}
-        else:
-            out["tagged"] = {args.tag: store.create_tag(args.tag)}
-    if args.expire_keep is not None:
-        out["expired_files_deleted"] = store.expire_snapshots(
-            keep_last=args.expire_keep
-        )
-    print(json.dumps(out, default=str))
+    print(json.dumps(report.__dict__, default=str))
 
 
 if __name__ == "__main__":

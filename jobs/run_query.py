@@ -27,14 +27,11 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("name", nargs="?", help="catalog query name (see --list)")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "8")))
+    ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--limit", type=int, default=50, help="rows to print (0 = count only)")
     ap.add_argument("--list", action="store_true", help="list catalog queries and exit")
     ap.add_argument("--explain", action="store_true", help="print the physical plan instead of rows")
     ap.add_argument("--oracle", action="store_true", help="print the DuckDB oracle SQL and exit")
-    ap.add_argument("--runs", type=int, default=1,
-                    help="repeat the query: run 1 is cold, steady = min of the rest "
-                         "(fresh-JVM probe mode for bench.py's pinned timings)")
     args = ap.parse_args()
 
     from rio_spark.plans.catalog import ORACLES, QUERIES
@@ -53,21 +50,6 @@ def main() -> int:
     from rio_spark.session import get_spark
 
     spark = get_spark(app_name=f"rio_query_{args.name}", cores=args.cores)
-    if args.runs > 1:
-        # probe mode: NOTHING runs before the timed loop — some queries do
-        # eager work in their construction (iterative checkpoints, stream
-        # drains), so even building the DataFrame outside the loop would
-        # warm the JVM and fake the cold number
-        runs = []
-        n = 0
-        for _ in range(args.runs):
-            t0 = time.perf_counter()
-            n = QUERIES[args.name](spark, args.sf_dir).count()
-            runs.append(round(time.perf_counter() - t0, 3))
-        print(json.dumps({"query": args.name, "rows": n, "cold": runs[0],
-                          "steady": min(runs[1:]), "all_runs_sec": runs,
-                          "sf_dir": args.sf_dir}))
-        return 0
     df = QUERIES[args.name](spark, args.sf_dir)
     if args.explain:
         df.explain("formatted")

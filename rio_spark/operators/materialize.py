@@ -66,24 +66,28 @@ from pathlib import Path
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
-GRAPH_COLUMNS = ["subject", "predicate", "object", "graph", "p_bucket"]
 QUAD_KEY = ["subject", "predicate", "object", "graph"]
 # strict bucket-dir name: `p_bucket=N` only — stray staging/temp dirs must
 # never parse as buckets
 _BUCKET_DIR_RE = re.compile(r"^p_bucket=(\d+)$")
 _MANIFEST_RE = re.compile(r"^manifest-(\d+)\.json$")
-# Arrow schemas: small driver-side frames are built with
-# ``spark.createDataFrame(pa.Table)``, a LocalRelation that needs no Spark
-# job and no Python worker to evaluate (a Python list becomes a PythonRDD,
-# one job per evaluation)
+# Each table's one schema definition, in Arrow: small driver-side frames are
+# built with ``spark.createDataFrame(pa.Table)``, a LocalRelation that needs
+# no Spark job and no Python worker to evaluate (a Python list becomes a
+# PythonRDD, one job per evaluation). The parquet reads pass the same schema
+# as a Spark StructType, which skips Spark's schema-inference job (one 1-task
+# job per read).
 LINEAGE_SCHEMA = pa.schema([
     ("input_snapshot_id", pa.string()), ("partition_hash", pa.string()),
     ("triple_count", pa.int64()), ("committed_at", pa.float64()),
 ])
-_EMPTY_GRAPH_SCHEMA = pa.schema(
+_GRAPH_SCHEMA = pa.schema(
     [(c, pa.string()) for c in QUAD_KEY] + [("p_bucket", pa.int32())]
 )
+_LINEAGE_READ_SCHEMA = from_arrow_schema(LINEAGE_SCHEMA)
+_GRAPH_READ_SCHEMA = from_arrow_schema(_GRAPH_SCHEMA)
 
 
 _UNCHECKED = object()  # _commit sentinel: "caller did not capture a base"
@@ -365,9 +369,10 @@ class GraphStore:
 
     def _read_files(self, spark: SparkSession, files: list[str]) -> DataFrame:
         if not files:
-            return spark.createDataFrame(_EMPTY_GRAPH_SCHEMA.empty_table())
+            return spark.createDataFrame(_GRAPH_SCHEMA.empty_table())
         paths = [f"{self.graph_dir}/{f}" for f in files]
-        return spark.read.option("basePath", self.graph_dir).parquet(*paths)
+        return (spark.read.schema(_GRAPH_READ_SCHEMA)
+                .option("basePath", self.graph_dir).parquet(*paths))
 
     def graph(self, spark: SparkSession, snapshot: int | None = None,
               as_of: float | None = None, tag: str | None = None) -> DataFrame:
@@ -653,7 +658,7 @@ class GraphStore:
     def lineage(self, spark: SparkSession) -> DataFrame:
         if not Path(self.lineage_dir).exists():
             return spark.createDataFrame(LINEAGE_SCHEMA.empty_table())
-        return spark.read.parquet(self.lineage_dir)
+        return spark.read.schema(_LINEAGE_READ_SCHEMA).parquet(self.lineage_dir)
 
     def committed_partitions(self, spark: SparkSession, snapshot_id: str) -> set[str]:
         if not Path(self.lineage_dir).exists():
@@ -670,8 +675,11 @@ class GraphStore:
     # -- writes ---------------------------------------------------------------
 
     def _bucketed(self, triples: DataFrame) -> DataFrame:
+        # the cast pins every data file to ``_GRAPH_SCHEMA``, which the reads
+        # name instead of inferring: an all-NULL column of an untyped input
+        # frame would otherwise be written as a parquet BOOLEAN column
         return triples.select(
-            "subject", "predicate", "object", "graph",
+            *(F.col(c).cast("string").alias(c) for c in QUAD_KEY),
             F.pmod(F.xxhash64("subject"), F.lit(self.n_buckets)).cast("int").alias("p_bucket"),
         )
 

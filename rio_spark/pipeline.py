@@ -7,9 +7,20 @@ graph store with per-partition lineage (resume-from-checkpoint).
 
 The unit of commit/resume is an input partition group
 (``pmod(xxhash64(conv_id), n_groups)``): conversations never straddle groups,
-so a group is independently correct; a rerun skips groups already in lineage
-(anti-join against the lineage table) and re-merging a half-committed group
-is idempotent because MERGE dedups on the quad key.
+so extraction, linking and MERGE of a group do not depend on any other
+group; a rerun skips groups already in lineage (anti-join against the
+lineage table) and re-merging a half-committed group is idempotent because
+MERGE dedups on the quad key.
+
+Known limitation: owl:sameAs canonicalization is per group, not per store.
+Each group's union-find sees only that group's sameAs edges, so a component
+whose edges span conversations in different groups (or different runs or
+micro-batches) is split: with A = ``<a> owl:sameAs <b> . <b> <x> "1" .`` and
+B = ``<c> owl:sameAs <b> . <c> <y> "2" .`` in different groups, the store
+holds ``<a> <x> "1"`` and ``<b> <y> "2"`` instead of ``<a> <y> "2"``, and
+the rewrite drops the edges as self-loops, so no later group reconciles
+them. The store therefore depends on ``n_groups``; one store-wide alias
+mapping is ROADMAP direction 2.
 
 Each group runs the kernel stage exactly once: :func:`run_group` persists
 extraction ∪ linking as one frame, counts its error rows under the same
@@ -18,10 +29,11 @@ rewrite, MERGE's bounds and anti-join) scans that frame; it is unpersisted
 before the step returns. Assembly runs once too: both branches read the
 same projected documents, so their assembly exchanges are identical and
 AQE reuses one (for a scanned input; over a cached DataFrame AQE plans a
-table-cache stage per branch and reuses nothing above them). MERGE persists its bucketed, deduplicated batch once,
-counts the added rows with an observation on the append, and does not
-re-list the store; the alias mapping and lineage row are local Arrow
-frames, which need no Spark job of their own.
+table-cache stage per branch and reuses nothing above them). MERGE persists
+its bucketed, deduplicated batch once, counts the added rows with an
+observation on the append, and does not re-list the store; the alias
+mapping and lineage row are local Arrow frames, which need no Spark job of
+their own.
 """
 
 from __future__ import annotations

@@ -15,9 +15,9 @@ Conventions that make the side-by-side hash comparison meaningful:
 
 Cache lifetime: a few queries ``.cache()`` a multi-consumed extraction that
 the RETURNED plan reads, so they cannot unpersist before the caller's
-action. The contract is caller-owned: one-shot harnesses (the driver, the
-bench sweep, run_query.py) run the action and exit or rely on LRU
-eviction; a long-lived session composing many catalog queries should call
+action. The contract is caller-owned: one-shot callers (the driver,
+jobs/driver_sim.py, jobs/run_query.py) run the action and exit or rely on
+LRU eviction; a long-lived session composing many catalog queries should call
 ``spark.catalog.clearCache()`` between batches.
 """
 

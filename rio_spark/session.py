@@ -1,9 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local mode stands in for the multi-executor cluster (BASELINE.md scaling rows
-are measured at local[8] vs local[32]); every knob here is also the right
-default at cluster scale except shuffle partitions, which should track
-cluster cores there.
+Local mode stands in for the multi-executor cluster: ``local[n]`` with n from
+``cores``, else ``SPARK_GRAFT_CPUS``, else ``os.cpu_count()``. Every knob here
+is also the right default at cluster scale except shuffle partitions, which
+should track cluster cores there.
 """
 
 from __future__ import annotations
@@ -111,7 +111,7 @@ def coalesced_shuffles(spark: SparkSession):
     racing on the same SparkSession from another thread (or a nested /
     overlapping scope) would inherit coalescing for its Python stages — the
     exact setting the global disable exists to avoid.  All repo harnesses
-    (driver, bench, CLI, tests) execute queries sequentially on one thread;
+    (driver, kgbench, CLI, tests) execute queries sequentially on one thread;
     concurrent callers should give each workload its own
     ``spark.newSession()`` (per-session conf) instead of sharing this one.
     """

@@ -1,7 +1,7 @@
-"""Every module of the package, every job script, bench.py and the driver
-entry import cleanly, so a deletion that leaves a dangling import fails
-here in seconds instead of at CLI time.  All scripts keep their work
-behind ``__main__`` guards, so importing them runs nothing."""
+"""Every module of the package, every job script and the driver entry
+import cleanly, so a deletion that leaves a dangling import fails here in
+seconds instead of at CLI time.  All scripts keep their work behind
+``__main__`` guards, so importing them runs nothing."""
 
 import importlib
 import importlib.util
@@ -18,7 +18,7 @@ MODULES = sorted(
 )
 SCRIPTS = sorted(
     str(p.relative_to(ROOT))
-    for p in [*ROOT.glob("jobs/*.py"), ROOT / "bench.py", ROOT / "__spark_entry__.py"]
+    for p in [*ROOT.glob("jobs/*.py"), ROOT / "__spark_entry__.py"]
 )
 
 
