@@ -7,12 +7,12 @@ stable canonical IRI (lexicographic min — deterministic).
 
 Two component resolvers live here:
 
-* :func:`canonical_mapping` (the pipeline path) collects the distinct alias
-  edges to the driver with ONE Spark action and runs a union-find there.
-  Its output is broadcast by :func:`rewrite_triples` anyway, so every
-  (node, canonical) row reaches the driver regardless; driver memory is
-  bounded by the distinct alias edges, which for a sameAs forest is the
-  size of the mapping the rewrite broadcasts.
+* :func:`canonical_mapping` (the pipeline path) collects the alias edges
+  to the driver with ONE Spark job and runs a union-find there. Its output
+  is broadcast by :func:`rewrite_triples` anyway, so every (node,
+  canonical) row reaches the driver regardless; driver memory is bounded
+  by the alias edges, which for a sameAs forest is about the size of the
+  mapping the rewrite broadcasts.
 * :func:`connected_components` is the distributed alternating large-star /
   small-star algorithm ("Connected Components in MapReduce and Beyond") —
   each round is two DataFrame self-aggregations, converging in O(log n)
@@ -143,11 +143,16 @@ def canonical_mapping(triples: DataFrame) -> DataFrame:
     its own canonical; canonical = lexicographic min of its owl:sameAs
     component (stable entity IRI).
 
-    Runs ONE Spark action, the ``collect()`` of the distinct alias edges;
+    Runs ONE Spark action, the ``collect()`` of the alias edges;
     components are resolved on the driver by a union-find that always keeps
-    the smaller root, so each root is its component's minimum. Python's
-    code-point order on ``str`` equals Spark's UTF-8 binary string order.
-    Driver memory is O(distinct alias edges). The result is a local
+    the smaller root, so each root is its component's minimum, and that
+    skips a repeated edge as already joined. Python's code-point order on
+    ``str`` equals Spark's UTF-8 binary string order. Driver memory is
+    O(alias edges). The collect runs no shuffle, so it is one job. Over a
+    persisted input it is the job that fills the cache and fires the
+    observations attached to it, which is how ``run_group`` counts error
+    rows; in Spark 4.1 a first reader that shuffles the cached rows
+    completes an observation with no metrics instead. The result is a local
     DataFrame built from an Arrow table (a LocalRelation: evaluating or
     broadcasting it runs no Spark job and no Python worker), small enough
     for :func:`rewrite_triples` to broadcast."""
@@ -161,7 +166,7 @@ def canonical_mapping(triples: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for src, dst in sameas_edges(triples).distinct().collect():
+    for src, dst in sameas_edges(triples).collect():
         a, b = find(src), find(dst)
         if a != b:
             parent[max(a, b)] = min(a, b)

@@ -94,19 +94,22 @@ def extract_triples(
     ``format_col``. ``base_col`` is optional (null base = absolute IRIs only).
     Split the result with :func:`triples_of` / :func:`errors_of`.
 
-    ``parallelism`` (default: 4× defaultParallelism) repartitions the doc
-    stream before the kernel stage. This is load-bearing for scaling: AQE
-    coalesces post-shuffle partitions by BYTE size, and assembled documents
-    are tiny relative to their parse cost, so without an explicit repartition
-    the whole Python-kernel stage can collapse onto one or two tasks and
-    throughput stops scaling with cores (observed: flat 8->32-core scaling
-    before this fix). The round-robin repartition also evens out per-document
-    parse-cost skew (a few huge documents).
+    ``parallelism`` (default: defaultParallelism, one task per core)
+    repartitions the doc stream before the kernel stage. This is
+    load-bearing for scaling: AQE coalesces post-shuffle partitions by BYTE
+    size, and assembled documents are tiny relative to their parse cost, so
+    without an explicit repartition the whole Python-kernel stage can
+    collapse onto one or two tasks and throughput stops scaling with cores
+    (observed: flat 8->32-core scaling before this fix). More tasks than
+    cores cost more than they even out: each ``mapInArrow`` task pays about
+    0.25 s of core time before the kernel runs (the Python worker's
+    ``importlib.invalidate_caches()`` re-reads the zip directories on its
+    path; 4 cores measured 0.15-0.27 s per warm task, 0.36-0.40 s cold), so
+    4× cores added about 0.75 s of wall per call at kgbench's size, more
+    than per-document parse-cost skew costs there.
     """
     if parallelism is None:
-        # 4x cores: fine-grained round-robin absorbs per-document parse-cost
-        # skew (a 10k-statement doc costs ~400ms; most cost ~1ms)
-        parallelism = docs.sparkSession.sparkContext.defaultParallelism * 4
+        parallelism = docs.sparkSession.sparkContext.defaultParallelism
     if parallelism:
         docs = docs.repartition(parallelism)
     cols = set(docs.columns)

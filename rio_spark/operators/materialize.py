@@ -746,20 +746,28 @@ class GraphStore:
         crash anywhere leaves the previous snapshot live and at most orphan
         files for expiry.
 
-        The input is read once: the bucketed, deduplicated batch is the one
-        persisted frame, which the bounds aggregate and the anti-join both
-        scan, and which is unpersisted before the call returns. The added
-        rows are counted by an observation on the append itself, so there
-        is no separate counting pass. The persisted batch never scans the
-        store, so the append does not make Spark re-list the store's files
-        to refresh a cached plan."""
+        The input is read once and shuffled once: the batch is
+        hash-partitioned by ``p_bucket``, deduplicated within that
+        partitioning (``p_bucket`` is a function of ``subject``, so the
+        dedup key is still the quad key) and persisted. The bounds aggregate groups by ``p_bucket`` without a
+        shuffle, and a broadcast anti-join keeps the clustering, so the
+        planner drops the pre-write repartition; a sort-merge anti-join
+        (a scoped store side above the broadcast threshold) shuffles on the
+        full key and keeps it. The batch is unpersisted before the call
+        returns. The added rows are counted by an observation on the append
+        itself, so there is no separate counting pass. The persisted batch
+        never scans the store, so the append does not make Spark re-list
+        the store's files to refresh a cached plan."""
         self._bootstrap_if_legacy()
         base = self.current_snapshot()  # the snapshot this merge plans against
         live = self._live_files(base)
         known_bounds = (
             self._read_manifest(base).get("bounds", {}) if base is not None else {}
         )
-        batch = self._bucketed(triples).dropDuplicates(QUAD_KEY).persist()
+        batch = (
+            self._bucketed(triples).repartition("p_bucket")
+            .dropDuplicates(["p_bucket", *QUAD_KEY]).persist()
+        )
         try:
             new_rows = batch
             if live:
@@ -778,11 +786,12 @@ class GraphStore:
                     if (bb := batch_bounds.get(f.split("/", 1)[0])) is not None
                     and self._may_contain(known_bounds.get(f), bb[0], bb[1])
                 ]
-                scoped = self._read_files(spark, scoped_files).select(QUAD_KEY).alias("ex")
+                scoped = self._read_files(spark, scoped_files).alias("ex")
                 # null-safe equality on graph: the default graph is NULL and
                 # a plain equi-join would re-insert it forever
                 cond = (
-                    (F.col("b.subject") == F.col("ex.subject"))
+                    (F.col("b.p_bucket") == F.col("ex.p_bucket"))
+                    & (F.col("b.subject") == F.col("ex.subject"))
                     & (F.col("b.predicate") == F.col("ex.predicate"))
                     & (F.col("b.object") == F.col("ex.object"))
                     & F.col("b.graph").eqNullSafe(F.col("ex.graph"))
@@ -792,7 +801,9 @@ class GraphStore:
             before = self._list_data_files()
             # one task per bucket: the partitioned append writes one file per
             # task per bucket, so unclustered rows would write up to
-            # (shuffle partitions x touched buckets) files per commit
+            # (shuffle partitions x touched buckets) files per commit. Rows
+            # still clustered by the batch's shuffle need no new one: the
+            # planner drops this repartition there
             new_rows.repartition("p_bucket").observe(
                 added_rows, F.count(F.lit(1)).alias("n")
             ).write.mode("append").partitionBy("p_bucket").parquet(self.graph_dir)

@@ -23,17 +23,18 @@ them. The store therefore depends on ``n_groups``; one store-wide alias
 mapping is ROADMAP direction 2.
 
 Each group runs the kernel stage exactly once: :func:`run_group` persists
-extraction ∪ linking as one frame, counts its error rows under the same
-action, and every later reader (canonicalization's sameAs edges and
-rewrite, MERGE's bounds and anti-join) scans that frame; it is unpersisted
-before the step returns. Assembly runs once too: both branches read the
-same projected documents, so their assembly exchanges are identical and
-AQE reuses one (for a scanned input; over a cached DataFrame AQE plans a
-table-cache stage per branch and reuses nothing above them). MERGE persists
-its bucketed, deduplicated batch once, counts the added rows with an
-observation on the append, and does not re-list the store; the alias
-mapping and lineage row are local Arrow frames, which need no Spark job of
-their own.
+extraction ∪ linking as one frame and runs no action of its own. The first
+reader (canonicalization's collect of the sameAs edges) fills the frame and
+fires the observation that counts its error rows; every later reader (the
+rewrite, MERGE's bounds and anti-join) scans the filled frame, which is
+unpersisted before the step returns. Assembly runs once too: both branches
+read the same projected documents, so their assembly exchanges are
+identical and AQE reuses one (for a scanned input; over a cached DataFrame
+AQE plans a table-cache stage per branch and reuses nothing above them).
+MERGE persists its batch once, clustered by bucket with one shuffle, counts
+the added rows with an observation on the append, and does not re-list the
+store; the alias mapping and lineage row are local Arrow frames, which need
+no Spark job of their own.
 """
 
 from __future__ import annotations
@@ -73,7 +74,12 @@ def run_group(
     micro-batch in streaming mode) through the whole chain: salted assembly
     -> extraction + entity linking -> canonicalize -> MERGE -> lineage row.
     Returns (quads merged, error rows). Turns without a ``conv_id`` belong
-    to no document and are dropped."""
+    to no document and are dropped.
+
+    The persisted extraction ∪ linking frame is filled by its first reader,
+    canonicalization's shuffle-free collect, which also fires the
+    error-count observation (see ``canonical_mapping``); a separate count
+    would only add two jobs."""
     docs = assemble_documents_salted(transcripts.filter(F.col("conv_id").isNotNull()))
     if docs_meta is not None:
         docs = docs.join(F.broadcast(docs_meta), "conv_id", "left")
@@ -94,7 +100,6 @@ def run_group(
     errors = Observation("group_errors")
     rows = rows.observe(errors, F.count("error_kind").alias("n")).persist()
     try:
-        rows.count()  # the one kernel run: fills the cache, fires the observation
         n_new = store.merge(spark, canonicalize(triples_of(rows)))
         store.commit_lineage(spark, snapshot_id, partition_hash, n_new)
         return n_new, errors.get["n"]

@@ -136,3 +136,9 @@ def test_extraction_plan_is_arrow_batched(extracted):
     plan = extracted._jdf.queryExecution().executedPlan().toString()
     assert any(m in plan for m in ("MapInArrow", "PythonMapInArrow",
                                    "MapInPandas", "ArrowEvalPython")), plan
+
+
+def test_kernel_stage_runs_one_task_per_core(spark, extracted):
+    """Each mapInArrow task pays a fixed Python-worker start-up cost, so the
+    kernel stage runs one task per core, not a multiple of it."""
+    assert extracted.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

@@ -92,6 +92,55 @@ def test_link_entities_triples(spark, docs):
     assert '"alice johnson"' in set(labels.object)
 
 
+def _expression_classes(df) -> set[str]:
+    """Class names of every expression in the analyzed plan."""
+    names = set()
+    plans = [df._jdf.queryExecution().analyzed()]
+    while plans:
+        plan = plans.pop()
+        kids = plan.children()
+        plans.extend(kids.apply(i) for i in range(kids.size()))
+        exprs = plan.expressions()
+        stack = [exprs.apply(i) for i in range(exprs.size())]
+        while stack:
+            e = stack.pop()
+            names.add(e.getClass().getSimpleName())
+            kids = e.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    return names
+
+
+def test_ascii_lowercase_tokenizer_matches_lower(spark, monkeypatch):
+    """detect_mentions lowercases with an ASCII translate, not ``lower``:
+    its regexp keeps only ASCII letters, digits, apostrophes and spaces, so
+    both give the same grams, whatever the non-ASCII input."""
+    hand = [
+        "We met Alice JOHNSON in PaRiS", "İstanbul ISTANBUL ıstanbul İI",
+        "Straße STRASSE ß ẞ", "ΣΊΣΥΦΟΣ σίσυφος ς Σ", "Café CAFÉ é É",
+        "日本 Tokyo 日本語 TOKYO", "O'Brien's DON'T 42 4U", "Kelvin K Å",
+    ]
+    alphabet = "AbZzQq09' İıßẞΣσςéÉ日本K-.,\t\n"
+    rng = random.Random(7)
+    seeded = ["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 40)))
+              for _ in range(300)]
+    texts = hand + seeded
+    docs = spark.createDataFrame(
+        [(f"d{i}", t) for i, t in enumerate(texts)], "conv_id string, text string"
+    )
+
+    def grams():
+        return {tuple(r) for r in detect_mentions(docs).select(
+            "doc_id", "pos", "mention_key").collect()}
+
+    ascii_grams = grams()
+    assert "Lower" not in _expression_classes(link_entities(docs, entity_dictionary(spark)))
+    # the tokenizer as it was: ICU case mapping through ``lower``
+    monkeypatch.setattr(F, "translate", lambda col, matching, replace: F.lower(col))
+    assert "Lower" in _expression_classes(detect_mentions(docs))  # the walk sees it
+    assert ascii_grams == grams()
+    assert ("d0", 3, "johnson") in ascii_grams and ("d0", 5, "paris") in ascii_grams
+
+
 def test_connected_components_chain_and_star(spark):
     edges = spark.createDataFrame(
         pd.DataFrame(
@@ -214,8 +263,7 @@ def _jobs_of_canonicalize(spark, n_path: int, group: str):
 
 
 def test_canonicalize_submits_at_most_two_jobs(spark):
-    """Alias resolution is one collect (its shuffle stage runs as a job of
-    its own under AQE), however long the sameAs path."""
+    """Alias resolution is one collect, however long the sameAs path."""
     short_jobs, short_rows = _jobs_of_canonicalize(spark, 4, "canon-path-4")
     long_jobs, long_rows = _jobs_of_canonicalize(spark, 64, "canon-path-64")
     assert long_jobs <= 2

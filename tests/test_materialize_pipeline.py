@@ -26,8 +26,10 @@ N_CONVS = 120
 # as measured on 4 cores. The same group submitted 29 while local frames came
 # from Python lists, MERGE computed its batch twice and cached a plan that
 # scans the store, and manifest-named reads of more than 32 files ran a
-# listing job.
-JOB_BUDGET = 19
+# listing job; 18 while the group counted its persisted rows in an action of
+# their own, the sameAs collect deduplicated with a shuffle, and MERGE's
+# batch shuffled by quad key and again by bucket.
+JOB_BUDGET = 14
 
 
 def quads(pdf_rows):
@@ -47,6 +49,49 @@ def test_merge_is_idempotent(spark, tmp_path):
     more = spark.createDataFrame(quads([("d", "<s>", "<p>", "<o3>", None)]))
     assert store.merge(spark, more) == 1
     assert store.graph(spark).count() == 3
+
+
+def test_merge_under_sort_merge_anti_join(spark, tmp_path):
+    """With broadcast joins off, MERGE's anti-join is a sort-merge join,
+    which shuffles the batch on the full key and loses its bucket
+    clustering. The append must still write one file per touched bucket,
+    must not re-insert default-graph (NULL) quads, and must leave the same
+    quad set as the broadcast path."""
+    schema = "subject string, predicate string, object string, graph string"
+    old = [(f"<http://e/s{i}>", "<http://p/x>", f'"{i}"', None if i % 2 else "<http://g/1>")
+           for i in range(40)]
+    new = [(f"<http://e/n{i}>", "<http://p/x>", f'"{i}"', None if i % 2 else "<http://g/1>")
+           for i in range(12)]
+
+    def merge_twice(path):
+        store = GraphStore(str(path), n_buckets=4)
+        store.merge(spark, spark.createDataFrame(old, schema))
+        before = store._list_data_files()
+        n = store.merge(spark, spark.createDataFrame(old + new + new[:3], schema))
+        return store, n, store._list_data_files() - before
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        smj, n_smj, added = merge_twice(tmp_path / "smj")
+    finally:
+        spark.conf.set(key, prev)
+    bcast, n_bcast, _ = merge_twice(tmp_path / "bcast")
+
+    assert n_smj == n_bcast == len(new)
+    touched = {
+        f"p_bucket={r['p_bucket']}"
+        for r in smj.graph(spark).filter(F.col("subject").startswith("<http://e/n"))
+        .select("p_bucket").distinct().collect()
+    }
+    assert len(touched) > 1
+    assert sorted(f.split("/", 1)[0] for f in added) == sorted(touched)
+    key_cols = ["subject", "predicate", "object", "graph"]
+    rows = smj.graph(spark).select(key_cols).collect()
+    assert len(rows) == len(set(rows)) == len(old) + len(new)
+    assert sum(r["graph"] is None for r in rows) == (len(old) + len(new)) // 2
+    assert set(rows) == set(bcast.graph(spark).select(key_cols).collect())
 
 
 def test_merge_prunes_buckets(spark, tmp_path):
@@ -736,7 +781,7 @@ def test_files_df_rollback_and_incremental_scan(spark, tmp_path):
 def test_store_maintenance_cli(spark, tmp_path, monkeypatch, capsys):
     """The maintenance CLI is a thin JSON-emitting wrapper over the tested
     store methods: every subcommand runs against a real store in-process
-    and prints one parseable line."""
+    and prints one parseable line; a path that holds no store is refused."""
     import json as _json
 
     from jobs.store_maintenance import main as maint_main
@@ -765,6 +810,20 @@ def test_store_maintenance_cli(spark, tmp_path, monkeypatch, capsys):
     rb = run("rollback", "--store", root, "--to", str(snap0))
     assert store.graph(spark).count() == 4 and rb["new_snapshot"] > snap0
     assert run("expire", "--store", root, "--keep-last", "1")["data_files_deleted"] > 0
+
+    # a path that holds no store is refused, by name, and never becomes one
+    def refused(*argv):
+        monkeypatch.setattr("sys.argv", ["store_maintenance.py", *argv])
+        assert maint_main() != 0
+        return capsys.readouterr().err
+
+    missing = str(tmp_path / "missing")
+    assert missing in refused("snapshots", "--store", missing)
+    empty = tmp_path / "empty"
+    empty.mkdir()
+    for argv in (("tag", "--name", "v1"), ("compact",), ("expire",)):
+        assert str(empty) in refused(*argv, "--store", str(empty))
+    assert not (empty / "_manifests").exists() and not list(empty.iterdir())
 
 
 def test_tags_pin_snapshots_through_expiry(spark, tmp_path):
