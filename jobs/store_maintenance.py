@@ -10,8 +10,9 @@ owner runs between pipeline jobs (Iceberg's maintenance procedures).
     python jobs/store_maintenance.py delta     --store ... --since 5
 
 Each command prints one JSON line (machine-readable, like run_pipeline).
-A path that holds no store (no ``_manifests`` directory) is refused with
-exit status 1; the pipeline writers are what create a store.
+A path that holds no store (no ``_manifests`` directory and no
+pre-manifest data) is refused with exit status 1; the pipeline writers are
+what create a store.
 Single-writer contract: don't run compact/expire/rollback concurrently
 with a live merge (GraphStore.expire_snapshots docstring).
 
@@ -60,11 +61,11 @@ def main() -> int:
     from rio_spark.session import get_spark
 
     store = GraphStore(args.store)
-    if not store.manifests_dir.exists():
+    if not store.holds_store():
         # every command reads or rewrites an existing store; the write paths
         # would otherwise commit an empty snapshot 0 at a mistyped path
-        print(f"store_maintenance: no graph store at {args.store} "
-              f"(no {store.manifests_dir.name} directory)", file=sys.stderr)
+        print(f"store_maintenance: no graph store at {args.store}",
+              file=sys.stderr)
         return 1
 
     def spark():

@@ -148,11 +148,8 @@ def canonical_mapping(triples: DataFrame) -> DataFrame:
     the smaller root, so each root is its component's minimum, and that
     skips a repeated edge as already joined. Python's code-point order on
     ``str`` equals Spark's UTF-8 binary string order. Driver memory is
-    O(alias edges). The collect runs no shuffle, so it is one job. Over a
-    persisted input it is the job that fills the cache and fires the
-    observations attached to it, which is how ``run_group`` counts error
-    rows; in Spark 4.1 a first reader that shuffles the cached rows
-    completes an observation with no metrics instead. The result is a local
+    O(alias edges). The collect adds no shuffle of its own, so it is one
+    job over a cached or shuffle-free input. The result is a local
     DataFrame built from an Arrow table (a LocalRelation: evaluating or
     broadcasting it runs no Spark job and no Python worker), small enough
     for :func:`rewrite_triples` to broadcast."""

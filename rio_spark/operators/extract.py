@@ -105,8 +105,13 @@ def extract_triples(
     0.25 s of core time before the kernel runs (the Python worker's
     ``importlib.invalidate_caches()`` re-reads the zip directories on its
     path; 4 cores measured 0.15-0.27 s per warm task, 0.36-0.40 s cold), so
-    4× cores added about 0.75 s of wall per call at kgbench's size, more
-    than per-document parse-cost skew costs there.
+    4× cores added about 0.75 s of wall per call at kgbench's size. On the
+    same 4 cores, 4× took 2.0-2.9× the wall of 1× on the catalog queries
+    that parse Turtle, TriG, N-Quads or RDF/XML at sf0.01 and sf0.1 (the
+    N-Triples ones were within noise), and 2.1-2.6× on 400 documents among
+    which 2 or 8 hold 10k statements or 4 hold 50k: a 50k-statement
+    document parses in about 0.1 s, less than the extra task start-ups
+    cost, so this skew does not pay for them.
     """
     if parallelism is None:
         parallelism = docs.sparkSession.sparkContext.defaultParallelism

@@ -303,6 +303,12 @@ class GraphStore:
         finally:
             os.close(dfd)
 
+    def holds_store(self) -> bool:
+        """Whether the root holds a store: a ``_manifests`` dir, or the
+        pre-manifest format's data files or compaction swap dirs."""
+        return (self.manifests_dir.exists() or bool(self._list_data_files())
+                or bool(self._legacy_swap_dirs()))
+
     def _bootstrap_if_legacy(self) -> None:
         """Writer-path entry hook, two jobs:
 

@@ -44,7 +44,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from rio_spark.operators.assemble import assemble_documents_salted
-from rio_spark.operators.canonicalize import canonicalize
+from rio_spark.operators.canonicalize import canonical_mapping, rewrite_triples
 from rio_spark.operators.extract import extract_triples, triples_of
 from rio_spark.operators.linking import link_entities
 from rio_spark.operators.materialize import GraphStore
@@ -74,12 +74,8 @@ def run_group(
     micro-batch in streaming mode) through the whole chain: salted assembly
     -> extraction + entity linking -> canonicalize -> MERGE -> lineage row.
     Returns (quads merged, error rows). Turns without a ``conv_id`` belong
-    to no document and are dropped.
-
-    The persisted extraction ∪ linking frame is filled by its first reader,
-    canonicalization's shuffle-free collect, which also fires the
-    error-count observation (see ``canonical_mapping``); a separate count
-    would only add two jobs."""
+    to no document and are dropped. The step runs no count of its own: the
+    first reader of the persisted rows fills them (see below)."""
     docs = assemble_documents_salted(transcripts.filter(F.col("conv_id").isNotNull()))
     if docs_meta is not None:
         docs = docs.join(F.broadcast(docs_meta), "conv_id", "left")
@@ -100,7 +96,11 @@ def run_group(
     errors = Observation("group_errors")
     rows = rows.observe(errors, F.count("error_kind").alias("n")).persist()
     try:
-        n_new = store.merge(spark, canonicalize(triples_of(rows)))
+        # the first reader: its collect fills the cache and fires the
+        # observation; in Spark 4.1 a first reader that shuffles the cached
+        # rows completes the observation empty and errors.get then raises
+        mapping = canonical_mapping(triples_of(rows))
+        n_new = store.merge(spark, rewrite_triples(triples_of(rows), mapping))
         store.commit_lineage(spark, snapshot_id, partition_hash, n_new)
         return n_new, errors.get["n"]
     finally:

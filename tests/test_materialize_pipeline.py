@@ -825,6 +825,15 @@ def test_store_maintenance_cli(spark, tmp_path, monkeypatch, capsys):
         assert str(empty) in refused(*argv, "--store", str(empty))
     assert not (empty / "_manifests").exists() and not list(empty.iterdir())
 
+    # a pre-manifest store (data files, no _manifests) is a store: read as
+    # is, and adopted by the first write as a bootstrap snapshot
+    import shutil
+
+    shutil.rmtree(store.manifests_dir)
+    assert run("files", "--store", root)["rows"] == 4
+    run("compact", "--store", root)
+    assert GraphStore(root).snapshots()[0]["op"] == "bootstrap"
+
 
 def test_tags_pin_snapshots_through_expiry(spark, tmp_path):
     """Tags are named, expiry-protected snapshot refs: graph(tag=) reads
