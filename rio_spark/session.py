@@ -84,6 +84,15 @@ def get_spark(
         .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp -Xms" + mem)
+        # G1's young generation fixed at a quarter of the heap. Sized from
+        # pause times, it grows to as much as 60% of the heap at a moment
+        # that depends on GC timing, so how much of the fixed heap a run
+        # touches (its peak RSS) varied from run to run: the same kgbench
+        # chat_mix call peaked at 2.0-2.7 GB (4 cores, 2g heap), against
+        # 1.96-2.04 GB with the young generation fixed. Set as the default
+        # JVM options: a caller's extraJavaOptions replace the line above
+        # but are appended to these.
+        .config("spark.driver.defaultJavaOptions", "-XX:NewRatio=3")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

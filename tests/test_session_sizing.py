@@ -1,4 +1,5 @@
-"""Driver-heap sizing from the host's /proc/meminfo (no JVM started)."""
+"""Driver-heap sizing from the host's /proc/meminfo (no JVM started), and
+the young generation the session's JVM runs with."""
 
 import pytest
 
@@ -38,3 +39,13 @@ def test_meminfo_without_available_line_is_an_error():
 def test_env_override_wins(monkeypatch):
     monkeypatch.setenv("RIO_SPARK_DRIVER_MEM", "3g")
     assert session._driver_mem() == "3g"
+
+
+def test_session_jvm_runs_a_fixed_young_generation(spark):
+    # set as a default JVM option, which a caller's extraJavaOptions (kgbench
+    # passes its own) extend instead of replacing
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.driver.defaultJavaOptions") == "-XX:NewRatio=3"
+    jvm_args = spark.sparkContext._jvm.java.lang.management.ManagementFactory \
+        .getRuntimeMXBean().getInputArguments()
+    assert "-XX:NewRatio=3" in list(jvm_args)
