@@ -3,9 +3,9 @@
 scale-factor directory and print rows (or just counts).
 
     python jobs/run_query.py kg_predicate_counts
-    python jobs/run_query.py text_tfidf --sf-dir /root/testdata/sf0.1 --limit 20
+    python jobs/run_query.py kg_error_stats --sf-dir /root/testdata/sf0.1 --limit 20
     python jobs/run_query.py --list
-    python jobs/run_query.py dedup_exact --explain      # physical plan only
+    python jobs/run_query.py kg_entity_linking --explain   # physical plan only
     python jobs/run_query.py kg_extract_nt --oracle     # print the DuckDB SQL
 
 Cluster usage mirrors run_pipeline.py: ship the package with --py-files and

@@ -108,8 +108,8 @@ def coalesced_shuffles(spark: SparkSession):
 
     The session disables byte-based coalescing globally because it collapses
     byte-light / CPU-heavy Python kernel stages onto 1-2 reducers (see the
-    builder above).  Iterative JVM-only loops (connected components,
-    PageRank) have the opposite profile: at small edge counts their cost is
+    builder above).  Iterative JVM-only loops (connected components) have
+    the opposite profile: at small edge counts their cost is
     per-task fixed overhead across many near-empty shuffle partitions, which
     coalescing removes; at 10^12 edges partitions are byte-full and
     coalescing is a no-op.  Affects only actions executed INSIDE the block

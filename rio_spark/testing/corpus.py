@@ -7,9 +7,10 @@ reference's own manifest skip list (entries commented out of
 serd-tests/*/manifest.ttl are excluded there too). These are DATA files, used
 as oracle inputs; the parsers themselves are original (SURVEY.md §5).
 
-Falls back to a small built-in corpus when the reference checkout is absent,
-so the repo's tests stay runnable standalone; the fallback warns and names
-what is missing.
+Falls back to the in-repo W3C-style suite (``tests/w3c_style``, walked from
+its manifest) plus a few built-in documents when the reference checkout is
+absent, so the repo's tests stay runnable standalone; the fallback warns and
+names what is missing.
 """
 
 from __future__ import annotations
@@ -20,6 +21,8 @@ from dataclasses import dataclass
 from pathlib import Path
 
 REFERENCE_TESTSUITE = Path("/root/reference/testsuite")
+W3C_STYLE = Path(__file__).resolve().parents[2] / "tests" / "w3c_style"
+W3C_STYLE_URL = "http://rio-spark.test/w3c-style"
 
 SERD_BASE = "http://drobilla.net/sw/serd/test"
 RIO_BASE = "http://rio.test/"
@@ -179,6 +182,30 @@ def load_rio_corpus() -> list[ConformanceDoc]:
     return docs
 
 
+def load_w3c_style_corpus() -> list[ConformanceDoc]:
+    """The in-repo suite's N-Triples/N-Quads/Turtle/TriG eval and
+    negative-syntax entries, each parsed against its canonical URL as the
+    manifest walker's own runner does."""
+    from rio_spark.testing.manifest import url_mapper, walk_manifest
+
+    if not W3C_STYLE.exists():
+        return []
+    to_path = url_mapper(W3C_STYLE_URL, W3C_STYLE)
+    return [
+        ConformanceDoc(
+            name=f"w3c_style-{t.name}",
+            format=t.format,
+            kind=t.kind,
+            body=to_path(t.action).read_text(),
+            golden=to_path(t.result).read_text() if t.result else None,
+            base_iri=t.action,
+        )
+        for t in walk_manifest(f"{W3C_STYLE_URL}/manifest.ttl", to_path)
+        if t.format in ("nt", "nq", "ttl", "trig")
+        and t.kind in ("eval", "negative_syntax")
+    ]
+
+
 # Minimal built-in corpus (original documents) so tests never silently no-op.
 _BUILTIN: list[ConformanceDoc] = [
     ConformanceDoc(
@@ -245,27 +272,28 @@ _BUILTIN: list[ConformanceDoc] = [
 REFERENCE_SUITES = ("serd-tests", "rio-tests")
 
 
+def _suites() -> list[Path]:
+    return [W3C_STYLE, *(REFERENCE_TESTSUITE / s for s in REFERENCE_SUITES)]
+
+
 def missing_suites() -> list[str]:
-    """The reference suite directories that are absent on this host."""
-    return [
-        str(REFERENCE_TESTSUITE / s)
-        for s in REFERENCE_SUITES
-        if not (REFERENCE_TESTSUITE / s).exists()
-    ]
+    """The suite directories that are absent on this host."""
+    return [str(p) for p in _suites() if not p.exists()]
 
 
 def describe_corpus(docs: list[ConformanceDoc]) -> str:
+    present = " + ".join(["built-in", *(p.name for p in _suites() if p.exists())])
     missing = missing_suites()
-    if not missing:
-        return f"{len(docs)} documents (built-in + {' + '.join(REFERENCE_SUITES)})"
-    return f"{len(docs)} documents (missing: {', '.join(missing)})"
+    tail = f"; missing: {', '.join(missing)}" if missing else ""
+    return f"{len(docs)} documents ({present}{tail})"
 
 
 def load_corpus() -> list[ConformanceDoc]:
-    """The built-in documents plus the reference's serd and rio suites.  A
-    missing suite is not an error, but it is never silent: the call warns
-    with each missing directory and the number of documents loaded."""
-    docs = _BUILTIN + load_serd_corpus() + load_rio_corpus()
+    """The built-in documents plus the in-repo W3C-style suite and the
+    reference's serd and rio suites.  A missing suite is not an error, but
+    it is never silent: the call warns with each missing directory and the
+    number of documents loaded."""
+    docs = _BUILTIN + load_w3c_style_corpus() + load_serd_corpus() + load_rio_corpus()
     if missing_suites():
         warnings.warn(
             f"conformance corpus incomplete: {describe_corpus(docs)}", stacklevel=2

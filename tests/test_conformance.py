@@ -1,6 +1,6 @@
 """Conformance sweep over the reference's own vendored corpora (serd-tests +
-rio-tests), evaluated Positive/Negative/Eval-style exactly like the
-reference harness (/root/reference/testsuite/src/parser_evaluator.rs:16-82):
+rio-tests) and the in-repo W3C-style suite, evaluated
+Positive/Negative/Eval-style exactly like the reference harness (/root/reference/testsuite/src/parser_evaluator.rs:16-82):
 
 * positive_syntax  -> parses with zero error rows
 * negative_syntax  -> >=1 error row

@@ -18,7 +18,9 @@ from rio_spark.sources.transcripts import (
 from rio_spark.testing.corpus import load_corpus
 from rio_spark.testing.pr_spark import precision_recall
 
-N_CONVS = 200
+# every 10th conversation embeds the next positive document, so 300 embeds
+# each of the corpus's 27 eval documents (built-in + w3c_style) at least once
+N_CONVS = 300
 
 
 def test_distributed_pr_gate(spark):
