@@ -1,11 +1,12 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship KG-construction pipeline on sf0.001;
-``queries()`` / ``oracle_sql()`` expose the 24-query catalog — extraction in
-every format, the formatter round-trips, assembly, linking,
-canonicalization, error statistics, the pipeline's per-group body and its
-streaming forms — each with a DuckDB oracle (see rio_spark/plans/catalog.py
-for the catalog and its determinism conventions).
+``queries()`` / ``oracle_sql()`` expose the 54-query catalog — the ``kg_*``
+product path (extraction in every format, the formatter round-trips,
+assembly, linking, canonicalization, error statistics, the pipeline's
+per-group body and its streaming forms) plus the document-level
+training-data ops over the same inputs — each with a DuckDB oracle (see
+rio_spark/plans/catalog.py for the catalog and its determinism conventions).
 """
 
 from __future__ import annotations

@@ -18,9 +18,10 @@ Two component resolvers live here:
   each round is two DataFrame self-aggregations, converging in O(log n)
   rounds — entirely with built-in ops (groupBy + min + explode), no Python
   in the loop. Lineage is cut with localCheckpoint so the plan doesn't grow
-  across iterations. Its callers (the catalog's ``kg_connected_components``
-  and ``kg_cc_incremental``, :func:`cc_incremental`, and the tests that use
-  it as the reference for :func:`canonical_mapping`) keep the result
+  across iterations. Its callers (near-dup grouping in dedup.py and
+  similarity.py, the catalog's ``kg_connected_components`` and
+  ``kg_cc_incremental``, :func:`cc_incremental`, and the tests that use it
+  as the reference for :func:`canonical_mapping`) keep the result
   distributed.
 """
 
@@ -44,9 +45,9 @@ def connected_components(
     # symmetrize; self-loops are harmless and keep singletons addressable.
     # The input is EAGERLY checkpointed before the loop: round 0's star DAG
     # references the edge set 4+ times (symmetrize union, groupBy, join
-    # re-emit), and when the caller's edge lineage is expensive (a join
-    # upstream) those references race and recompute it — measured 10+ s
-    # of a 12.5 s CC on joined near-duplicate pairs at sf0.1.
+    # re-emit), and when the caller's edge lineage is expensive (an LSH
+    # band join, a cosine bucket join) those references race and recompute
+    # it — measured 10+ s of an 12.5 s CC on near-dup pairs at sf0.1.
     # Every later round reads the previous round's checkpoint already;
     # this gives round 0 the same contract at the cost of one extra job.
     from rio_spark.session import coalesced_shuffles

@@ -1,35 +1,57 @@
 """Query catalog: each query is (spark, sf_dir) -> DataFrame with a matching
 DuckDB oracle SQL string (driver correctness gate).
 
-Every query's Spark side runs a product-path operator: grammar-kernel
-extraction in each format, the formatter round-trips, salted assembly,
-entity linking, sameAs canonicalization and connected components, error
-statistics, the pipeline's per-group body and its two streaming forms.
+The ``kg_*`` and ``streaming_kg_*``/``streaming_materialize`` queries run the
+product path: grammar-kernel extraction in each format, the formatter
+round-trips, salted assembly, entity linking, sameAs canonicalization and
+connected components, error statistics, the pipeline's per-group body and
+its two streaming forms. The ``text_*``, ``dedup_*``, ``sim_*``,
+``corpus_*`` and ``streaming_dedup`` queries run the document-level
+training-data operators (operators/text.py, dedup.py, similarity.py,
+streaming/stateful.py) over the same ``documents`` table.
 
 Conventions that make the side-by-side hash comparison meaningful:
 
 * deterministic only — no RNG, no time, no partition-order dependence;
 * md5 (not xxhash64) wherever a hash feeds the result, because md5 is
   bit-identical across Spark and DuckDB;
+* floats are rounded in BOTH engines before comparison;
 * every computed column is aliased identically in both;
 * KG queries synthesize a transcripts table from ``documents.parquet`` with
   column ops that DuckDB can replicate, then run the REAL pipeline
   (salted assembly -> mapInArrow grammar kernels -> joins) on the Spark
   side while the oracle computes the expected output directly.
 
-No query caches a relation, so no cached relation outlives the caller's
-action (tests/test_catalog_cache.py checks the session's cache manager).
+Cache lifetime: the KG queries cache nothing. Four training-data queries
+(``CALLER_OWNED_CACHE``) ``.cache()`` a multi-consumed intermediate that the
+RETURNED plan reads, so they cannot unpersist before the caller's action;
+their caller owns eviction (``spark.catalog.clearCache()``).
+tests/test_catalog_cache.py checks both halves against the session's cache
+manager.
 """
 
 from __future__ import annotations
-
-from itertools import count as _it_count
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from rio_spark.operators.assemble import assemble_documents_salted
 from rio_spark.operators.canonicalize import connected_components
+from rio_spark.operators.dedup import (
+    dedup_exact,
+    minhash_signatures,
+    ngram_jaccard_pairs,
+    simhash_bits,
+)
 from rio_spark.operators.extract import errors_of, extract_triples, triples_of
+from rio_spark.operators.similarity import cosine_pairs_above, lsh_bucket_ids
+from rio_spark.operators.text import (
+    LANG_PROFILES,
+    EN_STOPWORDS,
+    fingerprint,
+    language_id,
+    quality_score,
+    token_stats,
+)
 from rio_spark.formatters import format_ntriples
 
 DOC_NS = "http://ex.org/doc/"
@@ -39,12 +61,17 @@ XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
 
 def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the test tables are single-row-group parquet files, so the scan is
-    # 1 partition no matter what maxPartitionBytes says — the linking
-    # n-gram explode and every other stage downstream would run 1-wide.
-    # One cheap round-robin exchange of the small table restores full
-    # width; at production scale the scan is already thousands of
-    # partitions and the caller would drop this.
+    # 1 partition no matter what maxPartitionBytes says — every regex
+    # scorer / n-gram explode downstream would run 1-wide on a 32-core
+    # box (measured: the corpus-cleaning chain spent its time on 2
+    # partitions). One cheap round-robin exchange of the small table
+    # restores full width; at production scale the scan is already
+    # thousands of partitions and the caller would drop this.
     return _widen(spark, spark.read.parquet(f"{sf_dir}/documents.parquet"))
+
+
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _widen(spark, spark.read.parquet(f"{sf_dir}/embeddings.parquet"))
 
 
 def _widen(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -371,8 +398,298 @@ FROM documents
 
 
 # ---------------------------------------------------------------------------
-# Remaining parsers (S2/S4/S6/S7), formatter roundtrips (K2-K5),
-# canonicalization, error statistics and the streaming forms
+# Dedup / text-analysis / similarity (training-data ops)
+# ---------------------------------------------------------------------------
+
+def q_dedup_exact(spark, sf_dir) -> DataFrame:
+    return dedup_exact(
+        _documents(spark, sf_dir).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    )
+
+
+ORACLE_DEDUP_EXACT = """
+WITH k AS (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
+         md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS h
+  FROM documents
+), g AS (
+  SELECT h, min(doc_id) AS rep_id, COUNT(*) AS group_size FROM k GROUP BY h
+)
+SELECT k.doc_id, g.rep_id, g.group_size FROM k JOIN g USING (h)
+"""
+
+_SHINGLE3_SQL = """
+  CASE WHEN len(toks) >= 3
+       THEN list_transform(generate_series(1, len(toks) - 2),
+                           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))
+       ELSE [array_to_string(toks, ' ')] END
+"""
+
+_TOKS_SQL = """
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
+         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS toks
+  FROM documents
+"""
+
+
+def q_dedup_minhash(spark, sf_dir) -> DataFrame:
+    sigs = minhash_signatures(
+        _documents(spark, sf_dir).select(F.col("doc_id").cast("string").alias("doc_id"), "text"),
+        k=4,
+    )
+    return sigs.select(
+        "doc_id", *[F.col("sig")[i].alias(f"mh{i}") for i in range(4)]
+    )
+
+
+ORACLE_DEDUP_MINHASH = f"""
+WITH t AS ({_TOKS_SQL}),
+s AS (SELECT doc_id, {_SHINGLE3_SQL} AS sh FROM t)
+SELECT doc_id,
+  list_min(list_transform(sh, x -> md5('0:' || x))) AS mh0,
+  list_min(list_transform(sh, x -> md5('1:' || x))) AS mh1,
+  list_min(list_transform(sh, x -> md5('2:' || x))) AS mh2,
+  list_min(list_transform(sh, x -> md5('3:' || x))) AS mh3
+FROM s
+"""
+
+
+def q_dedup_simhash(spark, sf_dir) -> DataFrame:
+    return simhash_bits(
+        _documents(spark, sf_dir).select(F.col("doc_id").cast("string").alias("doc_id"), "text"),
+        bits=16,
+    )
+
+
+def _oracle_simhash(bits: int = 16) -> str:
+    sums = ",\n    ".join(
+        f"sum(CASE WHEN ascii(substr(h, {i + 1}, 1)) % 2 = 1 THEN 1 ELSE -1 END) AS b{i}"
+        for i in range(bits)
+    )
+    concat = " || ".join(f"CASE WHEN b{i} > 0 THEN '1' ELSE '0' END" for i in range(bits))
+    return f"""
+WITH t AS ({_TOKS_SQL}),
+tok AS (SELECT doc_id, unnest(toks) AS tk FROM t),
+h AS (SELECT doc_id, md5(tk) AS h FROM tok),
+b AS (SELECT doc_id, {sums} FROM h GROUP BY doc_id)
+SELECT doc_id, {concat} AS simhash FROM b
+"""
+
+
+def q_dedup_jaccard(spark, sf_dir) -> DataFrame:
+    return ngram_jaccard_pairs(
+        _documents(spark, sf_dir).select(F.col("doc_id").cast("string").alias("doc_id"), "text"),
+        n=3,
+        threshold=0.2,
+    )
+
+
+ORACLE_DEDUP_JACCARD = f"""
+WITH t AS ({_TOKS_SQL}),
+s AS (SELECT doc_id, list_distinct({_SHINGLE3_SQL}) AS sh FROM t),
+ex AS (SELECT doc_id, unnest(sh) AS g FROM s),
+sz AS (SELECT doc_id, COUNT(*) AS sz FROM ex GROUP BY doc_id),
+inter AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
+  FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)
+SELECT doc_a, doc_b,
+       round(i * 1.0 / (sa.sz + sb.sz - i), 6) AS jaccard
+FROM inter
+JOIN sz sa ON sa.doc_id = doc_a
+JOIN sz sb ON sb.doc_id = doc_b
+WHERE i * 1.0 / (sa.sz + sb.sz - i) >= 0.2
+"""
+
+
+def q_text_tokens(spark, sf_dir) -> DataFrame:
+    return token_stats(
+        _documents(spark, sf_dir).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    )
+
+
+ORACLE_TEXT_TOKENS = f"""
+WITH t AS ({_TOKS_SQL}),
+raw AS (SELECT CAST(doc_id AS VARCHAR) AS doc_id, length(text) AS n_chars FROM documents)
+SELECT t.doc_id,
+       CAST(len(toks) AS INT) AS n_tokens,
+       CAST(raw.n_chars AS INT) AS n_chars,
+       round(list_sum(list_transform(toks, x -> length(x))) * 1.0
+             / greatest(len(toks), 1), 4) AS avg_token_len
+FROM t JOIN raw USING (doc_id)
+"""
+
+
+def _profile_hits_sql(words: list[str], divisor_name: str | None = None) -> str:
+    terms = [
+        f"(length(padded) - length(replace(padded, ' {w} ', ' '))) / {len(w) + 1}.0"
+        for w in words
+    ]
+    return "(" + " + ".join(terms) + ")"
+
+
+def q_text_langid(spark, sf_dir) -> DataFrame:
+    return language_id(
+        _documents(spark, sf_dir).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    )
+
+
+def _oracle_langid() -> str:
+    langs = sorted(LANG_PROFILES)
+    scores = ",\n    ".join(
+        f"{_profile_hits_sql(LANG_PROFILES[l])} AS s_{l}" for l in langs
+    )
+    # alphabetical tie-break: first language whose score >= all later ones
+    pred_cases = []
+    for i, l in enumerate(langs):
+        conds = " AND ".join(f"s_{l} >= s_{m}" for m in langs[i + 1 :]) or "TRUE"
+        pred_cases.append(f"WHEN {conds} THEN '{l}'")
+    # note: earlier langs also need >= than all EARLIER? no — first-match CASE
+    # with >= later ones reproduces min-by-(neg score, lang) exactly when each
+    # case also requires >= all previous maxima; simplest correct form:
+    best = "greatest(" + ", ".join(f"s_{l}" for l in langs) + ")"
+    pred = "CASE " + " ".join(
+        f"WHEN s_{l} = {best} THEN '{l}'" for l in langs
+    ) + " END"
+    return f"""
+WITH d AS (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
+         ' ' || trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) || ' ' AS padded
+  FROM documents
+), s AS (SELECT doc_id, {scores} FROM d)
+SELECT doc_id, {pred} AS lang_pred, {best} AS lang_score FROM s
+"""
+
+
+def q_text_quality(spark, sf_dir) -> DataFrame:
+    return quality_score(
+        _documents(spark, sf_dir).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    )
+
+
+def _oracle_quality() -> str:
+    stop_hits = _profile_hits_sql(EN_STOPWORDS)
+    return f"""
+WITH d AS (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text,
+         ' ' || trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')) || ' ' AS padded,
+         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS toks,
+         greatest(length(text), 1) AS n_chars
+  FROM documents
+), m AS (
+  SELECT doc_id,
+         (length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g'))) * 1.0 / n_chars AS punct,
+         (length(text) - length(regexp_replace(text, '[A-Z]', '', 'g'))) * 1.0 / n_chars AS upper_r,
+         {stop_hits} / greatest(len(toks), 1) AS stop,
+         length(text) AS raw_len
+  FROM d
+)
+SELECT doc_id,
+       round(punct, 4) AS punct_ratio,
+       round(stop, 4) AS stopword_ratio,
+       round(upper_r, 4) AS upper_ratio,
+       round(greatest(0.0, least(1.0,
+             0.5 + stop - punct * 2 - CASE WHEN raw_len < 20 THEN 0.5 ELSE 0.0 END)), 4)
+         AS quality
+FROM m
+"""
+
+
+def q_text_fingerprint(spark, sf_dir) -> DataFrame:
+    return fingerprint(
+        _documents(spark, sf_dir).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    )
+
+
+_SHINGLE5_SQL = """
+  CASE WHEN len(toks) >= 5
+       THEN list_transform(generate_series(1, len(toks) - 4),
+                           i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3], toks[i+4]))
+       ELSE [array_to_string(toks, ' ')] END
+"""
+
+ORACLE_TEXT_FINGERPRINT = f"""
+WITH t AS ({_TOKS_SQL})
+SELECT doc_id,
+       md5(array_to_string(toks, ' ')) AS fp,
+       list_min(list_transform({_SHINGLE5_SQL}, x -> md5(x))) AS rolling_fp
+FROM t
+"""
+
+
+def q_sim_topk(spark, sf_dir) -> DataFrame:
+    emb = _embeddings(spark, sf_dir)
+    q = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
+    from rio_spark.operators.similarity import cosine_to_query
+
+    return (
+        cosine_to_query(emb, q)
+        .select("vec_id", F.round("cosine", 4).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), F.col("vec_id").asc())
+        .limit(10)
+    )
+
+
+ORACLE_SIM_TOPK = """
+WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
+SELECT vec_id,
+       round(list_dot_product(embedding::DOUBLE[], qv)
+             / (sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]))
+                * sqrt(list_dot_product(qv, qv))), 4) AS cosine
+FROM embeddings, q
+ORDER BY cosine DESC, vec_id ASC
+LIMIT 10
+"""
+
+
+def q_sim_pairs(spark, sf_dir) -> DataFrame:
+    emb = _embeddings(spark, sf_dir).filter("vec_id < 60")
+    return cosine_pairs_above(emb, threshold=0.3)
+
+
+ORACLE_SIM_PAIRS = """
+WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings WHERE vec_id < 60)
+SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+       round(list_dot_product(a.v, b.v)
+             / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4)
+         AS cosine
+FROM e a JOIN e b ON a.vec_id < b.vec_id
+WHERE round(list_dot_product(a.v, b.v)
+            / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) >= 0.3
+"""
+
+
+def q_sim_lsh_buckets(spark, sf_dir) -> DataFrame:
+    emb = _embeddings(spark, sf_dir)
+    return (
+        lsh_bucket_ids(emb, n_planes=4)
+        .groupBy("bucket")
+        .agg(F.count("*").alias("n"))
+    )
+
+
+ORACLE_SIM_LSH_BUCKETS = """
+WITH p AS (
+  SELECT list(embedding::DOUBLE[] ORDER BY vec_id) AS planes
+  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 4)
+), b AS (
+  SELECT
+    (CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.planes[1]) >= 0 THEN '1' ELSE '0' END)
+    || (CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.planes[2]) >= 0 THEN '1' ELSE '0' END)
+    || (CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.planes[3]) >= 0 THEN '1' ELSE '0' END)
+    || (CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.planes[4]) >= 0 THEN '1' ELSE '0' END)
+      AS bucket
+  FROM embeddings e, p
+)
+SELECT bucket, COUNT(*) AS n FROM b GROUP BY bucket
+"""
+
+
+# ---------------------------------------------------------------------------
+# Round-2 additions: remaining parsers (S2/S4/S6), formatter roundtrips
+# (K2-K5), J2 blocked linking, LSH pair paths, streaming replays, CC skew
+# stress.
 # ---------------------------------------------------------------------------
 
 G_NS = "http://ex.org/g/"
@@ -662,6 +979,102 @@ FROM documents
 """
 
 
+def q_text_vocab(spark, sf_dir) -> DataFrame:
+    """Vocabulary building: top-100 tokens by document frequency,
+    deterministic (df desc, token asc) tie-break."""
+    from rio_spark.operators.text import vocab_top_df
+
+    return vocab_top_df(
+        _documents(spark, sf_dir).select(F.col("doc_id").cast("string").alias("doc_id"), "text"),
+        k=100,
+    )
+
+
+ORACLE_TEXT_VOCAB = """
+WITH t AS (
+  SELECT list_distinct(
+           string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')
+         ) AS toks
+  FROM documents
+),
+ex AS (SELECT unnest(toks) AS token FROM t),
+g AS (SELECT token, count(*) AS df FROM ex WHERE token <> '' GROUP BY token)
+SELECT token, df FROM g ORDER BY df DESC, token ASC LIMIT 100
+"""
+
+
+def q_text_pack_batches(spark, sf_dir) -> DataFrame:
+    """Sequence packing: token-budget training batches via a distributed
+    prefix sum (bucket cumsums + broadcast bucket offsets)."""
+    from rio_spark.operators.text import pack_sequences
+
+    return pack_sequences(_documents(spark, sf_dir), budget=2048, n_buckets=64)
+
+
+ORACLE_TEXT_PACK_BATCHES = """
+WITH d AS (
+  SELECT doc_id,
+         CAST(len(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS BIGINT) AS n_tokens
+  FROM documents
+),
+c AS (
+  SELECT doc_id, n_tokens,
+         -- sum(BIGINT) is HUGEINT in DuckDB; pin back to BIGINT
+         CAST(sum(n_tokens) OVER (ORDER BY doc_id % 64, doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+  FROM d
+)
+SELECT doc_id, n_tokens, (cum - n_tokens) // 2048 AS bin_id FROM c
+"""
+
+
+def q_text_tfidf(spark, sf_dir) -> DataFrame:
+    """TF-IDF-style salience, linear idf (score = tf*N/df: two IEEE double
+    ops on exact counts — bit-reproducible, no rounding, no ln())."""
+    from rio_spark.operators.text import tfidf_top
+
+    return tfidf_top(_documents(spark, sf_dir), k=100)
+
+
+ORACLE_TEXT_TFIDF = """
+WITH t AS (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
+         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS toks
+  FROM documents
+),
+ex AS (SELECT doc_id, unnest(toks) AS token FROM t),
+tf AS (SELECT doc_id, token, count(*) AS tf FROM ex WHERE token <> '' GROUP BY doc_id, token),
+df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
+n AS (SELECT count(*) AS nd FROM documents)
+SELECT tf.doc_id, tf.token, tf.tf, df.df,
+       CAST(tf.tf AS DOUBLE) * CAST(n.nd AS DOUBLE) / CAST(df.df AS DOUBLE) AS score
+FROM tf JOIN df USING (token), n
+ORDER BY score DESC, tf.doc_id ASC, tf.token ASC LIMIT 100
+"""
+
+
+def q_text_ngrams(spark, sf_dir) -> DataFrame:
+    """Corpus-wide top-100 token bigrams (LM n-gram statistics)."""
+    from rio_spark.operators.text import ngram_top
+
+    return ngram_top(_documents(spark, sf_dir), n=2, k=100)
+
+
+ORACLE_TEXT_NGRAMS = """
+WITH t AS (
+  SELECT string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS toks
+  FROM documents
+),
+g AS (
+  SELECT unnest(
+    [z[1] || ' ' || z[2] for z in list_zip(toks, toks[2:]) if z[2] IS NOT NULL]
+  ) AS gram
+  FROM t WHERE len(toks) >= 2
+)
+SELECT gram, count(*) AS cnt FROM g WHERE gram <> ' '
+GROUP BY gram ORDER BY cnt DESC, gram ASC LIMIT 100
+"""
+
+
 def q_kg_error_stats(spark, sf_dir) -> DataFrame:
     """Corpus error dashboard: positioned error rows aggregated by kind and
     line — the per-shard data-quality report a 100 TB ingest publishes
@@ -688,6 +1101,237 @@ FROM documents WHERE doc_id % 7 = 3
 """
 
 
+def q_dedup_lsh_pairs(spark, sf_dir) -> DataFrame:
+    """MinHash-LSH banding candidates (k=4 minhashes, 2 bands) over documents
+    plus injected exact duplicates (every 10th doc), so the band join provably
+    fires. The join key is (band_id, band_sig) — the 100 TB shape: candidate
+    fan-out bounded by bucket size, never all-pairs."""
+    from rio_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = _documents(spark, sf_dir).select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+    dups = (
+        _documents(spark, sf_dir)
+        .filter(F.col("doc_id") % 10 == 0)
+        .select(F.concat(F.lit("dup"), F.col("doc_id").cast("string")).alias("doc_id"), "text")
+    )
+    return minhash_lsh_pairs(docs.unionByName(dups), k=4, bands=2)
+
+
+ORACLE_DEDUP_LSH_PAIRS = f"""
+WITH docs0 AS (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
+  UNION ALL
+  SELECT 'dup' || doc_id, text FROM documents WHERE doc_id % 10 = 0
+),
+t AS (
+  SELECT doc_id,
+         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS toks
+  FROM docs0
+),
+s AS (SELECT doc_id, {_SHINGLE3_SQL} AS sh FROM t),
+m AS (SELECT doc_id,
+  list_min(list_transform(sh, x -> md5('0:' || x))) AS mh0,
+  list_min(list_transform(sh, x -> md5('1:' || x))) AS mh1,
+  list_min(list_transform(sh, x -> md5('2:' || x))) AS mh2,
+  list_min(list_transform(sh, x -> md5('3:' || x))) AS mh3
+FROM s),
+b AS (
+  SELECT doc_id, 0 AS band_id, mh0 || '|' || mh1 AS band_sig FROM m
+  UNION ALL
+  SELECT doc_id, 1, mh2 || '|' || mh3 FROM m
+)
+SELECT DISTINCT a.doc_id AS doc_a, b2.doc_id AS doc_b
+FROM b a JOIN b b2
+  ON a.band_id = b2.band_id AND a.band_sig = b2.band_sig AND a.doc_id < b2.doc_id
+"""
+
+
+# deliberately boilerplate-like: appended to EVERY document so its shingles
+# reach df == corpus size, the exact hot-shingle shape the df cap defuses
+_BOILERPLATE = "all rights reserved contact example corp for licensing terms"
+
+
+def q_dedup_jaccard_skewed(spark, sf_dir) -> DataFrame:
+    """Hot-shingle stress for the Jaccard verifier: every document carries
+    the same boilerplate suffix, so each boilerplate shingle has df = corpus
+    size — an uncapped inverted-index join would emit ~N^2/2 rows for each.
+    With max_df the hot shingles are dropped from intersections AND size
+    denominators, so the join fan-out stays linear and the scores equal
+    exact Jaccard over the informative shingle universe."""
+    docs = _documents(spark, sf_dir).select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.concat_ws(" ", F.col("text"), F.lit(_BOILERPLATE)).alias("text"),
+    )
+    return ngram_jaccard_pairs(docs, n=3, threshold=0.2, max_df=50)
+
+
+ORACLE_DEDUP_JACCARD_SKEWED = f"""
+WITH t AS (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
+         string_split(trim(regexp_replace(lower(text || ' {_BOILERPLATE}'),
+                                          '[^a-z0-9]+', ' ', 'g')), ' ') AS toks
+  FROM documents
+),
+s AS (SELECT doc_id, list_distinct({_SHINGLE3_SQL}) AS sh FROM t),
+ex0 AS (SELECT doc_id, unnest(sh) AS g FROM s),
+keep AS (SELECT g FROM ex0 GROUP BY g HAVING COUNT(*) <= 50),
+ex AS (SELECT ex0.doc_id, ex0.g FROM ex0 JOIN keep USING (g)),
+sz AS (SELECT doc_id, COUNT(*) AS sz FROM ex GROUP BY doc_id),
+inter AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS i
+  FROM ex a JOIN ex b ON a.g = b.g AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+)
+SELECT doc_a, doc_b,
+       round(i * 1.0 / (sa.sz + sb.sz - i), 6) AS jaccard
+FROM inter
+JOIN sz sa ON sa.doc_id = doc_a
+JOIN sz sb ON sb.doc_id = doc_b
+WHERE i * 1.0 / (sa.sz + sb.sz - i) >= 0.2
+"""
+
+
+def q_dedup_lsh_capped(spark, sf_dir) -> DataFrame:
+    """Hot-bucket stress for LSH banding: 30 identical copies of doc 0 all
+    land in one band bucket (plus doc 0 itself), which a bucket_cap=10
+    truncates to its 10 lowest doc_ids; surviving pairs from capped buckets
+    carry truncated=true so the recall loss is observable, not silent."""
+    from rio_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = _documents(spark, sf_dir).select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+    hot = (
+        _documents(spark, sf_dir)
+        .filter(F.col("doc_id") == 0)
+        .select(F.explode(F.sequence(F.lit(0), F.lit(29))).alias("i"), "text")
+        .select(
+            F.concat(F.lit("hot"), F.lpad(F.col("i").cast("string"), 2, "0")).alias("doc_id"),
+            "text",
+        )
+    )
+    return minhash_lsh_pairs(docs.unionByName(hot), k=4, bands=2, bucket_cap=10)
+
+
+ORACLE_DEDUP_LSH_CAPPED = f"""
+WITH docs0 AS (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
+  UNION ALL
+  SELECT 'hot' || lpad(CAST(i AS VARCHAR), 2, '0'), text
+  FROM documents, generate_series(0, 29) AS gs(i) WHERE doc_id = 0
+),
+t AS (
+  SELECT doc_id,
+         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS toks
+  FROM docs0
+),
+s AS (SELECT doc_id, {_SHINGLE3_SQL} AS sh FROM t),
+m AS (SELECT doc_id,
+  list_min(list_transform(sh, x -> md5('0:' || x))) AS mh0,
+  list_min(list_transform(sh, x -> md5('1:' || x))) AS mh1,
+  list_min(list_transform(sh, x -> md5('2:' || x))) AS mh2,
+  list_min(list_transform(sh, x -> md5('3:' || x))) AS mh3
+FROM s),
+b AS (
+  SELECT doc_id, 0 AS band_id, mh0 || '|' || mh1 AS band_sig FROM m
+  UNION ALL
+  SELECT doc_id, 1, mh2 || '|' || mh3 FROM m
+),
+capped AS (
+  SELECT doc_id, band_id, band_sig,
+         row_number() OVER (PARTITION BY band_id, band_sig ORDER BY doc_id) AS rn,
+         COUNT(*) OVER (PARTITION BY band_id, band_sig) > 10 AS trunc
+  FROM b
+),
+k AS (SELECT * FROM capped WHERE rn <= 10)
+SELECT a.doc_id AS doc_a, b2.doc_id AS doc_b, bool_and(a.trunc) AS truncated
+FROM k a JOIN k b2
+  ON a.band_id = b2.band_id AND a.band_sig = b2.band_sig AND a.doc_id < b2.doc_id
+GROUP BY 1, 2
+"""
+
+
+_PLANES_SQL = """
+  SELECT list(embedding::DOUBLE[] ORDER BY vec_id) AS planes
+  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 4)
+"""
+
+_BUCKET4_SQL = """
+    (CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.planes[1]) >= 0 THEN '1' ELSE '0' END)
+    || (CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.planes[2]) >= 0 THEN '1' ELSE '0' END)
+    || (CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.planes[3]) >= 0 THEN '1' ELSE '0' END)
+    || (CASE WHEN list_dot_product(e.embedding::DOUBLE[], p.planes[4]) >= 0 THEN '1' ELSE '0' END)
+"""
+
+
+def q_sim_pairs_lsh(spark, sf_dir) -> DataFrame:
+    """The oracle-checked near-duplicate PAIR path at scale: LSH bucket ->
+    in-bucket exact cosine -> threshold. The plan's self-join key is the
+    bucket string (shuffled equi-join); the cross-bucket pair space is never
+    materialized — this is what replaces ``sim_pairs`` (the guarded
+    brute-force baseline) at 100 TB."""
+    from rio_spark.operators.similarity import cosine_pairs_lsh
+
+    return cosine_pairs_lsh(_embeddings(spark, sf_dir), threshold=0.3, n_planes=4)
+
+
+ORACLE_SIM_PAIRS_LSH = f"""
+WITH p AS ({_PLANES_SQL}),
+e2 AS (
+  SELECT vec_id, e.embedding::DOUBLE[] AS v, {_BUCKET4_SQL} AS bucket
+  FROM embeddings e, p
+)
+SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
+       round(list_dot_product(a.v, b.v)
+             / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4)
+         AS cosine
+FROM e2 a JOIN e2 b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+WHERE round(list_dot_product(a.v, b.v)
+            / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) >= 0.3
+"""
+
+
+def q_sim_ann_topk(spark, sf_dir) -> DataFrame:
+    """ANN top-k (similarity.py ann_topk_lsh): one plane collect, query
+    bucket computed driver-side, candidates = plain FILTER on the bucket
+    expression (single Spark job, no probe jobs)."""
+    from rio_spark.operators.similarity import ann_topk_lsh
+
+    emb = _embeddings(spark, sf_dir)
+    qv = [float(x) for x in emb.filter("vec_id = 0").first()["embedding"]]
+    return ann_topk_lsh(emb, qv, k=5, n_planes=4)
+
+
+ORACLE_SIM_ANN_TOPK = f"""
+WITH p AS ({_PLANES_SQL}),
+q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0),
+qb AS (
+  SELECT
+    (CASE WHEN list_dot_product(q.qv, p.planes[1]) >= 0 THEN '1' ELSE '0' END)
+    || (CASE WHEN list_dot_product(q.qv, p.planes[2]) >= 0 THEN '1' ELSE '0' END)
+    || (CASE WHEN list_dot_product(q.qv, p.planes[3]) >= 0 THEN '1' ELSE '0' END)
+    || (CASE WHEN list_dot_product(q.qv, p.planes[4]) >= 0 THEN '1' ELSE '0' END) AS qbits
+  FROM q, p
+),
+c AS (
+  SELECT vec_id, e.embedding::DOUBLE[] AS v, {_BUCKET4_SQL} AS bucket
+  FROM embeddings e, p
+)
+SELECT vec_id,
+       round(list_dot_product(c.v, q.qv)
+             / (sqrt(list_dot_product(c.v, c.v)) * sqrt(list_dot_product(q.qv, q.qv))), 4)
+         AS cosine
+FROM c, q, qb
+WHERE c.bucket = qb.qbits
+ORDER BY cosine DESC, vec_id ASC
+LIMIT 5
+"""
+
+
+from itertools import count as _it_count
+
 _STREAM_SEQ = _it_count()
 
 
@@ -704,6 +1348,58 @@ def _drain_stream(out: DataFrame, mode: str) -> DataFrame:
     )
     q.awaitTermination()
     return out.sparkSession.table(name)
+
+
+def q_streaming_dedup(spark, sf_dir) -> DataFrame:
+    """Batch-deterministic replay of the stateful streaming dedup
+    (applyInPandasWithState): documents stream in with texts collapsed onto 37
+    variants, first-seen-wins dedup keeps exactly one row per distinct hash.
+    WHICH doc survives depends on arrival order, so the checked output is the
+    (deterministic) set of surviving content hashes."""
+    from rio_spark.streaming.stateful import streaming_dedup
+
+    schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
+    # the file source needs a DIRECTORY basePath; glob-filter to one table
+    stream = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "documents.parquet")
+        .parquet(sf_dir)
+    )
+    docs = stream.select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.concat(F.lit("streamdoc "), (F.col("doc_id") % 37).cast("string")).alias("text"),
+    )
+    return _drain_stream(streaming_dedup(docs), "append").select("h").distinct()
+
+
+ORACLE_STREAMING_DEDUP = """
+SELECT DISTINCT md5('streamdoc ' || (doc_id % 37)) AS h FROM documents
+"""
+
+
+def q_text_repetition(spark, sf_dir) -> DataFrame:
+    """Repetition quality signal (operators/text.py repetition_stats):
+    duplicated-trigram fraction per document, the Gopher-style repetitious-
+    document filter; shares the shingle derivation with the dedup family."""
+    from rio_spark.operators.text import repetition_stats
+
+    return repetition_stats(
+        _documents(spark, sf_dir).select(
+            F.col("doc_id").cast("string").alias("doc_id"), "text"
+        )
+    )
+
+
+ORACLE_TEXT_REPETITION = f"""
+WITH t AS ({_TOKS_SQL}),
+s AS (SELECT doc_id, {_SHINGLE3_SQL} AS sh FROM t)
+SELECT doc_id,
+       CAST(len(sh) AS INT) AS n_grams,
+       CAST(len(sh) - len(list_distinct(sh)) AS INT) AS n_dup_grams,
+       round((len(sh) - len(list_distinct(sh))) / CAST(len(sh) AS DOUBLE), 4)
+         AS dup_fraction
+FROM s
+"""
 
 
 def q_kg_pipeline_e2e(spark, sf_dir) -> DataFrame:
@@ -744,6 +1440,343 @@ SELECT DISTINCT
        '<{P_NS}lang>' AS predicate,
        '"' || lang || '"' AS object
 FROM documents
+"""
+
+
+def q_text_bpe_tokens(spark, sf_dir) -> DataFrame:
+    """BPE-ish token budgeting: regex pre-tokenizer + ceil(len/4) subword
+    estimate, all column ops (whole-stage codegen)."""
+    from rio_spark.operators.text import bpe_token_stats
+
+    return bpe_token_stats(
+        _documents(spark, sf_dir).select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    )
+
+
+ORACLE_TEXT_BPE_TOKENS = r"""
+SELECT CAST(doc_id AS VARCHAR) AS doc_id,
+  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS INT) AS n_pretokens,
+  CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS INT) AS n_words,
+  CAST(len(regexp_extract_all(lower(text), '[0-9]+')) AS INT) AS n_numbers,
+  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]'))
+       - len(regexp_extract_all(lower(text), '[a-z]+'))
+       - len(regexp_extract_all(lower(text), '[0-9]+')) AS INT) AS n_punct,
+  CAST(coalesce(list_sum(list_transform(regexp_extract_all(lower(text), '[a-z]+'),
+                                        w -> CAST(ceil(length(w) / 4.0) AS INT))), 0) AS INT)
+    AS n_subwords
+FROM documents
+"""
+
+
+def q_text_pii_mask(spark, sf_dir) -> DataFrame:
+    """PII scrub over documents with deterministic synthetic PII injected
+    into every 7th doc (the raw corpus has none): emails/SSNs/phones/IPv4s
+    masked with typed placeholders + per-kind counts. Pure regexp column
+    chain, RE2-safe so DuckDB evaluates the identical patterns."""
+    from rio_spark.operators.text import pii_mask
+
+    docs = _documents(spark, sf_dir).select(
+        F.col("doc_id").cast("string").alias("doc_id"),
+        F.when(
+            F.col("doc_id") % 7 == 0,
+            F.concat(
+                F.col("text"),
+                F.lit(" reach me at user"), F.col("doc_id").cast("string"),
+                F.lit("@example.com or 555-0100-"), F.col("doc_id").cast("string"),
+                F.lit(" ssn 123-45-6789 host 10.0.0.1"),
+            ),
+        ).otherwise(F.col("text")).alias("text"),
+    )
+    return pii_mask(docs)
+
+
+ORACLE_TEXT_PII_MASK = r"""
+WITH d AS (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id,
+         CASE WHEN doc_id % 7 = 0
+              THEN text || ' reach me at user' || doc_id
+                   || '@example.com or 555-0100-' || doc_id
+                   || ' ssn 123-45-6789 host 10.0.0.1'
+              ELSE text END AS text
+  FROM documents
+),
+m1 AS (
+  SELECT doc_id,
+         CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}')) AS INT) AS n_email,
+         regexp_replace(text, '[A-Za-z0-9._%+\-]+@[A-Za-z0-9.\-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS t
+  FROM d
+),
+m2 AS (
+  SELECT doc_id, n_email,
+         CAST(len(regexp_extract_all(t, '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b')) AS INT) AS n_ssn,
+         regexp_replace(t, '\b[0-9]{3}-[0-9]{2}-[0-9]{4}\b', '<SSN>', 'g') AS t
+  FROM m1
+),
+m3 AS (
+  SELECT doc_id, n_email, n_ssn,
+         CAST(len(regexp_extract_all(t, '\+?[0-9][0-9()\-\s]{7,}[0-9]')) AS INT) AS n_phone,
+         regexp_replace(t, '\+?[0-9][0-9()\-\s]{7,}[0-9]', '<PHONE>', 'g') AS t
+  FROM m2
+)
+SELECT doc_id,
+       regexp_replace(t, '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b', '<IP>', 'g') AS masked,
+       n_email, n_ssn, n_phone,
+       CAST(len(regexp_extract_all(t, '\b(?:[0-9]{1,3}\.){3}[0-9]{1,3}\b')) AS INT) AS n_ipv4
+FROM m3
+"""
+
+
+def q_dedup_near_groups(spark, sf_dir) -> DataFrame:
+    """End-to-end near-dup grouping on documents + injected exact dups:
+    LSH candidate pairs -> hub-safe connected components -> (doc_id,
+    group_id). The composition a 100 TB dedup job actually runs."""
+    from rio_spark.operators.dedup import near_dup_groups
+
+    docs = _documents(spark, sf_dir).select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+    dups = (
+        _documents(spark, sf_dir)
+        .filter(F.col("doc_id") % 10 == 0)
+        .select(F.concat(F.lit("dup"), F.col("doc_id").cast("string")).alias("doc_id"), "text")
+    )
+    return near_dup_groups(docs.unionByName(dups), k=4, bands=2)
+
+
+# same pair graph as ORACLE_DEDUP_LSH_PAIRS, closed transitively with a
+# recursive CTE (min-label over the reachability set = the CC fixpoint)
+ORACLE_DEDUP_NEAR_GROUPS = f"""
+WITH RECURSIVE docs0 AS (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
+  UNION ALL
+  SELECT 'dup' || doc_id, text FROM documents WHERE doc_id % 10 = 0
+),
+t AS (
+  SELECT doc_id,
+         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS toks
+  FROM docs0
+),
+s AS (SELECT doc_id, {_SHINGLE3_SQL} AS sh FROM t),
+m AS (SELECT doc_id,
+  list_min(list_transform(sh, x -> md5('0:' || x))) AS mh0,
+  list_min(list_transform(sh, x -> md5('1:' || x))) AS mh1,
+  list_min(list_transform(sh, x -> md5('2:' || x))) AS mh2,
+  list_min(list_transform(sh, x -> md5('3:' || x))) AS mh3
+FROM s),
+b AS (
+  SELECT doc_id, 0 AS band_id, mh0 || '|' || mh1 AS band_sig FROM m
+  UNION ALL
+  SELECT doc_id, 1, mh2 || '|' || mh3 FROM m
+),
+pairs AS (
+  SELECT DISTINCT a.doc_id AS doc_a, b2.doc_id AS doc_b
+  FROM b a JOIN b b2
+    ON a.band_id = b2.band_id AND a.band_sig = b2.band_sig AND a.doc_id < b2.doc_id
+),
+sym AS (SELECT doc_a AS u, doc_b AS v FROM pairs UNION SELECT doc_b, doc_a FROM pairs),
+reach AS (
+  SELECT u, v FROM sym
+  UNION
+  SELECT r.u, s2.v FROM reach r JOIN sym s2 ON r.v = s2.u
+)
+SELECT u AS doc_id, least(u, min(v)) AS group_id FROM reach GROUP BY u
+"""
+
+
+def q_corpus_clean_e2e(spark, sf_dir) -> DataFrame:
+    """The training-data cleaning chain as ONE oracle-checked plan —
+    the text-side analogue of kg_pipeline_e2e: documents (+injected exact
+    dups) -> language-ID gate (en) -> quality gate (>= 0.55) -> benchmark
+    decontamination gate (docs containing >= 80% of a held-out eval item's
+    trigrams dropped — including the eval items themselves, which must not
+    be trained on) -> exact dedup (keep group representative) -> near-dup
+    LSH+CC (keep cluster leader) -> sequence packing into 512-token bins.
+    Every stage is the catalog operator, composed unchanged."""
+    from rio_spark.operators.dedup import decontaminate, near_dup_groups, normalize_text
+    from rio_spark.operators.text import language_id, pack_sequences, quality_score
+
+    docs = _documents(spark, sf_dir).select(
+        F.col("doc_id").cast("string").alias("doc_id"), "text"
+    )
+    dups = (
+        _documents(spark, sf_dir)
+        .filter(F.col("doc_id") % 10 == 0)
+        .select(F.concat(F.lit("dup"), F.col("doc_id").cast("string")).alias("doc_id"), "text")
+    )
+    base = docs.unionByName(dups)
+
+    bench = _documents(spark, sf_dir).filter(F.col("doc_id") % 97 == 3).select(
+        F.col("doc_id").cast("string").alias("bench_id"), "text"
+    )
+    # measured A/B at sf0.1 local[32] (r6): decontaminating the lang/
+    # quality SURVIVORS instead of base — the r5 verdict's suggestion —
+    # is output-identical but SLOWER here; the contam branch stays
+    # independent.  r7 (guide §8): the language/quality gates used to be
+    # id-list JOINS back onto the corpus, shuffling the text payload once
+    # per gate; with the operators' passthrough mode both predicates now
+    # gate IN ONE corpus pass as plain filters (identical rows: doc_ids
+    # are unique and both scores are per-row deterministic projections,
+    # so filter-chaining == the id-equi-joins — pinned by the unchanged
+    # oracle at every SF).  The remaining small sides (contam ids, exact-
+    # dedup reps, near-dup group labels) broadcast instead of shuffling
+    # the corpus; at a scale where they outgrow broadcast, they are the
+    # ONE id-shuffle the algorithm fundamentally needs.
+    contam = decontaminate(base, bench, n=3, threshold=0.8).select("doc_id").distinct()
+    gated = quality_score(
+        language_id(base, passthrough=True).filter(F.col("lang_pred") == "en"),
+        passthrough=True,
+    ).filter(F.col("quality") >= 0.55)
+    keep1 = gated.select("doc_id", "text").join(
+        F.broadcast(contam), "doc_id", "left_anti"
+    )
+
+    keyed = keep1.withColumn("h", F.md5(normalize_text(F.col("text"))))
+    reps = keyed.groupBy("h").agg(F.min("doc_id").alias("doc_id"))
+    # the gate+dedup upstream feeds the LSH self-join AND the leader
+    # filter AND the packer — cache the slim survivor set so it computes
+    # once (same pattern as kg_pipeline_e2e)
+    keep2 = keyed.join(F.broadcast(reps), ["h", "doc_id"]).select("doc_id", "text").cache()
+    # materialize the cache BEFORE fanning out: keep2 feeds the LSH
+    # self-join (both sides), the leader filter, and the packer — without
+    # an eager fill those stages race and each recomputes the whole
+    # uncached gate+dedup prefix (measured: 12.2 s -> ~4 s steady at
+    # sf0.1; the fill is part of the query's real cost and is timed)
+    keep2.count()
+
+    nd = near_dup_groups(keep2, k=4, bands=2)
+    # group labels exist only for clustered docs (small by construction):
+    # broadcast them so the leader filter never shuffles the survivor text
+    keep3 = (
+        keep2.join(F.broadcast(nd), "doc_id", "left")
+        .filter(F.col("group_id").isNull() | (F.col("group_id") == F.col("doc_id")))
+        .select("doc_id", "text")
+    )
+    return pack_sequences(keep3, budget=512, n_buckets=16, numeric_ids=False)
+
+
+def _oracle_corpus_clean() -> str:
+    # reuse the language-ID and quality oracles verbatim, re-pointed at the
+    # dup-injected base set; assert the retarget actually happened so a
+    # future reformat fails at import, not at gate time (ADVICE r2 pattern)
+    lang_sql = _oracle_langid().replace("FROM documents", "FROM base")
+    qual_sql = _oracle_quality().replace("FROM documents", "FROM base")
+    assert "FROM documents" not in lang_sql and "FROM documents" not in qual_sql
+    return f"""
+WITH RECURSIVE base AS (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents
+  UNION ALL
+  SELECT 'dup' || doc_id, text FROM documents WHERE doc_id % 10 = 0
+),
+lang AS ({lang_sql}),
+qual AS ({qual_sql}),
+bt AS (
+  SELECT CAST(doc_id AS VARCHAR) AS bench_id,
+         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS toks
+  FROM documents WHERE doc_id % 97 = 3
+),
+bs AS (SELECT bench_id, list_distinct({_SHINGLE3_SQL}) AS sh FROM bt),
+bex AS (SELECT bench_id, unnest(sh) AS g FROM bs),
+bsz AS (SELECT bench_id, count(*) AS bsz FROM bex GROUP BY 1),
+ct0 AS (
+  SELECT doc_id,
+         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS toks
+  FROM base
+),
+cs0 AS (SELECT doc_id, list_distinct({_SHINGLE3_SQL}) AS sh FROM ct0),
+cex AS (SELECT doc_id, unnest(sh) AS g FROM cs0),
+contam AS (
+  SELECT DISTINCT x.doc_id FROM (
+    SELECT c.doc_id, b.bench_id, count(*) AS i
+    FROM cex c JOIN bex b USING (g) GROUP BY 1, 2
+  ) x JOIN bsz USING (bench_id)
+  WHERE x.i * 1.0 / bsz >= 0.8
+),
+keep1 AS (
+  SELECT b.doc_id, b.text FROM base b
+  JOIN lang l ON l.doc_id = b.doc_id AND l.lang_pred = 'en'
+  JOIN qual q ON q.doc_id = b.doc_id AND q.quality >= 0.55
+  WHERE b.doc_id NOT IN (SELECT doc_id FROM contam)
+),
+keyed AS (
+  SELECT doc_id, text,
+         md5(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'))) AS h
+  FROM keep1
+),
+keep2 AS (
+  SELECT doc_id, text FROM keyed
+  QUALIFY doc_id = min(doc_id) OVER (PARTITION BY h)
+),
+t AS (
+  SELECT doc_id,
+         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS toks
+  FROM keep2
+),
+s AS (SELECT doc_id, {_SHINGLE3_SQL} AS sh FROM t),
+m AS (SELECT doc_id,
+  list_min(list_transform(sh, x -> md5('0:' || x))) AS mh0,
+  list_min(list_transform(sh, x -> md5('1:' || x))) AS mh1,
+  list_min(list_transform(sh, x -> md5('2:' || x))) AS mh2,
+  list_min(list_transform(sh, x -> md5('3:' || x))) AS mh3
+FROM s),
+bnd AS (
+  SELECT doc_id, 0 AS band_id, mh0 || '|' || mh1 AS band_sig FROM m
+  UNION ALL
+  SELECT doc_id, 1, mh2 || '|' || mh3 FROM m
+),
+pairs AS (
+  SELECT DISTINCT a.doc_id AS u, b2.doc_id AS v
+  FROM bnd a JOIN bnd b2
+    ON a.band_id = b2.band_id AND a.band_sig = b2.band_sig AND a.doc_id < b2.doc_id
+),
+sym AS (SELECT u, v FROM pairs UNION SELECT v, u FROM pairs),
+reach AS (
+  SELECT u, v FROM sym
+  UNION
+  SELECT r.u, s2.v FROM reach r JOIN sym s2 ON r.v = s2.u
+),
+grp AS (SELECT u AS doc_id, least(u, min(v)) AS gid FROM reach GROUP BY u),
+keep3 AS (
+  SELECT k.doc_id, k.text FROM keep2 k
+  LEFT JOIN grp g ON g.doc_id = k.doc_id
+  WHERE g.doc_id IS NULL OR g.gid = k.doc_id
+),
+d AS (
+  SELECT doc_id,
+         CAST(len(string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ')) AS BIGINT) AS n_tokens,
+         CAST(ascii(substr(md5(doc_id), 1, 1)) % 16 AS BIGINT) AS bucket
+  FROM keep3
+),
+c AS (
+  SELECT doc_id, n_tokens,
+         CAST(sum(n_tokens) OVER (ORDER BY bucket, doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum
+  FROM d
+)
+SELECT doc_id, n_tokens, (cum - n_tokens) // 512 AS bin_id FROM c
+"""
+
+
+def q_text_stratified_sample(spark, sf_dir) -> DataFrame:
+    """Deterministic per-language top-5 sample of documents: rank by
+    md5(doc_id) inside each lang stratum — the down-sampling step of a
+    training-data mix, one shuffle total."""
+    from rio_spark.operators.text import stratified_sample
+
+    docs = _documents(spark, sf_dir).select(
+        F.col("doc_id").cast("string").alias("doc_id"), F.col("lang")
+    )
+    return stratified_sample(docs, F.col("lang"), k=5)
+
+
+ORACLE_TEXT_STRATIFIED_SAMPLE = """
+SELECT doc_id, stratum, rank FROM (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id, lang AS stratum,
+         CAST(row_number() OVER (
+           PARTITION BY lang
+           ORDER BY md5(CAST(doc_id AS VARCHAR)), CAST(doc_id AS VARCHAR)
+         ) AS INT) AS rank
+  FROM documents
+)
+WHERE rank <= 5
 """
 
 
@@ -852,10 +1885,165 @@ FROM documents
 """
 
 
+def q_dedup_decontaminate(spark, sf_dir) -> DataFrame:
+    """Benchmark decontamination (operators/dedup.py decontaminate): the
+    held-out eval set is the doc_id % 97 == 3 slice of the corpus, the
+    corpus is everything else PLUS injected leakage — a 70%-prefix copy of
+    every benchmark item (must flag: it contains most of the item's
+    trigrams) and a 25%-prefix copy (must NOT flag) — so both sides of the
+    0.5 containment threshold are exercised, alongside any genuine
+    cross-slice near-duplicates the corpus already holds. Benchmark index +
+    sizes are broadcast; the corpus side never shuffles before the final
+    map-side-combinable (doc, bench) count. floor() before the INT cast in
+    the prefix length is load-bearing: Spark's double->int cast truncates,
+    DuckDB's rounds."""
+    from rio_spark.operators.dedup import decontaminate
+
+    base = _documents(spark, sf_dir)
+    bench = base.filter(F.col("doc_id") % 97 == 3).select(
+        F.col("doc_id").cast("string").alias("bench_id"), "text"
+    )
+
+    def prefix_copy(tag: str, frac: str):
+        return bench.select(
+            F.concat(F.lit(tag), F.col("bench_id")).alias("doc_id"),
+            F.expr(
+                f"substring(text, 1, CAST(floor(length(text) * {frac}) AS INT))"
+            ).alias("text"),
+        )
+
+    corpus = (
+        base.filter(F.col("doc_id") % 97 != 3)
+        .select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+        .unionByName(prefix_copy("c70_", "0.7"))
+        .unionByName(prefix_copy("c25_", "0.25"))
+    )
+    return decontaminate(corpus, bench, n=3, threshold=0.5, max_bench_df=20)
+
+
+# same containment, inverted-index join written out; the max_bench_df=20
+# boilerplate guard drops grams shared by >20 benchmark items from both the
+# index and the denominators (none exist at these sf's unless the corpus is
+# pathological, but the guard is part of the operator's contract)
+ORACLE_DEDUP_DECONTAMINATE = f"""
+WITH corpus AS (
+  SELECT CAST(doc_id AS VARCHAR) AS doc_id, text FROM documents WHERE doc_id % 97 <> 3
+  UNION ALL
+  SELECT 'c70_' || doc_id, substr(text, 1, CAST(floor(length(text) * 0.7) AS INT))
+  FROM documents WHERE doc_id % 97 = 3
+  UNION ALL
+  SELECT 'c25_' || doc_id, substr(text, 1, CAST(floor(length(text) * 0.25) AS INT))
+  FROM documents WHERE doc_id % 97 = 3
+),
+t AS (
+  SELECT doc_id,
+         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS toks
+  FROM corpus
+),
+s AS (SELECT doc_id, list_distinct({_SHINGLE3_SQL}) AS sh FROM t),
+cex AS (SELECT doc_id, unnest(sh) AS g FROM s),
+bt AS (
+  SELECT CAST(doc_id AS VARCHAR) AS bench_id,
+         string_split(trim(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS toks
+  FROM documents WHERE doc_id % 97 = 3
+),
+bs AS (SELECT bench_id, list_distinct({_SHINGLE3_SQL}) AS sh FROM bt),
+bex0 AS (SELECT bench_id, unnest(sh) AS g FROM bs),
+bkeep AS (SELECT g FROM bex0 GROUP BY g HAVING count(*) <= 20),
+bex AS (SELECT bench_id, g FROM bex0 JOIN bkeep USING (g)),
+bsz AS (SELECT bench_id, count(*) AS bsz FROM bex GROUP BY 1),
+inter AS (
+  SELECT c.doc_id, b.bench_id, count(*) AS i
+  FROM cex c JOIN bex b USING (g)
+  GROUP BY 1, 2
+)
+SELECT doc_id, bench_id, round(i * 1.0 / bsz, 6) AS overlap
+FROM inter JOIN bsz USING (bench_id)
+WHERE i * 1.0 / bsz >= 0.5
+"""
+
+
+def q_sim_dup_groups(spark, sf_dir) -> DataFrame:
+    """Embedding near-dup grouping e2e (similarity.py embedding_dup_groups):
+    LSH-bucketed cosine pairs -> hub-safe CC -> (vec_id, group_id) — the
+    embedding-space twin of dedup_near_groups, same recursive-CTE closure
+    oracle shape."""
+    from rio_spark.operators.similarity import embedding_dup_groups
+
+    return embedding_dup_groups(_embeddings(spark, sf_dir), threshold=0.3, n_planes=4)
+
+
+ORACLE_SIM_DUP_GROUPS = f"""
+WITH RECURSIVE p AS ({_PLANES_SQL}),
+e2 AS (
+  SELECT vec_id, e.embedding::DOUBLE[] AS v, {_BUCKET4_SQL} AS bucket
+  FROM embeddings e, p
+),
+pairs AS (
+  SELECT a.vec_id AS u, b.vec_id AS v2
+  FROM e2 a JOIN e2 b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+  WHERE round(list_dot_product(a.v, b.v)
+              / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v))), 4) >= 0.3
+),
+sym AS (SELECT u, v2 FROM pairs UNION SELECT v2, u FROM pairs),
+reach AS (
+  SELECT u, v2 FROM sym
+  UNION
+  SELECT r.u, s.v2 FROM reach r JOIN sym s ON r.v2 = s.u
+)
+SELECT u AS vec_id, least(u, min(v2)) AS group_id FROM reach GROUP BY u
+"""
+
+
+def q_corpus_mix(spark, sf_dir) -> DataFrame:
+    """Corpus composition report (operators/text.py corpus_mix_report):
+    docs bucketed by predicted language x quality band with doc/token
+    counts and corpus share — the data-recipe table a training mix is
+    steered by."""
+    from rio_spark.operators.text import corpus_mix_report
+
+    return corpus_mix_report(
+        _documents(spark, sf_dir).select(
+            F.col("doc_id").cast("string").alias("doc_id"), "text"
+        )
+    )
+
+
+def _oracle_corpus_mix() -> str:
+    return f"""
+WITH lang AS ({_oracle_langid()}),
+qual AS ({_oracle_quality()}),
+t AS ({_TOKS_SQL}),
+tok AS (SELECT doc_id, len(toks) AS n_tokens FROM t),
+j AS (
+  SELECT l.lang_pred, q.quality, tok.n_tokens
+  FROM lang l JOIN qual q USING (doc_id) JOIN tok USING (doc_id)
+),
+per AS (
+  SELECT lang_pred,
+         CAST(least(floor(quality * 5), 4) AS INT) AS q_bucket,
+         count(*) AS n_docs,
+         CAST(sum(n_tokens) AS BIGINT) AS total_tokens
+  FROM j GROUP BY 1, 2
+),
+tot AS (SELECT CAST(sum(n_docs) AS BIGINT) AS t FROM per)
+SELECT lang_pred, q_bucket, n_docs, total_tokens,
+       round(CAST(n_docs AS DOUBLE) / t, 6) AS doc_share
+FROM per, tot
+"""
+
+
 # Insertion order matters: the correctness driver checks at most the first
 # 50 entries (test_driver_cap_window_covers_unchecked_queries).
 QUERIES = {
+    "dedup_decontaminate": q_dedup_decontaminate,
+    "sim_dup_groups": q_sim_dup_groups,
+    "corpus_mix": q_corpus_mix,
     "streaming_materialize": q_streaming_materialize,
+    "dedup_minhash": q_dedup_minhash,
+    "dedup_near_groups": q_dedup_near_groups,
+    "text_pack_batches": q_text_pack_batches,
+    "streaming_dedup": q_streaming_dedup,
     "streaming_kg_extract": q_streaming_kg_extract,
     "kg_extract_rdfxml": q_kg_extract_rdfxml,
     "kg_extract_nquads": q_kg_extract_nquads,
@@ -865,23 +2053,49 @@ QUERIES = {
     "kg_predicate_counts": q_kg_predicate_counts,
     "kg_canonicalize": q_kg_canonicalize,
     "kg_link_blocked": q_kg_link_blocked,
+    "dedup_simhash": q_dedup_simhash,
+    "dedup_jaccard": q_dedup_jaccard,
+    "dedup_jaccard_skewed": q_dedup_jaccard_skewed,
+    "dedup_lsh_capped": q_dedup_lsh_capped,
+    "text_pii_mask": q_text_pii_mask,
+    "text_stratified_sample": q_text_stratified_sample,
+    "text_vocab": q_text_vocab,
+    "text_tfidf": q_text_tfidf,
+    "text_ngrams": q_text_ngrams,
     "kg_cc_incremental": q_kg_cc_incremental,
+    "corpus_clean_e2e": q_corpus_clean_e2e,
     "kg_pipeline_e2e": q_kg_pipeline_e2e,
     "kg_entity_linking": q_kg_entity_linking,
     "kg_extract_nt": q_kg_extract_nt,
     "kg_error_recovery": q_kg_error_recovery,
     "kg_extract_turtle": q_kg_extract_turtle,
+    "dedup_exact": q_dedup_exact,
+    "dedup_lsh_pairs": q_dedup_lsh_pairs,
+    "text_repetition": q_text_repetition,
     "kg_error_stats": q_kg_error_stats,
     "kg_format_ntriples": q_kg_format_ntriples,
     "kg_format_nquads": q_kg_format_nquads,
     "kg_format_turtle": q_kg_format_turtle,
     "kg_format_trig": q_kg_format_trig,
     "kg_format_rdfxml": q_kg_format_rdfxml,
+    "sim_topk": q_sim_topk,
+    "sim_pairs": q_sim_pairs,
+    "sim_pairs_lsh": q_sim_pairs_lsh,
+    "sim_ann_topk": q_sim_ann_topk,
+    "sim_lsh_buckets": q_sim_lsh_buckets,
+    "text_tokens": q_text_tokens,
+    "text_langid": q_text_langid,
+    "text_quality": q_text_quality,
+    "text_fingerprint": q_text_fingerprint,
+    "text_bpe_tokens": q_text_bpe_tokens,
     "kg_assembly": q_kg_assembly,
     "kg_connected_components": q_kg_connected_components,
 }
 
 ORACLES = {
+    "dedup_decontaminate": ORACLE_DEDUP_DECONTAMINATE,
+    "sim_dup_groups": ORACLE_SIM_DUP_GROUPS,
+    "corpus_mix": _oracle_corpus_mix(),
     "streaming_materialize": ORACLE_STREAMING_MATERIALIZE,
     "kg_extract_nt": ORACLE_KG_EXTRACT_NT,
     "kg_extract_turtle": ORACLE_KG_EXTRACT_TURTLE,
@@ -903,7 +2117,40 @@ ORACLES = {
     "kg_format_turtle": ORACLE_KG_FORMAT_TURTLE,
     "kg_format_trig": ORACLE_KG_FORMAT_TRIG,
     "kg_format_rdfxml": ORACLE_KG_FORMAT_RDFXML,
+    "dedup_exact": ORACLE_DEDUP_EXACT,
+    "dedup_lsh_pairs": ORACLE_DEDUP_LSH_PAIRS,
+    "dedup_minhash": ORACLE_DEDUP_MINHASH,
+    "dedup_simhash": _oracle_simhash(16),
+    "dedup_jaccard": ORACLE_DEDUP_JACCARD,
+    "dedup_jaccard_skewed": ORACLE_DEDUP_JACCARD_SKEWED,
+    "dedup_lsh_capped": ORACLE_DEDUP_LSH_CAPPED,
+    "dedup_near_groups": ORACLE_DEDUP_NEAR_GROUPS,
+    "text_pii_mask": ORACLE_TEXT_PII_MASK,
+    "text_stratified_sample": ORACLE_TEXT_STRATIFIED_SAMPLE,
+    "text_vocab": ORACLE_TEXT_VOCAB,
+    "text_tfidf": ORACLE_TEXT_TFIDF,
+    "text_ngrams": ORACLE_TEXT_NGRAMS,
+    "text_pack_batches": ORACLE_TEXT_PACK_BATCHES,
+    "corpus_clean_e2e": _oracle_corpus_clean(),
+    "text_repetition": ORACLE_TEXT_REPETITION,
     "kg_error_stats": ORACLE_KG_ERROR_STATS,
     "kg_cc_incremental": ORACLE_KG_CC_INCREMENTAL,
+    "text_tokens": ORACLE_TEXT_TOKENS,
+    "text_langid": _oracle_langid(),
+    "text_quality": _oracle_quality(),
+    "text_fingerprint": ORACLE_TEXT_FINGERPRINT,
+    "text_bpe_tokens": ORACLE_TEXT_BPE_TOKENS,
+    "sim_topk": ORACLE_SIM_TOPK,
+    "sim_pairs": ORACLE_SIM_PAIRS,
+    "sim_pairs_lsh": ORACLE_SIM_PAIRS_LSH,
+    "sim_ann_topk": ORACLE_SIM_ANN_TOPK,
+    "sim_lsh_buckets": ORACLE_SIM_LSH_BUCKETS,
+    "streaming_dedup": ORACLE_STREAMING_DEDUP,
     "streaming_kg_extract": ORACLE_STREAMING_KG_EXTRACT,
 }
+
+# Queries whose returned plan reads a relation they cached (see the module
+# docstring's cache-lifetime note); every other query caches nothing.
+CALLER_OWNED_CACHE = frozenset(
+    {"corpus_mix", "corpus_clean_e2e", "text_tfidf", "text_pack_batches"}
+)

@@ -12,7 +12,7 @@ import math
 
 import pandas as pd
 
-TABLES = ["customer", "documents"]
+TABLES = ["customer", "documents", "embeddings"]
 
 
 def canon(df: pd.DataFrame) -> list[tuple]:

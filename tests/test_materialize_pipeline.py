@@ -409,59 +409,6 @@ def test_streaming_pipeline_matches_batch_and_resumes(spark, tmp_path, pipeline_
     assert len(store.lineage(spark).toPandas()) == len(lin)
 
 
-def test_stream_merge_to_store_idempotent_across_restart(spark, tmp_path):
-    """Streaming KG materialize (streaming/materialize.py): two micro-batches
-    of documents stream through the extraction kernel into GraphStore.merge
-    — one snapshot + one lineage row per batch — and RERUNNING the whole
-    replay (fresh checkpoint, same data: the worst-case full redelivery)
-    adds zero quads: the MERGE anti-join makes the sink idempotent, and the
-    duplicate delivery is visible in lineage as merged=0 rows."""
-    import os
-
-    from rio_spark.operators.extract import extract_triples, triples_of
-    from rio_spark.streaming.materialize import stream_merge_to_store
-
-    src = tmp_path / "src"
-    src.mkdir()
-    for i, docs in enumerate([[("c0", "<http://e/a> <http://p/x> <http://e/b> .")],
-                              [("c1", "<http://e/b> <http://p/x> <http://e/c> .\n"
-                                      "<http://e/a> <http://p/x> <http://e/b> .")]]):
-        d = str(src / f"f{i}")
-        spark.createDataFrame(docs, "conv_id string, text string").coalesce(1).write.parquet(d)
-        for f in os.listdir(d):
-            os.utime(os.path.join(d, f), (1_000_000 + i, 1_000_000 + i))
-
-    def replay(ckpt):
-        stream = (
-            spark.readStream.schema("conv_id string, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/*")
-        )
-        ext = triples_of(extract_triples(stream, fmt="nt", parallelism=0))
-        q = stream_merge_to_store(
-            ext.select("subject", "predicate", "object",
-                       F.lit(None).cast("string").alias("graph")),
-            store, "stream-snap", str(tmp_path / ckpt),
-        )
-        q.awaitTermination()
-
-    store = GraphStore(str(tmp_path / "store"), n_buckets=4)
-    replay("ckpt1")
-    quads = sorted(map(tuple, store.graph(spark).select("subject", "object").collect()))
-    assert quads == [("<http://e/a>", "<http://e/b>"), ("<http://e/b>", "<http://e/c>")]
-    lin1 = store.lineage(spark).toPandas()
-    assert sorted(lin1.partition_hash) == ["batch-0", "batch-1"]
-    assert int(lin1.triple_count.sum()) == 2  # the cross-batch dup merged once
-
-    # full redelivery: fresh checkpoint, same files -> zero new quads,
-    # lineage shows the replayed batches with merged=0
-    replay("ckpt2")
-    assert store.graph(spark).count() == 2
-    lin2 = store.lineage(spark).toPandas()
-    assert len(lin2) == 4
-    assert int(lin2.triple_count.sum()) == 2
-
-
 def test_compaction_preserves_content_and_reduces_files(spark, tmp_path):
     """compact() must cut per-bucket file counts without changing a single
     quad, leave under-threshold buckets alone, keep lineage untouched, and
