@@ -23,9 +23,12 @@ conversation document).
 from __future__ import annotations
 
 import re
+from array import array
 from collections.abc import Iterator
+from functools import partial
 
 import pyarrow as pa
+from pyarrow.lib import StringBuilder
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -38,7 +41,7 @@ from rio_spark.kernels import (
     parse_trig,
     parse_turtle,
 )
-from rio_spark.model import serialize_triples
+from rio_spark.model import serialize_term, serialize_triples
 
 EXTRACT_SCHEMA = (
     "doc_id string, subject string, predicate string, object string, graph string, "
@@ -79,6 +82,123 @@ def parse_document(doc_id: str, fmt: str, text: str, base_iri: str | None):
     return rows, err_rows
 
 
+_ARROW_SCHEMA = pa.schema(
+    [
+        ("doc_id", pa.string()),
+        ("subject", pa.string()),
+        ("predicate", pa.string()),
+        ("object", pa.string()),
+        ("graph", pa.string()),
+        ("error_kind", pa.string()),
+        ("error_line", pa.int32()),
+        ("error_byte", pa.int32()),
+        ("error_msg", pa.string()),
+    ]
+)
+# flush threshold: bounds a task's live output to ~chunk rows of small
+# strings (a few MB) no matter how many 10k-statement documents it holds
+_CHUNK = 1 << 16
+
+
+def _strings(values: list) -> pa.Array:
+    # pyarrow.lib's builder, not pa.array, which imports pandas on first use
+    builder = StringBuilder()
+    builder.append_values(values)
+    return builder.finish()
+
+
+def _int32s(values: array) -> pa.Array:
+    return pa.Array.from_buffers(pa.int32(), len(values), [None, pa.py_buffer(values.tobytes())])
+
+
+def extract_batches(
+    batches: Iterator[pa.RecordBatch],
+    fmt: str | None,
+    id_col: str,
+    text_col: str,
+    format_col: str | None,
+    base_col: str | None,
+) -> Iterator[pa.RecordBatch]:
+    """The ``mapInArrow`` kernel of :func:`extract_triples`: document
+    batches in, EXTRACT_SCHEMA batches out. Each flush emits its triple rows
+    as one batch, then its error rows as another; the columns a batch does
+    not carry are ``pa.nulls``. ``format_col``/``base_col`` are None when
+    the frame has no such column."""
+    # columnar construction: no per-row tuples, one list append per cell
+    c_doc: list = []; c_s: list = []; c_p: list = []; c_o: list = []; c_g: list = []
+    e_doc: list = []; e_kind: list = []; e_msg: list = []
+    e_line = array("i"); e_byte = array("i")
+
+    def flush() -> Iterator[pa.RecordBatch]:
+        n_t, n_e = len(c_doc), len(e_doc)
+        if n_t:
+            yield pa.RecordBatch.from_arrays(
+                [_strings(c) for c in (c_doc, c_s, c_p, c_o, c_g)]
+                + [pa.nulls(n_t, t) for t in (pa.string(), pa.int32(), pa.int32(), pa.string())],
+                schema=_ARROW_SCHEMA,
+            )
+        if n_e:
+            yield pa.RecordBatch.from_arrays(
+                [_strings(e_doc)]
+                + [pa.nulls(n_e, pa.string())] * 4
+                + [_strings(e_kind), _int32s(e_line), _int32s(e_byte), _strings(e_msg)],
+                schema=_ARROW_SCHEMA,
+            )
+        for lst in (c_doc, c_s, c_p, c_o, c_g, e_doc, e_kind, e_msg):
+            lst.clear()
+        del e_line[:], e_byte[:]
+
+    for batch in batches:
+        names = batch.schema.names
+        ids = batch.column(names.index(id_col)).to_pylist()
+        texts = batch.column(names.index(text_col)).to_pylist()
+        fmts = batch.column(names.index(format_col)).to_pylist() if format_col else None
+        bases = batch.column(names.index(base_col)).to_pylist() if base_col else None
+        for k in range(len(ids)):
+            doc_fmt = fmts[k] if fmts is not None else fmt
+            base = bases[k] if bases is not None else None
+            if base is not None and not isinstance(base, str):
+                base = None
+            did = ids[k]
+            did = did if isinstance(did, str) else str(did)
+            parser = _PARSERS.get(doc_fmt)
+            if parser is None:
+                e_doc.append(did); e_kind.append("UnsupportedFormat")
+                e_line.append(0); e_byte.append(0)
+                e_msg.append(f"unknown format {doc_fmt!r}")
+                continue
+            triples, errors = parser(texts[k], base)
+            scope = _SCOPE_SANITIZE.sub("_", did) + "_"
+            labels: dict = {}
+            # doc_id repeats per triple: ONE C-level list-repeat extend
+            # instead of a per-row append (the emit loop runs once per
+            # triple of the corpus — bound methods below for the same
+            # reason; micro-measured ~25% off the loop's share)
+            c_doc.extend([did] * len(triples))
+            ap_s = c_s.append; ap_p = c_p.append
+            ap_o = c_o.append; ap_g = c_g.append
+            for row in triples:
+                # plain canonical strings (the overwhelming majority of
+                # terms) skip the serialize_term call entirely; only
+                # BNode/QTriple terms need relabelling
+                s, p, o = row[0], row[1], row[2]
+                ap_s(s if type(s) is str else serialize_term(s, labels, scope))
+                ap_p(p if type(p) is str else serialize_term(p, labels, scope))
+                ap_o(o if type(o) is str else serialize_term(o, labels, scope))
+                if len(row) == 4 and row[3] is not None:
+                    g = row[3]
+                    ap_g(g if type(g) is str else serialize_term(g, labels, scope))
+                else:
+                    ap_g(None)
+            for e in errors:
+                e_doc.append(did); e_kind.append(e["kind"])
+                e_line.append(int(e["line"])); e_byte.append(int(e["byte"]))
+                e_msg.append(e["msg"])
+            if len(c_doc) + len(e_doc) >= _CHUNK:
+                yield from flush()
+    yield from flush()
+
+
 def extract_triples(
     docs: DataFrame,
     fmt: str | None = None,
@@ -112,113 +232,29 @@ def extract_triples(
     which 2 or 8 hold 10k statements or 4 hold 50k: a 50k-statement
     document parses in about 0.1 s, less than the extra task start-ups
     cost, so this skew does not pay for them.
+
+    The kernel (:func:`extract_batches`) makes no ``pa.array`` call:
+    pyarrow's ``pa.array`` imports pandas on its first call (its array-like
+    check), which cost each Python worker about 30 MB of RSS and 0.2-0.45 s
+    of its first flush (4 cores, kgbench's rdf_dense). Strings go through
+    pyarrow's ``StringBuilder``, error positions through
+    ``Array.from_buffers``, and the columns a batch does not carry are
+    ``pa.nulls``.
     """
     if parallelism is None:
         parallelism = docs.sparkSession.sparkContext.defaultParallelism
     if parallelism:
         docs = docs.repartition(parallelism)
     cols = set(docs.columns)
-    has_format = fmt is None and format_col in cols
-    has_base = base_col in cols
-
-    from rio_spark.model import serialize_term
-
-    arrow_schema = pa.schema(
-        [
-            ("doc_id", pa.string()),
-            ("subject", pa.string()),
-            ("predicate", pa.string()),
-            ("object", pa.string()),
-            ("graph", pa.string()),
-            ("error_kind", pa.string()),
-            ("error_line", pa.int32()),
-            ("error_byte", pa.int32()),
-            ("error_msg", pa.string()),
-        ]
+    kernel = partial(
+        extract_batches,
+        fmt=fmt,
+        id_col=id_col,
+        text_col=text_col,
+        format_col=format_col if fmt is None and format_col in cols else None,
+        base_col=base_col if base_col in cols else None,
     )
-    # flush threshold: bounds a task's live output to ~chunk rows of small
-    # strings (a few MB) no matter how many 10k-statement documents it holds
-    chunk = 1 << 16
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        # columnar construction: no per-row tuples, one list append per cell;
-        # RecordBatches are built straight from the lists (no pandas frame)
-        c_doc: list = []; c_s: list = []; c_p: list = []; c_o: list = []; c_g: list = []
-        e_doc: list = []; e_kind: list = []; e_line: list = []
-        e_byte: list = []; e_msg: list = []
-
-        def flush() -> pa.RecordBatch:
-            n_t, n_e = len(c_doc), len(e_doc)
-            out = pa.RecordBatch.from_arrays(
-                [
-                    pa.array(c_doc + e_doc, pa.string()),
-                    pa.array(c_s + [None] * n_e, pa.string()),
-                    pa.array(c_p + [None] * n_e, pa.string()),
-                    pa.array(c_o + [None] * n_e, pa.string()),
-                    pa.array(c_g + [None] * n_e, pa.string()),
-                    pa.array([None] * n_t + e_kind, pa.string()),
-                    pa.array([None] * n_t + e_line, pa.int32()),
-                    pa.array([None] * n_t + e_byte, pa.int32()),
-                    pa.array([None] * n_t + e_msg, pa.string()),
-                ],
-                schema=arrow_schema,
-            )
-            for lst in (c_doc, c_s, c_p, c_o, c_g, e_doc, e_kind, e_line, e_byte, e_msg):
-                lst.clear()
-            return out
-
-        for batch in batches:
-            names = batch.schema.names
-            ids = batch.column(names.index(id_col)).to_pylist()
-            texts = batch.column(names.index(text_col)).to_pylist()
-            fmts = batch.column(names.index(format_col)).to_pylist() if has_format else None
-            bases = batch.column(names.index(base_col)).to_pylist() if has_base else None
-            for k in range(len(ids)):
-                doc_fmt = fmts[k] if fmts is not None else fmt
-                base = bases[k] if bases is not None else None
-                if base is not None and not isinstance(base, str):
-                    base = None
-                did = ids[k]
-                did = did if isinstance(did, str) else str(did)
-                parser = _PARSERS.get(doc_fmt)
-                if parser is None:
-                    e_doc.append(did); e_kind.append("UnsupportedFormat")
-                    e_line.append(0); e_byte.append(0)
-                    e_msg.append(f"unknown format {doc_fmt!r}")
-                    continue
-                triples, errors = parser(texts[k], base)
-                scope = _SCOPE_SANITIZE.sub("_", did) + "_"
-                labels: dict = {}
-                # doc_id repeats per triple: ONE C-level list-repeat extend
-                # instead of a per-row append (the emit loop runs once per
-                # triple of the corpus — bound methods below for the same
-                # reason; micro-measured ~25% off the loop's share)
-                c_doc.extend([did] * len(triples))
-                ap_s = c_s.append; ap_p = c_p.append
-                ap_o = c_o.append; ap_g = c_g.append
-                for row in triples:
-                    # plain canonical strings (the overwhelming majority of
-                    # terms) skip the serialize_term call entirely; only
-                    # BNode/QTriple terms need relabelling
-                    s, p, o = row[0], row[1], row[2]
-                    ap_s(s if type(s) is str else serialize_term(s, labels, scope))
-                    ap_p(p if type(p) is str else serialize_term(p, labels, scope))
-                    ap_o(o if type(o) is str else serialize_term(o, labels, scope))
-                    if len(row) == 4 and row[3] is not None:
-                        g = row[3]
-                        ap_g(g if type(g) is str else serialize_term(g, labels, scope))
-                    else:
-                        ap_g(None)
-                for e in errors:
-                    e_doc.append(did); e_kind.append(e["kind"])
-                    e_line.append(int(e["line"])); e_byte.append(int(e["byte"]))
-                    e_msg.append(e["msg"])
-                if len(c_doc) + len(e_doc) >= chunk:
-                    yield flush()
-        if c_doc or e_doc:
-            yield flush()
-
-    return docs.mapInArrow(fn, schema=EXTRACT_SCHEMA)
+    return docs.mapInArrow(kernel, schema=EXTRACT_SCHEMA)
 
 
 def triples_of(extracted: DataFrame) -> DataFrame:

@@ -136,25 +136,29 @@ def resolve_candidates(candidates: DataFrame) -> DataFrame:
 
 def mention_triples(resolved: DataFrame) -> DataFrame:
     """Resolved mentions -> canonical triples:
-    <doc> kg:mentions <entity> ; <entity> rdfs:label "mention_key"."""
+    <doc> kg:mentions <entity> ; <entity> rdfs:label "mention_key".
+
+    Both triples of a mention come out of one ``inline`` over the resolved
+    rows, so a plan that reads them once runs detection, the dictionary
+    join and the resolution window once (a union of two selects ran them
+    once per arm). ``graph`` is always NULL, so it is added after the
+    ``distinct`` on (doc_id, subject, predicate, object)."""
     doc_iri = F.concat(F.lit("<" + DOC_NS), F.col("doc_id"), F.lit(">"))
     ent_iri = F.concat(F.lit("<"), F.col("candidate_iri"), F.lit(">"))
     mention_lit = F.concat(F.lit('"'), F.col("mention_key"), F.lit('"'))
-    a = resolved.select(
-        F.col("doc_id"),
-        doc_iri.alias("subject"),
-        F.lit(KG_MENTIONS).alias("predicate"),
-        ent_iri.alias("object"),
-        F.lit(None).cast("string").alias("graph"),
+    both = F.array(
+        F.struct(
+            doc_iri.alias("subject"), F.lit(KG_MENTIONS).alias("predicate"), ent_iri.alias("object")
+        ),
+        F.struct(
+            ent_iri.alias("subject"), F.lit(KG_LABEL).alias("predicate"), mention_lit.alias("object")
+        ),
     )
-    b = resolved.select(
-        F.col("doc_id"),
-        ent_iri.alias("subject"),
-        F.lit(KG_LABEL).alias("predicate"),
-        mention_lit.alias("object"),
-        F.lit(None).cast("string").alias("graph"),
+    return (
+        resolved.select("doc_id", F.inline(both))
+        .distinct()
+        .withColumn("graph", F.lit(None).cast("string"))
     )
-    return a.unionByName(b).dropDuplicates(["doc_id", "subject", "predicate", "object"])
 
 
 def link_entities(docs: DataFrame, dictionary: DataFrame) -> DataFrame:

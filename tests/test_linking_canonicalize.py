@@ -1,6 +1,7 @@
 """Entity linking (J1/J2) and connected-components canonicalization (J3)."""
 
 import random
+import re
 
 import pandas as pd
 import pytest
@@ -90,6 +91,17 @@ def test_link_entities_triples(spark, docs):
     assert "<http://kg.example/entity/paris>" in set(mentions.object)
     labels = t[t.predicate == "<http://www.w3.org/2000/01/rdf-schema#label>"]
     assert '"alice johnson"' in set(labels.object)
+
+
+def test_link_entities_plans_one_detection_and_one_window(spark, docs):
+    # both triples of a mention come from one inline: the n-gram explode,
+    # the dictionary join and the resolution window are planned once
+    plan = link_entities(docs, entity_dictionary(spark))._jdf.queryExecution() \
+        .executedPlan().toString()
+    assert len(re.findall(r"\bGenerate explode\(", plan)) == 1, plan
+    assert len(re.findall(r"\bGenerate inline\(", plan)) == 1, plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert "Union" not in plan and "SortAggregate" not in plan, plan
 
 
 def _expression_classes(df) -> set[str]:
