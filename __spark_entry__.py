@@ -1,11 +1,11 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` runs the flagship KG-construction pipeline on sf0.001;
-``queries()`` / ``oracle_sql()`` expose the 54-query catalog — the ``kg_*``
+``queries()`` / ``oracle_sql()`` expose the 40-query catalog — the ``kg_*``
 product path (extraction in every format, the formatter round-trips,
 assembly, linking, canonicalization, error statistics, the pipeline's
-per-group body and its streaming forms) plus the document-level
-training-data ops over the same inputs — each with a DuckDB oracle (see
+per-group body and its streaming forms) plus the document-level dedup and
+similarity ops over the same inputs — each with a DuckDB oracle (see
 rio_spark/plans/catalog.py for the catalog and its determinism conventions).
 """
 

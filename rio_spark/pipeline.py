@@ -20,7 +20,7 @@ B = ``<c> owl:sameAs <b> . <c> <y> "2" .`` in different groups, the store
 holds ``<a> <x> "1"`` and ``<b> <y> "2"`` instead of ``<a> <y> "2"``, and
 the rewrite drops the edges as self-loops, so no later group reconciles
 them. The store therefore depends on ``n_groups``; one store-wide alias
-mapping is ROADMAP direction 2.
+mapping is ROADMAP direction 3.
 
 Each group runs the kernel stage exactly once: :func:`run_group` persists
 extraction ∪ linking as one frame and runs no action of its own. The first

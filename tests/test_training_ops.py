@@ -1,5 +1,4 @@
-"""Training-data pipeline operators: dedup family, similarity search, text
-analysis."""
+"""Training-data pipeline operators: dedup family and similarity search."""
 
 import pandas as pd
 import pytest
@@ -18,7 +17,6 @@ from rio_spark.operators.similarity import (
     cosine_pairs_above,
     topk_cosine,
 )
-from rio_spark.operators.text import fingerprint, language_id, quality_score, token_stats
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -171,28 +169,6 @@ def test_cosine_pairs_above_guard_fires(spark, embeddings):
     assert len(out) > 0
 
 
-def test_pii_mask(spark):
-    import pandas as pd
-    from rio_spark.operators.text import pii_mask
-
-    rows = [
-        ("p1", "mail me at jo.doe+x@corp.example.org thanks"),
-        ("p2", "ssn is 123-45-6789 and ip 192.168.0.1"),
-        ("p3", "call +1 (555) 010-0199 now"),
-        ("p4", "nothing sensitive here"),
-    ]
-    out = pii_mask(
-        spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "text"]))
-    ).toPandas().set_index("doc_id")
-    assert out.loc["p1", "masked"] == "mail me at <EMAIL> thanks"
-    assert out.loc["p1", "n_email"] == 1
-    assert out.loc["p2", "masked"] == "ssn is <SSN> and ip <IP>"
-    assert out.loc["p2", "n_ssn"] == 1 and out.loc["p2", "n_ipv4"] == 1
-    assert out.loc["p3", "masked"] == "call <PHONE> now"
-    assert out.loc["p4", "masked"] == "nothing sensitive here"
-    assert out.loc["p4", ["n_email", "n_ssn", "n_phone", "n_ipv4"]].sum() == 0
-
-
 def test_near_dup_groups(spark, docs):
     from rio_spark.operators.dedup import near_dup_groups
 
@@ -203,40 +179,6 @@ def test_near_dup_groups(spark, docs):
     if "a3" in g.index:
         assert g["a3"] == "a1"
     assert "b1" not in g.index or g["b1"] != "a1"
-
-
-def test_stratified_sample_deterministic(spark):
-    import pandas as pd
-    from rio_spark.operators.text import stratified_sample
-
-    rows = [(f"d{i}", "en" if i % 2 == 0 else "es") for i in range(40)]
-    df = spark.createDataFrame(pd.DataFrame(rows, columns=["doc_id", "lang"]))
-    a = stratified_sample(df, F.col("lang"), k=3).toPandas()
-    b = stratified_sample(df, F.col("lang"), k=3).toPandas()
-    assert len(a) == 6 and set(a.stratum) == {"en", "es"}
-    assert a.groupby("stratum")["rank"].max().eq(3).all()
-    assert sorted(a.doc_id) == sorted(b.doc_id)  # same sample every run
-
-
-def test_language_id(spark, docs):
-    out = language_id(docs).toPandas().set_index("doc_id")
-    assert out.loc["a1", "lang_pred"] == "en"
-    assert out.loc["c1", "lang_pred"] == "es"
-
-
-def test_token_stats_and_quality(spark, docs):
-    ts = token_stats(docs).toPandas().set_index("doc_id")
-    assert ts.loc["a1", "n_tokens"] == 14
-    q = quality_score(docs).toPandas().set_index("doc_id")
-    assert q.loc["a1", "quality"] > q.loc["b2", "quality"]
-    assert q.loc["b2", "punct_ratio"] > 0
-
-
-def test_fingerprint_deterministic(spark, docs):
-    fp1 = fingerprint(docs).toPandas().set_index("doc_id")
-    assert fp1.loc["a1", "fp"] == fp1.loc["a2", "fp"]
-    assert fp1.loc["a1", "fp"] != fp1.loc["b1", "fp"]
-    assert len(fp1.loc["a1", "fp"]) == 32
 
 
 def test_decontaminate_containment_and_guard(spark):
